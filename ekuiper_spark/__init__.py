@@ -9,7 +9,8 @@ Streaming.  Catalyst owns parsing-to-physical concerns; this package owns:
 - AST -> DataFrame translation                -> ``ekuiper_spark.translator``
 - the ~190-builtin function registry          -> ``ekuiper_spark.functions``
 - window semantics (tumbling/hopping/session/
-  count/sliding/state)                        -> ``ekuiper_spark.operators.windows``
+  count/sliding/state)                        -> ``ekuiper_spark.translator``
+  (stateful stream windows and joins          -> ``ekuiper_spark.streaming``)
 - rule runtime (streaming queries, sinks)     -> ``ekuiper_spark.streaming``
 - LLM-data-pipeline operators (dedup,
   similarity search, text analysis,

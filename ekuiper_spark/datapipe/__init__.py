@@ -6,8 +6,9 @@ frames that both sides of a self-join consume (prefix/banded indexes,
 exploded paragraphs).  Spark evicts them under memory pressure
 (MEMORY_AND_DISK), but a long-lived session compiling many rules should
 release them explicitly between corpus passes: every persist registers
-in a weak set, and :func:`release_caches` unpersists whatever is still
-alive (``spark.catalog.clearCache()`` remains the blunt alternative).
+in a module list that holds the frames strongly, and
+:func:`release_caches` unpersists them all (``spark.catalog.clearCache()``
+remains the blunt alternative).
 """
 
 from ekuiper_spark.datapipe import (

@@ -4,8 +4,9 @@ The dedup operators ``persist()`` narrow intermediate frames that both
 sides of a self-join consume (prefix/banded indexes, exploded
 paragraphs).  Spark evicts them under memory pressure (MEMORY_AND_DISK),
 but a long-lived session compiling many rules should release them
-explicitly between corpus passes: every persist registers here (weakly)
-and :func:`release_caches` unpersists whatever is still alive.
+explicitly between corpus passes: every persist registers here (a
+strong reference, see ``_PERSISTED``) and :func:`release_caches`
+unpersists them all.
 """
 
 from __future__ import annotations
@@ -28,17 +29,17 @@ def _track_persist(df: DataFrame, storage_level=None) -> DataFrame:
 
 
 def release_caches(blocking: bool = False) -> int:
-    """Unpersist every datapipe-persisted frame still alive; returns the
-    count released.  Non-blocking by default (block eviction completes
-    asynchronously); pass ``blocking=True`` to wait for removal — useful
-    in tests and teardown paths that assert the cache returned to
-    baseline."""
+    """Unpersist every registered frame; returns how many unpersist calls
+    returned.  Frames of a stopped session are dropped uncounted (their
+    cache went with the session); any other unpersist failure raises.
+    Non-blocking by default (block eviction completes asynchronously);
+    pass ``blocking=True`` to wait for removal — useful in tests and
+    teardown paths that assert the cache returned to baseline."""
     n = 0
-    for df in list(_PERSISTED):
-        try:
-            df.unpersist(blocking=blocking)
-            n += 1
-        except Exception:
-            pass  # session already stopped; nothing to release
-    _PERSISTED.clear()
+    while _PERSISTED:
+        df = _PERSISTED.pop()
+        if df.sparkSession.sparkContext._jsc is None:
+            continue  # session stopped: nothing left to release
+        df.unpersist(blocking=blocking)
+        n += 1
     return n

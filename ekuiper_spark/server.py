@@ -48,7 +48,7 @@ from pyspark.sql import SparkSession
 
 from ekuiper_spark.catalog import Catalog
 from ekuiper_spark.plans.ddl import StreamProcessor
-from ekuiper_spark.streaming.runtime import Rule, RuleRuntime
+from ekuiper_spark.streaming.runtime import Rule, RuleRecord, RuleRuntime
 from ekuiper_spark.translator import compile_sql
 
 
@@ -72,12 +72,6 @@ class RestServer:
         self.connections: dict[str, dict[str, Any]] = {}
         # conf-key store ("{kind}/{type}" -> key -> conf), PUT /metadata/...
         self.source_confs: dict[str, dict[str, dict]] = {}
-        # auto-start failures surfaced through /rules/{id}/status
-        self.start_errors: dict[str, str] = {}
-        # rules with tracing enabled (rest.go:216 trace/start|stop);
-        # shared with the runtime so sinks sample traced batches
-        self.traced: set[str] = set()
-        self.runtime.traced_ref = self.traced
         import time as _time
 
         self._started_at = _time.time()
@@ -165,7 +159,7 @@ class RestServer:
     )
 
     def _import_configuration(
-        self, body: dict, start_rules: bool = True
+        self, body: dict
     ) -> tuple[dict[str, int], dict[str, dict[str, str]]]:
         """Apply a Configuration payload (import_export.go:418
         handleConfigurationImport): streams/tables DDL, rules, source
@@ -203,31 +197,10 @@ class RestServer:
                     errors[sec][name] = str(e)
         for rid, spec in sorted((body.get("rules") or {}).items()):
             try:
-                if isinstance(spec, str):
-                    spec = json.loads(spec)
-                rule = Rule(id=rid, sql=spec["sql"],
-                            actions=spec.get("actions", []),
-                            options=spec.get("options", {}),
-                            tags=spec.get("tags", []),
-                            name=spec.get("name", ""),
-                            version=str(spec.get("version", "")),
-                            triggered=bool(spec.get("triggered", True)))
-                if rid in self.runtime.rules:
-                    self.runtime.stop_rule(rid)
-                    self.runtime.rules[rid] = rule
-                else:
-                    self.runtime.create_rule(rule)
+                self.runtime.put_rule(Rule.from_spec(spec, rid))
                 counts["rules"] += 1
             except Exception as e:
                 errors["rules"][rid] = str(e)
-                continue
-            if start_rules and rule.triggered:
-                # start failures are RUNTIME errors: the import still
-                # succeeds, the status endpoint carries the message
-                try:
-                    self.runtime.start_rule(rid)
-                except Exception as e:
-                    self.start_errors[rid] = str(e)
         for fid, src in sorted((body.get("scripts") or {}).items()):
             try:
                 _script.unregister_script_function(fid)
@@ -277,14 +250,12 @@ class RestServer:
         return None
 
     @staticmethod
-    def _rule_sources(rule: Rule) -> list[str]:
-        from ekuiper_spark.parser import parse_sql
-
-        try:
-            stmt = parse_sql(rule.sql)
-        except Exception:
-            return []
-        return [stmt.source] + [j.source for j in (stmt.joins or [])]
+    def _rule_sources(stmt: Any) -> set[str]:
+        """Lower-cased stream names a parsed rule reads (none if its SQL
+        does not parse)."""
+        if stmt is None:
+            return set()
+        return {s.lower() for s in [stmt.source] + [j.source for j in (stmt.joins or [])]}
 
     def _shared_stream_schema(self, name: str) -> dict[str, Any]:
         """Schemaless stream schema = ordered union of the columns the
@@ -293,22 +264,18 @@ class RestServer:
         entries; useSliceTuple rules contribute {"hasIndex", "index"}
         slots in first-attachment order."""
         from ekuiper_spark.ast_nodes import ColumnRef
-        from ekuiper_spark.parser import parse_sql
 
         cols: list[str] = []
         attached = 0
         all_slice = True
-        for rule in self.runtime.rules.values():
-            if name.lower() not in {s.lower() for s in self._rule_sources(rule)}:
+        for rec in self.runtime.records.values():
+            stmt = rec.stmt
+            if name.lower() not in self._rule_sources(stmt):
                 continue
             attached += 1
-            exp = (rule.options.get("experiment") or {})
+            exp = (rec.rule.options.get("experiment") or {})
             if not exp.get("useSliceTuple"):
                 all_slice = False
-            try:
-                stmt = parse_sql(rule.sql)
-            except Exception:
-                continue
 
             def visit(n: Any) -> None:
                 import dataclasses
@@ -364,7 +331,7 @@ class RestServer:
             return 200, {
                 "product": "ekuiper_spark",
                 "version": VERSION,
-                "rules": len(self.runtime.rules),
+                "rules": len(self.runtime.records),
                 "os": platform.system().lower(),
                 "arch": platform.machine(),
                 "upTimeSeconds": int(_time.time() - self._started_at),
@@ -626,14 +593,10 @@ class RestServer:
                     self.catalog.register(DDLParser(sql).parse_create())
                     n_s += 1
                 for rid, spec in sorted((body.get("rules") or {}).items()):
-                    rule = Rule(id=rid, sql=spec["sql"],
-                                actions=spec.get("actions", []),
-                                options=spec.get("options", {}))
-                    if rid in self.runtime.rules:
-                        self.runtime.stop_rule(rid)
-                        self.runtime.rules[rid] = rule
-                    else:
-                        self.runtime.create_rule(rule)
+                    # replace-on-conflict without starting
+                    if rid in self.runtime.records:
+                        self.runtime.delete_rule(rid)
+                    self.runtime.create_rule(Rule.from_spec(spec, rid))
                     n_r += 1
                 return 200, {"imported": {"streams": n_s, "rules": n_r}}
 
@@ -856,10 +819,8 @@ class RestServer:
                 # registered rule cannot drop unless ?force=true
                 if "force=true" not in query and "force=1" not in query:
                     holders = [
-                        rid for rid, r in self.runtime.rules.items()
-                        if parts[1].lower() in {
-                            s.lower() for s in self._rule_sources(r)
-                        }
+                        rid for rid, rec in self.runtime.records.items()
+                        if parts[1].lower() in self._rule_sources(rec.stmt)
                     ]
                     if holders:
                         return 400, {
@@ -872,32 +833,18 @@ class RestServer:
                 err = self._validate_id(str(body.get("id", "")))
                 if err:
                     return 400, {"error": 1000, "message": f"invalid rule json: {err}"}
-                rule = Rule(
-                    id=body["id"],
-                    sql=body["sql"],
-                    actions=body.get("actions", []),
-                    options=body.get("options", {}),
-                    tags=body.get("tags", []),
-                    name=body.get("name", ""),
-                    version=str(body.get("version", "")),
-                    triggered=bool(body.get("triggered", True)),
-                )
-                try:
-                    from ekuiper_spark.parser import parse_sql
-
-                    parse_sql(rule.sql)
-                except Exception as e:
-                    return 400, {"error": f"invalid rule json: {e}"}
-                self.runtime.create_rule(rule)
+                rule = Rule.from_spec(body)
+                if rule.id in self.runtime.records:
+                    raise ValueError(f"rule {rule.id} exists")
                 # reference rules RUN on create unless triggered=false
                 # (server.go createRule -> registry start); start errors
                 # are RUNTIME errors — the rule stays registered and its
-                # status carries the failure, create still returns 201
-                if rule.triggered:
-                    try:
-                        self.runtime.start_rule(rule.id)
-                    except Exception as e:
-                        self.start_errors[rule.id] = str(e)
+                # status carries the failure, create still returns 201.
+                # SQL that does not parse is rejected instead.
+                rec = self.runtime.put_rule(rule)
+                if rec.parse_error is not None:
+                    self.runtime.delete_rule(rule.id)
+                    return 400, {"error": f"invalid rule json: {rec.parse_error}"}
                 return 201, {"result": f"rule {rule.id} created"}
             if parts[1:] == ["tags", "match"]:
                 # rule_tag.go:205 — match = requested tags are a SUBSET of
@@ -912,11 +859,11 @@ class RestServer:
             if method == "GET" and len(parts) == 1:
                 return 200, [
                     {"id": rid, **self.runtime.status(rid)}
-                    for rid in sorted(self.runtime.rules)
+                    for rid in sorted(self.runtime.records)
                 ]
             if method == "GET" and parts[1:] == ["status", "all"]:
                 return 200, {
-                    rid: self.runtime.status(rid) for rid in sorted(self.runtime.rules)
+                    rid: self.runtime.status(rid) for rid in sorted(self.runtime.records)
                 }
             if method == "POST" and parts[1:] == ["bulkstart"]:
                 # rest.go:225: start many rules in one call
@@ -959,32 +906,18 @@ class RestServer:
                             "error": f"rule {rid} version {new_version} is "
                                      f"lower than current {old.version}"
                         }
-                    if old is not None:
-                        self.runtime.stop_rule(rid)
-                    rule = Rule(
-                        id=rid,
-                        sql=body.get("sql", old.sql if old else ""),
-                        actions=body.get("actions", old.actions if old else []),
-                        options=body.get("options", old.options if old else {}),
-                        tags=body.get("tags", old.tags if old else []),
-                        name=body.get("name", old.name if old else ""),
-                        version=new_version or (old.version if old else ""),
-                        triggered=bool(body.get("triggered", True)),
-                    )
-                    self.runtime.rules[rid] = rule
-                    if rule.triggered:
-                        try:
-                            self.runtime.start_rule(rid)
-                        except Exception as e:
-                            self.start_errors[rid] = str(e)
+                    spec = {"sql": "", **(asdict(old) if old else {}),
+                            "triggered": True, **body}
+                    spec["version"] = new_version or (old.version if old else "")
+                    self.runtime.put_rule(Rule.from_spec(spec, rid))
                     return 200, {"result": f"rule {rid} updated"}
-                if rid not in self.runtime.rules:
+                rec = self.runtime.records.get(rid)
+                if rec is None:
                     return 404, {"error": f"rule {rid} not found"}
                 if method == "GET" and len(parts) == 2:
-                    return 200, asdict(self.runtime.rules[rid])
+                    return 200, asdict(rec.rule)
                 if method == "DELETE" and len(parts) == 2:
-                    self.runtime.stop_rule(rid)
-                    del self.runtime.rules[rid]
+                    self.runtime.delete_rule(rid)
                     return 200, {"result": f"rule {rid} dropped"}
                 if method == "POST" and len(parts) == 3 and parts[2] == "start":
                     q = self.runtime.start_rule(rid, available_now="availableNow=1" in query)
@@ -996,8 +929,8 @@ class RestServer:
                     return 200, {"result": f"rule {rid} stopped"}
                 if method == "GET" and len(parts) == 3 and parts[2] == "status":
                     st = self.runtime.status(rid)
-                    if rid in self.start_errors and st.get("status") == "stopped":
-                        st["message"] = self.start_errors[rid]
+                    if rec.start_error and st.get("status") == "stopped":
+                        st["message"] = rec.start_error
                     return 200, st
                 if method == "POST" and len(parts) == 3 and parts[2] == "restart":
                     self.runtime.stop_rule(rid)
@@ -1007,34 +940,25 @@ class RestServer:
                     # "logical" = the reference's ExplainFromLogicalPlan
                     # text (planner.go:344; plan_explain_test.go goldens);
                     # "plan" = Catalyst's physical plan (richer)
-                    from ekuiper_spark.parser import parse_sql as _ps
                     from ekuiper_spark.plans.explain import explain_statement
 
-                    out = {
-                        "plan": self.processor.exec_stmt(
-                            "EXPLAIN " + self.runtime.rules[rid].sql
-                        )
-                    }
+                    out = {"plan": self.processor.exec_stmt("EXPLAIN " + rec.rule.sql)}
                     try:
                         out["logical"] = explain_statement(
-                            _ps(self.runtime.rules[rid].sql),
+                            rec.stmt,
                             self.catalog,
-                            is_event_time=bool(
-                                (self.runtime.rules[rid].options or {}).get(
-                                    "isEventTime"
-                                )
-                            ),
+                            is_event_time=bool((rec.rule.options or {}).get("isEventTime")),
                         )
                     except Exception as e:
                         out["logical"] = f"unavailable: {e}"
                     return 200, out
                 if method == "GET" and len(parts) == 3 and parts[2] == "topo":
-                    return 200, self._topo(self.runtime.rules[rid])
+                    return 200, self._topo(rec)
                 if len(parts) == 3 and parts[2] == "tags":
                     # rule_tag.go:111: PUT replaces, PATCH adds, DELETE
                     # removes; body = {"tags": [...]}
                     req = list(body.get("tags") or [])
-                    r = self.runtime.rules[rid]
+                    r = rec.rule
                     if method == "PUT":
                         r.tags = req
                     elif method == "PATCH":
@@ -1050,35 +974,25 @@ class RestServer:
                     # always samples a wide per-batch window, head keeps
                     # the head-of-micro-batch tuples)
                     if parts[3] == "start":
-                        self.traced.add(rid)
                         strat = str(
                             (body or {}).get("strategy", "always")
                         ).lower() if isinstance(body, dict) else "always"
-                        self.runtime.trace_strategy[rid] = (
-                            strat if strat in ("always", "head") else "always"
+                        self.runtime.set_tracing(
+                            rid, strat if strat in ("always", "head") else "always"
                         )
                         return 200, {"result": f"rule {rid} tracing enabled"}
                     if parts[3] == "stop":
-                        self.traced.discard(rid)
-                        self.runtime.trace_strategy.pop(rid, None)
+                        self.runtime.set_tracing(rid, None)
                         return 200, {"result": f"rule {rid} tracing disabled"}
                 if method == "PUT" and len(parts) == 3 and parts[2] == "reset_state":
-                    # rest.go /rules/{name}/reset_state: drop the rule's
-                    # checkpointed state so the next start replays fresh
-                    import shutil as _sh
-
-                    ck = self.runtime._checkpoints.pop(rid, None)
-                    if ck:
-                        _sh.rmtree(ck, ignore_errors=True)
-                    self.runtime._read_snapshots.pop(rid, None)
+                    # rest.go /rules/{name}/reset_state
+                    self.runtime.reset_state(rid)
                     return 200, {"result": f"rule {rid} state reset"}
                 if method == "GET" and len(parts) == 3 and parts[2] == "schema":
                     # rest.go:215 rule output schema: column -> slice index
                     # (fvt TestRuleSchema shape: {hasIndex, index})
                     try:
-                        out = compile_sql(
-                            self.spark, self.runtime.rules[rid].sql, self.catalog
-                        )
+                        out = compile_sql(self.spark, rec.rule.sql, self.catalog)
                     except Exception as e:
                         return 400, {"error": f"{type(e).__name__}: {e}"}
                     return 200, {
@@ -1090,8 +1004,7 @@ class RestServer:
                     # content a joining rule aligns against
                     import re as _re
 
-                    sql = self.runtime.rules[rid].sql
-                    words = set(_re.findall(r"[A-Za-z_][A-Za-z0-9_]*", sql))
+                    words = set(_re.findall(r"[A-Za-z_][A-Za-z0-9_]*", rec.rule.sql))
                     hits = [
                         (n, b) for n, b in self.runtime.scan_tables.items()
                         if n in words
@@ -1191,7 +1104,7 @@ class RestServer:
 
                 buf = io.BytesIO()
                 with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as z:
-                    for rid in sorted(self.runtime.rules):
+                    for rid in sorted(self.runtime.records):
                         try:
                             z.writestr(
                                 f"metrics/{rid}.json",
@@ -1222,10 +1135,10 @@ class RestServer:
                 # Sampling is head-of-micro-batch — Catalyst fuses the op
                 # chain, so not every tuple can carry a span the way the
                 # reference's per-op decorators do.
-                rid = parts[2]
-                if rid not in self.traced:
+                rec = self.runtime.records.get(parts[2])
+                if rec is None or not rec.tracing:
                     return 200, []
-                ids = list(self.runtime.trace_tuples.get(rid, {}))
+                ids = list(rec.tuples)
                 lim = 0
                 for tok in query.split("&"):
                     if tok.startswith("limit="):
@@ -1241,9 +1154,9 @@ class RestServer:
                 # per-tuple id: the span tree's data attribute is THAT
                 # tuple (every span carries the sink-side tuple — per-hop
                 # payloads don't exist under whole-stage codegen)
-                for rid2, tt in self.runtime.trace_tuples.items():
-                    if tid in tt:
-                        batch2, row = tt[tid]
+                for rid2, rec in self.runtime.records.items():
+                    if tid in rec.tuples:
+                        batch2, row = rec.tuples[tid]
                         spans2 = []
                         for p in _progress(rid2):
                             if str(p.get("batchId")) == str(batch2):
@@ -1342,19 +1255,14 @@ class RestServer:
         (every span carries that tuple — Catalyst fuses operators, so
         per-hop payloads don't exist); without it, the legacy
         per-micro-batch tree with a bounded sink-row sample."""
-        rule = self.runtime.rules.get(rid)
-        if rule is None:
+        rec = self.runtime.records.get(rid)
+        if rec is None or rec.stmt is None:
             return None
-        try:
-            topo = self._topo(rule)
-        except Exception:
-            return None
+        topo = self._topo(rec)
         if data_row is not None:
             data = json.dumps(data_row, default=str, separators=(",", ":"))
         else:
-            sample = (self.runtime.trace_samples.get(rid) or {}).get(
-                int(batch) if str(batch).isdigit() else -1
-            )
+            sample = rec.samples.get(int(batch) if str(batch).isdigit() else -1)
             data = (
                 json.dumps(sample, default=str, separators=(",", ":"))
                 if sample
@@ -1386,14 +1294,15 @@ class RestServer:
             tree["attribute"]["span.mytype"] = "data-processing"
         return tree
 
-    def _topo(self, rule: Rule) -> dict:
+    @staticmethod
+    def _topo(rec: RuleRecord) -> dict:
         """Operator topology of a rule (rest.go:214 getTopoRuleHandler):
         {"sources": [...], "edges": {node: [next, ...]}} in the planner's
         operator-chain order (source -> window -> join -> filter -> agg ->
         having -> order -> project -> sinks)."""
-        from ekuiper_spark.parser import parse_sql
-
-        stmt = parse_sql(rule.sql)
+        if rec.parse_error is not None:
+            raise rec.parse_error
+        stmt = rec.stmt
         sources = [f"source_{stmt.source}"] + [
             f"source_{j.source}" for j in stmt.joins
         ]
@@ -1413,7 +1322,7 @@ class RestServer:
         if stmt.order:
             chain.append("op_order")
         chain.append("op_project")
-        sinks = [f"sink_{next(iter(a))}" for a in rule.actions] or ["sink_log"]
+        sinks = [f"sink_{next(iter(a))}" for a in rec.rule.actions] or ["sink_log"]
         edges: dict[str, list[str]] = {}
         for s in sources:
             edges[s] = [chain[0]]
@@ -1473,7 +1382,9 @@ class RestServer:
         return self
 
     def stop(self) -> None:
-        for rid in list(self.runtime.queries):
+        import shutil
+
+        for rid in list(self.runtime.records):
             try:
                 self.runtime.stop_rule(rid)
             except Exception:
@@ -1485,3 +1396,4 @@ class RestServer:
         self.httpd.server_close()
         if self._thread:
             self._thread.join(timeout=5)
+        shutil.rmtree(self.upload_dir, ignore_errors=True)

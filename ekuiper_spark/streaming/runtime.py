@@ -17,6 +17,8 @@ Bounded runs (the reference's EOF-driven tests) use trigger(availableNow)
 
 from __future__ import annotations
 
+import hashlib
+import json
 import re
 import uuid
 from dataclasses import dataclass, field
@@ -40,43 +42,84 @@ class Rule:
     version: str = ""              # def.Rule Version (update rejects lower)
     triggered: bool = True         # def.Rule Triggered: false = create stopped
 
+    @classmethod
+    def from_spec(cls, spec: dict[str, Any] | str, rule_id: Optional[str] = None) -> "Rule":
+        """Build a rule from its JSON spec (REST body, export entry or a
+        JSON string of either); ``rule_id`` overrides the spec's id."""
+        if isinstance(spec, str):
+            spec = json.loads(spec)
+        return cls(
+            id=spec["id"] if rule_id is None else rule_id,
+            sql=spec["sql"],
+            actions=spec.get("actions", []),
+            options=spec.get("options", {}),
+            tags=spec.get("tags", []),
+            name=spec.get("name", ""),
+            version=str(spec.get("version", "")),
+            triggered=bool(spec.get("triggered", True)),
+        )
+
+
+@dataclass
+class RuleRecord:
+    """Everything the runtime holds for one rule id (the reference keeps
+    one state machine per rule, topo/rule/state.go).  Deleting the rule
+    drops the record, and with it every counter, trace and handle."""
+
+    rule: Rule
+    stmt: Any = None  # parsed once at create; never handed to the translator
+    parse_error: Optional[Exception] = None  # set instead of stmt
+    query: Any = None
+    scheduler: Any = None  # cron rules (streaming/scheduler.py)
+    restarts: Optional[int] = None  # set once a restartStrategy monitors
+    closer: Any = None  # rolling file writer / zmq socket, closed on stop
+    # actionAfterRead sources: stream name -> files present at start
+    read_snapshot: dict[str, list[str]] = field(default_factory=dict)
+    checkpoint: Optional[str] = None
+    started_at: Optional[int] = None  # query-start epoch ms
+    # rows written by foreachBatch sinks (Spark reports numOutputRows
+    # = -1 for them; the reference's sink_*_records_out_total counts)
+    sink_count: int = 0
+    # "always" | "head" while traced (rest.go StringToStrategy): always
+    # samples a wide per-batch window, head keeps the batch head
+    tracing: Optional[str] = None
+    # batch -> sampled sink rows, for the trace span tree
+    samples: dict[int, list] = field(default_factory=dict)
+    # per-TUPLE trace ids (reference: every traced tuple carries its own
+    # otel trace, tracer.go GetTraceIDListByRuleID; Catalyst fuses the op
+    # chain, so sampling is head-of-micro-batch): trace id -> (batch,
+    # sink row) in insertion order
+    tuples: dict[str, tuple] = field(default_factory=dict)
+    start_error: str = ""  # why the create/update auto-start failed
+
 
 class RuleRuntime:
-    """Manages named rules -> running StreamingQueries (the control plane)."""
+    """Manages named rules -> running StreamingQueries (the control plane).
+
+    ``records`` is the only per-rule store; only these methods change it."""
 
     def __init__(self, spark: SparkSession, catalog: Catalog) -> None:
         self.spark = spark
         self.catalog = catalog
-        self.rules: dict[str, Rule] = {}
-        self.queries: dict[str, Any] = {}
-        self.schedulers: dict[str, Any] = {}
-        self.restarts: dict[str, int] = {}
-        self.rolling_writers: dict[str, Any] = {}
-        self._read_snapshots: dict[str, dict[str, list]] = {}
-        self._checkpoints: dict[str, str] = {}
+        self.records: dict[str, RuleRecord] = {}
         # scan-table buffers by table name (sources/scantable.py), so the
         # control plane can snapshot a joining rule's aligned content
         # (rest.go:224 /rules/{name}/scantables)
         self.scan_tables: dict[str, Any] = {}
-        # per-rule query-start epoch ms (source connection time metric)
-        self._start_times: dict[str, int] = {}
-        # rows written by foreachBatch sinks (Spark reports numOutputRows
-        # = -1 for them; the reference's sink_*_records_out_total counts)
-        self._sink_counts: dict[str, int] = {}
-        # rule ids with tracing on (shared with the REST server's set) and
-        # per-(rule, batch) sampled sink rows for the trace span tree
-        self.traced_ref: set[str] = set()
-        self.trace_samples: dict[str, dict[int, list]] = {}
-        # per-TUPLE trace ids (reference: every traced tuple carries its
-        # own otel trace, tracer.go GetTraceIDListByRuleID; Catalyst
-        # fuses the op chain, so sampling is head-of-micro-batch):
-        # rule -> {trace_id_hex: (batch, sink row)} in insertion order
-        self.trace_tuples: dict[str, dict[str, tuple]] = {}
-        # rule -> "always" | "head" (rest.go StringToStrategy): always
-        # samples a wide per-batch window, head keeps the batch head
-        self.trace_strategy: dict[str, str] = {}
 
-    def _count_fb(self, rule_id: str, fn: Callable) -> Callable:
+    @property
+    def rules(self) -> dict[str, Rule]:
+        """Read view: rule id -> Rule."""
+        return {rid: rec.rule for rid, rec in self.records.items()}
+
+    @property
+    def queries(self) -> dict[str, Any]:
+        """Read view: rule id -> running StreamingQuery."""
+        return {
+            rid: rec.query for rid, rec in self.records.items() if rec.query is not None
+        }
+
+    def _count_fb(self, rec: RuleRecord, fn: Callable) -> Callable:
         """Wrap a foreachBatch body so sink_*_records_out_total counts the
         rows the sink actually received (and, when the rule is traced, a
         small row sample feeds the trace span tree's data attributes)."""
@@ -85,33 +128,25 @@ class RuleRuntime:
             try:
                 n = batch_df.count()
                 fn(batch_df, epoch)
-                self._sink_counts[rule_id] = self._sink_counts.get(rule_id, 0) + n
-                if rule_id in self.traced_ref and n:
-                    cap = (
-                        64
-                        if self.trace_strategy.get(rule_id, "always") == "always"
-                        else 3
-                    )
+                rec.sink_count += n
+                if rec.tracing and n:
+                    cap = 64 if rec.tracing == "always" else 3
                     sample = [
                         r.asDict(recursive=True)
                         for r in batch_df.limit(cap).collect()
                     ]
-                    per = self.trace_samples.setdefault(rule_id, {})
-                    per[int(epoch)] = sample
-                    for k in sorted(per)[:-32]:  # bounded retention
-                        del per[k]
+                    rec.samples[int(epoch)] = sample
+                    for k in sorted(rec.samples)[:-32]:  # bounded retention
+                        del rec.samples[k]
                     # one trace id per sampled TUPLE (32-hex like otel;
                     # deterministic so bounded replays reproduce)
-                    import hashlib
-
-                    tt = self.trace_tuples.setdefault(rule_id, {})
                     for i, row in enumerate(sample):
                         tid = hashlib.md5(
-                            f"{rule_id}|{epoch}|{i}".encode()
+                            f"{rec.rule.id}|{epoch}|{i}".encode()
                         ).hexdigest()
-                        tt[tid] = (int(epoch), row)
-                    for k in list(tt)[:-96]:  # bounded span store
-                        del tt[k]
+                        rec.tuples[tid] = (int(epoch), row)
+                    for k in list(rec.tuples)[:-96]:  # bounded span store
+                        del rec.tuples[k]
             finally:
                 batch_df.unpersist()
 
@@ -120,10 +155,59 @@ class RuleRuntime:
     def register_scan_table(self, name: str, buffer: Any) -> None:
         self.scan_tables[name] = buffer
 
-    def create_rule(self, rule: Rule) -> None:
-        if rule.id in self.rules:
+    def create_rule(self, rule: Rule) -> RuleRecord:
+        """Register a rule without starting it; its SQL is parsed here,
+        once."""
+        from ekuiper_spark.parser import parse_sql
+
+        if rule.id in self.records:
             raise ValueError(f"rule {rule.id} exists")
-        self.rules[rule.id] = rule
+        rec = RuleRecord(rule)
+        try:
+            rec.stmt = parse_sql(rule.sql)
+        except Exception as e:  # the rule still registers; its start fails
+            rec.parse_error = e
+        self.records[rule.id] = rec
+        return rec
+
+    def put_rule(self, rule: Rule) -> RuleRecord:
+        """Create or replace a rule and start it unless ``triggered`` is
+        false.  A replaced rule is deleted first and passes on only its
+        tracing setting.  Start failures are runtime errors: the rule
+        stays registered and ``start_error`` carries the message."""
+        old = self.records.get(rule.id)
+        if old is not None:
+            self.delete_rule(rule.id)
+        rec = self.create_rule(rule)
+        if old is not None:
+            rec.tracing = old.tracing
+        if rule.triggered:
+            try:
+                self.start_rule(rule.id)
+            except Exception as e:
+                rec.start_error = str(e)
+        return rec
+
+    def delete_rule(self, rule_id: str) -> None:
+        """Stop the rule and drop its record."""
+        self.stop_rule(rule_id)
+        del self.records[rule_id]
+
+    def set_tracing(self, rule_id: str, strategy: Optional[str]) -> None:
+        """Trace the rule with ``strategy`` ("always" | "head"), or stop
+        tracing it with None."""
+        self.records[rule_id].tracing = strategy
+
+    def reset_state(self, rule_id: str) -> None:
+        """Drop the rule's checkpointed state so the next start replays
+        fresh."""
+        import shutil
+
+        rec = self.records[rule_id]
+        if rec.checkpoint:
+            shutil.rmtree(rec.checkpoint, ignore_errors=True)
+        rec.checkpoint = None
+        rec.read_snapshot = {}
 
     def start_rule(self, rule_id: str, available_now: bool = False) -> Any:
         """Start a rule.  With a ``cron`` option (rule.go:40-48) the rule
@@ -132,15 +216,14 @@ class RuleRuntime:
         without cron bounds this single run."""
         from ekuiper_spark.functions.scalar import parse_go_duration
 
-        prior = self.queries.get(rule_id)
-        if prior is not None:
+        rec = self.records[rule_id]
+        if rec.query is not None:
             # start on a started rule = restart (idempotent control plane)
             try:
-                prior.stop()
+                rec.query.stop()
             except Exception:
                 pass
-        rule = self.rules[rule_id]
-        opts = rule.options
+        opts = rec.rule.options
         cron_expr = opts.get("cron")
         duration = opts.get("duration")
         if cron_expr:
@@ -148,19 +231,18 @@ class RuleRuntime:
 
             if not duration:
                 raise ValueError("cron rules require a duration option")
-            if rule_id in self.schedulers and not self.schedulers[rule_id].stopped:
+            if rec.scheduler is not None and not rec.scheduler.stopped:
                 raise ValueError(f"rule {rule_id} already scheduled")
-            sched = RuleScheduler(
+            rec.scheduler = RuleScheduler(
                 cron_expr,
                 parse_go_duration(duration),
-                start_fn=lambda: self._start_query(rule_id, available_now=False),
+                start_fn=lambda: self._start_query(rec, available_now=False),
                 stop_fn=lambda q: q.stop(),
                 ranges=opts.get("cronDatetimeRange"),
             )
-            self.schedulers[rule_id] = sched
-            sched.start()
-            return sched
-        q = self._start_query(rule_id, available_now)
+            rec.scheduler.start()
+            return rec.scheduler
+        q = self._start_query(rec, available_now)
         if duration:
             import threading
 
@@ -169,16 +251,17 @@ class RuleRuntime:
             timer.start()
         strategy = opts.get("restartStrategy")
         if strategy:
-            self._monitor_restart(rule_id, strategy, available_now)
+            self._monitor_restart(rec, strategy, available_now)
         return q
 
     def _monitor_restart(
-        self, rule_id: str, strategy: dict[str, Any], available_now: bool
+        self, rec: RuleRecord, strategy: dict[str, Any], available_now: bool
     ) -> None:
         """Auto-restart on failure with exponential backoff
         (def.RestartStrategy, rule.go: attempts/delay/multiplier/maxDelay/
         jitterFactor; state machine topo/rule/state.go).  A clean stop
-        (no exception) ends monitoring."""
+        (no exception), a stop or restart from outside, or deleting the
+        rule ends monitoring."""
         import random
         import threading
         import time
@@ -190,12 +273,12 @@ class RuleRuntime:
         multiplier = float(strategy.get("multiplier", 2.0))
         max_delay = parse_go_duration(str(strategy.get("maxDelay", "30s")))
         jitter = float(strategy.get("jitterFactor", 0.1))
-        self.restarts[rule_id] = 0
+        rec.restarts = 0
 
         def run() -> None:
             wait = delay
-            while self.restarts[rule_id] < attempts:
-                q = self.queries.get(rule_id)
+            while rec.restarts < attempts:
+                q = rec.query
                 if q is None:
                     return
                 try:
@@ -204,23 +287,26 @@ class RuleRuntime:
                     pass
                 if q.exception() is None:
                     return  # clean stop/finish
-                self.restarts[rule_id] += 1
+                rec.restarts += 1
                 time.sleep(min(wait, max_delay) * (1 + jitter * random.random()))
                 wait *= multiplier
+                if self.records.get(rec.rule.id) is not rec or rec.query is not q:
+                    return  # deleted, replaced, stopped or restarted meanwhile
                 try:
-                    self.queries[rule_id] = self._start_query(rule_id, available_now)
+                    self._start_query(rec, available_now)
                 except Exception:
                     continue
 
         threading.Thread(target=run, daemon=True).start()
 
-    def _start_query(self, rule_id: str, available_now: bool = False) -> Any:
+    def _start_query(self, rec: RuleRecord, available_now: bool = False) -> Any:
         import time
 
         from ekuiper_spark.functions.scalar import parse_go_duration
 
-        self._snapshot_read_files(rule_id)
-        rule = self.rules[rule_id]
+        self._snapshot_read_files(rec)
+        rule = rec.rule
+        rule_id = rule.id
         opts = rule.options
         # reference option keys (def/rule.go): lateTolerance applies only
         # to event-time rules (isEventTime); the Go duration converts to
@@ -259,7 +345,7 @@ class RuleRuntime:
             name = sink_opts.get(
                 "table", re.sub(r"\W", "_", str(sink_opts.get("topic", f"rule_{rule_id}")))
             )
-            if rule_id in self.traced_ref:
+            if rec.tracing:
                 # per-tuple tracing needs sink-row access, which the
                 # native memory sink doesn't expose — an equivalent
                 # foreachBatch accumulator serves the same table name;
@@ -277,7 +363,7 @@ class RuleRuntime:
                         mem_buf, batch_df.schema
                     ).createOrReplaceTempView(name)
 
-                q = writer.foreachBatch(self._count_fb(rule_id, _mem_batch)).start()
+                q = writer.foreachBatch(self._count_fb(rec, _mem_batch)).start()
             else:
                 q = writer.format("memory").queryName(name).start()
         elif sink_type in ("nop", "log"):
@@ -287,7 +373,7 @@ class RuleRuntime:
             def _nop_batch(batch_df: DataFrame, _epoch: int) -> None:
                 pass
 
-            q = writer.foreachBatch(self._count_fb(rule_id, _nop_batch)).start()
+            q = writer.foreachBatch(self._count_fb(rec, _nop_batch)).start()
         elif sink_type == "console":
             q = writer.format("console").start()
         elif sink_type == "file" and (
@@ -324,15 +410,15 @@ class RuleRuntime:
                 rolling_name_pattern=str(sink_opts.get("rollingNamePattern", "none")),
                 header=header,
             )
-            self.rolling_writers[rule_id] = roller
+            rec.closer = roller
 
             def _roll_batch(batch_df: DataFrame, _epoch: int, _w=roller, _o=sink_opts) -> None:
                 _w.write_payloads(sink_batch(batch_df, _o))
 
-            q = writer.foreachBatch(self._count_fb(rule_id, _roll_batch)).start()
+            q = writer.foreachBatch(self._count_fb(rec, _roll_batch)).start()
         elif sink_type == "file":
             ckpt = sink_opts.get("checkpoint", f"/tmp/ckpt_{rule_id}_{uuid.uuid4().hex}")
-            self._checkpoints[rule_id] = ckpt
+            rec.checkpoint = ckpt
             q = (
                 writer.format(sink_opts.get("format", "parquet"))
                 .option("path", sink_opts["path"])
@@ -368,7 +454,7 @@ class RuleRuntime:
                     qos=int(_o.get("qos", 0)),
                 )
 
-            q = writer.foreachBatch(self._count_fb(rule_id, _mqtt_batch)).start()
+            q = writer.foreachBatch(self._count_fb(rec, _mqtt_batch)).start()
         elif sink_type == "websocket":
             # per-partition JSON text frames (websocket_sink.go)
             from ekuiper_spark.sources.websocket import write_websocket_sink
@@ -376,7 +462,7 @@ class RuleRuntime:
             def _ws_batch(batch_df: DataFrame, _epoch: int, _o=sink_opts) -> None:
                 write_websocket_sink(batch_df, _o["url"])
 
-            q = writer.foreachBatch(self._count_fb(rule_id, _ws_batch)).start()
+            q = writer.foreachBatch(self._count_fb(rec, _ws_batch)).start()
         elif sink_type == "sse":
             # SSE broadcast via the in-process broker (sse/sink.go)
             from ekuiper_spark.sources.sse import write_sse_sink
@@ -386,7 +472,7 @@ class RuleRuntime:
                     batch_df, int(_o["port"]), _o.get("endpoint", "/stream")
                 )
 
-            q = writer.foreachBatch(self._count_fb(rule_id, _sse_batch)).start()
+            q = writer.foreachBatch(self._count_fb(rec, _sse_batch)).start()
         elif sink_type == "neuron":
             # nanomsg PAIR publish (neuron sink.go message shape)
             from ekuiper_spark.sources.neuron import write_neuron_sink
@@ -398,7 +484,7 @@ class RuleRuntime:
                     node_name=_o.get("nodeName", "node"),
                 )
 
-            q = writer.foreachBatch(self._count_fb(rule_id, _neuron_batch)).start()
+            q = writer.foreachBatch(self._count_fb(rec, _neuron_batch)).start()
         elif sink_type == "edgex":
             # AddEventRequest envelopes on the redis bus (edgex sink.go)
             from ekuiper_spark.sources.edgex import write_edgex_sink
@@ -412,7 +498,7 @@ class RuleRuntime:
                     device_name=_o.get("deviceName", "ekuiper"),
                 )
 
-            q = writer.foreachBatch(self._count_fb(rule_id, _edgex_batch)).start()
+            q = writer.foreachBatch(self._count_fb(rec, _edgex_batch)).start()
         elif sink_type == "influx":
             # line-protocol HTTP writes, one POST per partition
             # (extensions/impl/influx/influx.go BatchPoints analog)
@@ -436,7 +522,7 @@ class RuleRuntime:
                     precision=str(_o.get("precision", "ns")),
                 )
 
-            q = writer.foreachBatch(self._count_fb(rule_id, _influx_batch)).start()
+            q = writer.foreachBatch(self._count_fb(rec, _influx_batch)).start()
         elif sink_type == "tdengine3":
             # per-row INSERT statements merged per partition, shipped over
             # the REST API (extensions/impl/tdengine3/tdengine3.go)
@@ -445,7 +531,7 @@ class RuleRuntime:
             def _tdengine_batch(batch_df: DataFrame, _epoch: int, _o=sink_opts) -> None:
                 write_tdengine_sink(batch_df, _o, addr=_o.get("addr"))
 
-            q = writer.foreachBatch(self._count_fb(rule_id, _tdengine_batch)).start()
+            q = writer.foreachBatch(self._count_fb(rec, _tdengine_batch)).start()
         elif sink_type == "image":
             # save binary payloads as image files with count pruning
             # (extensions/impl/image/image.go)
@@ -460,7 +546,7 @@ class RuleRuntime:
                     max_count=int(_o.get("maxCount", 0)),
                 )
 
-            q = writer.foreachBatch(self._count_fb(rule_id, _image_batch)).start()
+            q = writer.foreachBatch(self._count_fb(rec, _image_batch)).start()
         elif sink_type == "zmq":
             # PUB the batch as JSON payloads (extensions/impl/zmq/sink.go);
             # the binding PUB socket lives for the rule's lifetime
@@ -468,12 +554,12 @@ class RuleRuntime:
 
             zpub = ZmqPubSocket(sink_opts["server"])
             # closed by stop_rule like the rolling writer (both expose close())
-            self.rolling_writers[rule_id] = zpub
+            rec.closer = zpub
 
             def _zmq_batch(batch_df: DataFrame, _epoch: int, _p=zpub, _o=sink_opts) -> None:
                 write_zmq_sink(batch_df, _p, topic=_o.get("topic", ""))
 
-            q = writer.foreachBatch(self._count_fb(rule_id, _zmq_batch)).start()
+            q = writer.foreachBatch(self._count_fb(rec, _zmq_batch)).start()
         elif sink_type == "sql":
             # DB writes with insert/update/delete rowkind semantics
             # (extensions/impl/sql/sink.go:53-56)
@@ -489,7 +575,7 @@ class RuleRuntime:
                     row_kind_field=_o.get("rowKindField"),
                 )
 
-            q = writer.foreachBatch(self._count_fb(rule_id, _sql_batch)).start()
+            q = writer.foreachBatch(self._count_fb(rec, _sql_batch)).start()
         elif sink_type == "kafka":
             # extensions/impl/kafka sink -> Spark's native kafka writer;
             # rows become JSON `value` (+ optional string `key`)
@@ -511,12 +597,12 @@ class RuleRuntime:
             q = kw.start()
         else:
             raise ValueError(f"unknown sink {sink_type}")
-        self.queries[rule_id] = q
-        self._start_times[rule_id] = int(time.time() * 1000)
-        self._monitor_bounded_sources(rule_id, q)
+        rec.query = q
+        rec.started_at = int(time.time() * 1000)
+        self._monitor_bounded_sources(rec, q)
         return q
 
-    def _monitor_bounded_sources(self, rule_id: str, q: Any) -> None:
+    def _monitor_bounded_sources(self, rec: RuleRecord, q: Any) -> None:
         """A rule whose every stream source is a bounded simulator
         (loop=false) stops once the canned data is replayed — the
         reference rule goes to "stopped" on source EOF (simulator.go
@@ -527,14 +613,8 @@ class RuleRuntime:
         import threading
         import time as _time
 
-        from ekuiper_spark.parser import parse_sql
-
-        rule = self.rules.get(rule_id)
-        if rule is None:
-            return
-        try:
-            stmt = parse_sql(rule.sql)
-        except Exception:
+        stmt = rec.stmt
+        if stmt is None:
             return
         expected = 0
         for n in [stmt.source] + [j.source for j in stmt.joins]:
@@ -606,18 +686,21 @@ class RuleRuntime:
         return "append" if "EventTimeWatermark" in plan else "complete"
 
     def stop_rule(self, rule_id: str) -> None:
-        sched = self.schedulers.pop(rule_id, None)
+        rec = self.records.get(rule_id)
+        if rec is None:
+            return
+        sched, rec.scheduler = rec.scheduler, None
         if sched is not None:
             sched.stop()
-        q = self.queries.pop(rule_id, None)
+        q, rec.query = rec.query, None
         if q is not None:
             q.stop()
-        roller = self.rolling_writers.pop(rule_id, None)
-        if roller is not None:
-            roller.close()
-        self._after_read_actions(rule_id)
+        closer, rec.closer = rec.closer, None
+        if closer is not None:
+            closer.close()
+        self._after_read_actions(rec)
 
-    def _snapshot_read_files(self, rule_id: str) -> None:
+    def _snapshot_read_files(self, rec: RuleRecord) -> None:
         """At rule start, record the file list of every actionAfterRead
         source — the bounded run reads exactly the files present then;
         files that appear later are NOT acted on (source.go:317-330 only
@@ -626,7 +709,7 @@ class RuleRuntime:
         import os
 
         files: dict[str, list[str]] = {}
-        for d in self._after_read_defs(rule_id):
+        for d in self._after_read_defs(rec):
             if os.path.isfile(d.path):
                 files[d.name] = [d.path]
             else:
@@ -635,18 +718,11 @@ class RuleRuntime:
                     for f in glob.glob(os.path.join(d.path, "*"))
                     if os.path.isfile(f)
                 )
-        if files:
-            self._read_snapshots[rule_id] = files
+        rec.read_snapshot = files
 
-    def _after_read_defs(self, rule_id: str):
-        from ekuiper_spark.parser import parse_sql
-
-        rule = self.rules.get(rule_id)
-        if rule is None:
-            return []
-        try:
-            stmt = parse_sql(rule.sql)
-        except Exception:
+    def _after_read_defs(self, rec: RuleRecord):
+        stmt = rec.stmt
+        if stmt is None:
             return []
         out = []
         for n in [stmt.source] + [j.source for j in stmt.joins]:
@@ -681,7 +757,7 @@ class RuleRuntime:
                 continue
         return out
 
-    def _after_read_actions(self, rule_id: str) -> None:
+    def _after_read_actions(self, rec: RuleRecord) -> None:
         """File-source actionAfterRead (internal/io/file/source.go:317-330):
         when a rule over a file stream with actionAfterRead set stops,
         the fully-read files are deleted (1) or moved to moveTo (2) —
@@ -693,12 +769,12 @@ class RuleRuntime:
 
         from ekuiper_spark.sources.filesource import apply_after_read
 
-        snap = self._read_snapshots.pop(rule_id, {})
-        defs = self._after_read_defs(rule_id)
+        snap, rec.read_snapshot = rec.read_snapshot, {}
+        defs = self._after_read_defs(rec)
         if not defs:
             return
         processed = None
-        ckpt = self._checkpoints.pop(rule_id, None)
+        ckpt, rec.checkpoint = rec.checkpoint, None
         if ckpt:
             logged = self._processed_files_from_checkpoint(ckpt)
             if logged:
@@ -717,7 +793,10 @@ class RuleRuntime:
                 )
 
     def status(self, rule_id: str) -> dict[str, Any]:
-        sched = self.schedulers.get(rule_id)
+        rec = self.records.get(rule_id)
+        if rec is None:
+            return {"state": "stopped", "status": "stopped"}
+        sched = rec.scheduler
         if sched is not None and not sched.stopped:
             # reference scheduled-rule states (topo/rule/state.go): the
             # rule alternates running (in a bounded run) / scheduled
@@ -728,7 +807,7 @@ class RuleRuntime:
                 "runs": sched.runs,
                 "cron": sched.cron_expr,
             }
-        q = self.queries.get(rule_id)
+        q = rec.query
         if q is None:
             return {"state": "stopped", "status": "stopped"}
         state = "running" if q.isActive else "finished"
@@ -739,12 +818,12 @@ class RuleRuntime:
             "status": "running" if q.isActive else "stopped",
             "progress": q.lastProgress,
         }
-        if rule_id in self.restarts:
-            out["restarts"] = self.restarts[rule_id]
-        out.update(self._ref_metrics(rule_id, q))
+        if rec.restarts is not None:
+            out["restarts"] = rec.restarts
+        out.update(self._ref_metrics(rec, q))
         return out
 
-    def _ref_metrics(self, rule_id: str, q: Any) -> dict[str, Any]:
+    def _ref_metrics(self, rec: RuleRecord, q: Any) -> dict[str, Any]:
         """Reference-style status metric keys (rule status JSON in
         rest.go / topotest assertions: source_<name>_0_records_in_total,
         sink_<type>_0_records_out_total), synthesized from the query's
@@ -752,15 +831,8 @@ class RuleRuntime:
         names keep working.  Sums cover the retained progress window
         (Spark keeps ~100 recent batches), cumulative-enough for health
         dashboards; exact lifetime totals live in the checkpoint."""
-        rule = self.rules.get(rule_id)
-        if rule is None:
-            return {}
-        try:
-            from ekuiper_spark.parser import Parser
-
-            src = Parser(rule.sql).parse().source
-        except Exception:
-            src = "stream"
+        rule = rec.rule
+        src = rec.stmt.source if rec.stmt is not None else "stream"
         action = rule.actions[0] if rule.actions else {"memory": {}}
         (sink_type, _), = action.items()
         rows_in = 0
@@ -772,7 +844,7 @@ class RuleRuntime:
             n = int(sink.get("numOutputRows") or 0)
             rows_out += max(n, 0)  # -1 = unreported (foreachBatch)
         # foreachBatch sinks count their own rows (_count_fb)
-        rows_out = max(rows_out, self._sink_counts.get(rule_id, 0))
+        rows_out = max(rows_out, rec.sink_count)
         exc = 0
         try:
             exc = 1 if q.exception() is not None else 0
@@ -785,7 +857,7 @@ class RuleRuntime:
             f"sink_{sink_type}_0_0_records_out_total": rows_out,
             f"source_{src}_0_exceptions_total": exc,
         }
-        started = self._start_times.get(rule_id)
+        started = rec.started_at
         if started is not None:
             out[f"source_{src}_0_connection_last_connected_time"] = started
         # named-connection reachability (fvt conn_test.go TestConnStatus:
@@ -807,19 +879,16 @@ class RuleRuntime:
     # -- persistence (the reference keeps rules in a KV store,
     # internal/processor/rule.go:54; here a JSON file per registry) --------
     def save(self, path: str) -> None:
-        import json
         from dataclasses import asdict
 
         with open(path, "w") as f:
             json.dump({rid: asdict(r) for rid, r in self.rules.items()}, f, indent=2)
 
     def load(self, path: str) -> None:
-        import json
-
         with open(path) as f:
             for rid, spec in json.load(f).items():
-                if rid not in self.rules:
-                    self.rules[rid] = Rule(**spec)
+                if rid not in self.records:
+                    self.create_rule(Rule.from_spec(spec, rid))
 
 
 def run_rule_available_now(

@@ -111,6 +111,16 @@ def pytest_collection_modifyitems(config, items):
         items[:] = kept
 
 
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """Say what the default profile left out, and how to run it."""
+    n = len(terminalreporter.stats.get("deselected", []))
+    if n and os.environ.get("SPARK_GRAFT_FULL_TESTS") != "1":
+        terminalreporter.write_line(
+            f"default test profile: {n} tests deselected; "
+            "set SPARK_GRAFT_FULL_TESTS=1 to run the full suite"
+        )
+
+
 @pytest.fixture(scope="session", autouse=True)
 def _fast_streaming_state():
     """Default profile: run streaming queries with 3 shuffle partitions.

@@ -96,7 +96,7 @@ def test_streaming_file_action_rolls(spark, catalog, tmp_path):
     rt.create_rule(rule)
     q = rt.start_rule("roll1", available_now=True)
     q.awaitTermination()
-    roller = rt.rolling_writers["roll1"]
+    roller = rt.records["roll1"].closer
     rt.stop_rule("roll1")
     n_rows = sum(len(open(f).read().splitlines()) for f in roller.files)
     from ekuiper_spark import compile_sql

@@ -150,36 +150,6 @@ def test_error_mode_null_vs_fail(spark, catalog):
         ).collect()
 
 
-def test_metrics_collector(spark, catalog):
-    from ekuiper_spark.streaming.metrics import MetricsCollector
-
-    mc = MetricsCollector()
-    spark.streams.addListener(mc)
-    try:
-        sdf = catalog.load(spark, "events", streaming=True)
-        name = "m_" + uuid.uuid4().hex[:6]
-        q = (
-            sdf.filter(F.col("value") > 100)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        import time
-
-        deadline = time.time() + 10
-        st = mc.status(q.id)
-        while time.time() < deadline and st["records_in_total"] == 0:
-            time.sleep(0.5)
-            st = mc.status(q.id)
-        assert st["records_in_total"] == 1000
-        assert st["batches_total"] >= 1
-    finally:
-        spark.streams.removeListener(mc)
-
-
 def test_watermark_drops_late_rows(spark):
     """Event-time watermark semantics (watermark_op.go:34-52): a row older
     than (max_ts - tolerance) arriving in a later batch is dropped."""

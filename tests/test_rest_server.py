@@ -148,19 +148,87 @@ def test_ruleset_export_import_roundtrip(server):
         "actions": [{"memory": {"table": "rest_rs_out"}}],
         "options": {},
     }
-    code, _ = _req(server, "POST", "/rules", rule)
-    assert code == 201
+    tagged = {
+        "id": "rest_rs_tagged",
+        "sql": "SELECT event_id FROM events",
+        "actions": [{"nop": {}}],
+        "options": {},
+        "tags": ["east", "hot"],
+        "name": "tagged rule",
+        "version": "7",
+        "triggered": False,
+    }
+    for r in (rule, tagged):
+        code, _ = _req(server, "POST", "/rules", r)
+        assert code == 201
     code, dump = _req(server, "POST", "/ruleset/export")
-    assert code == 200 and "rest_rs" in dump["rules"]
+    assert code == 200 and {"rest_rs", "rest_rs_tagged"} <= set(dump["rules"])
     assert "events" in dump["streams"]
     assert dump["streams"]["events"].upper().startswith("CREATE ")
     # drop, then restore from the export
     _req(server, "DELETE", "/rules/rest_rs")
+    _req(server, "DELETE", "/rules/rest_rs_tagged")
     code, body = _req(server, "POST", "/ruleset/import", dump)
-    assert code == 200 and body["imported"]["rules"] >= 1
+    assert code == 200 and body["imported"]["rules"] >= 2
     code, spec = _req(server, "GET", "/rules/rest_rs")
     assert code == 200 and spec["sql"] == rule["sql"]
+    code, spec = _req(server, "GET", "/rules/rest_rs_tagged")
+    assert code == 200 and spec == tagged
     _req(server, "DELETE", "/rules/rest_rs")
+    _req(server, "DELETE", "/rules/rest_rs_tagged")
+
+
+def test_delete_drops_rule_state(server):
+    """DELETE /rules/{id} drops everything the rule held: a re-created
+    rule of the same id counts its sink rows afresh, is untraced, and
+    shows no stale restart count or start-error message."""
+    rule = {
+        "id": "del_r1",
+        "sql": "SELECT event_id FROM events WHERE value > 150",
+        "actions": [{"nop": {}}],
+        "triggered": False,
+    }
+    code, _ = _req(server, "POST", "/rules", {
+        **rule, "options": {"restartStrategy": {"attempts": 2, "delay": "100ms"}},
+    })
+    assert code == 201
+    assert _req(server, "POST", "/rules/del_r1/trace/start")[0] == 200
+    assert _req(server, "POST", "/rules/del_r1/start?availableNow=1")[0] == 200
+    _, st = _req(server, "GET", "/rules/del_r1/status")
+    n = st["sink_nop_0_0_records_out_total"]
+    assert n > 0 and st["restarts"] == 0
+    _, ids = _req(server, "GET", "/trace/rule/del_r1")
+    assert ids
+    assert _req(server, "DELETE", "/rules/del_r1")[0] == 200
+    # an auto-start that fails leaves its message on the rule
+    code, _ = _req(server, "PUT", "/rules/del_r1", {
+        **rule, "triggered": True, "options": {"cron": "* * * * *"},
+    })
+    assert code == 200
+    _, st = _req(server, "GET", "/rules/del_r1/status")
+    assert "duration" in st["message"]
+    assert _req(server, "DELETE", "/rules/del_r1")[0] == 200
+
+    code, _ = _req(server, "POST", "/rules", rule)
+    assert code == 201
+    _, st = _req(server, "GET", "/rules/del_r1/status")
+    assert "message" not in st
+    assert _req(server, "POST", "/rules/del_r1/start?availableNow=1")[0] == 200
+    _, st = _req(server, "GET", "/rules/del_r1/status")
+    assert st["sink_nop_0_0_records_out_total"] == n
+    assert "restarts" not in st and "message" not in st
+    assert _req(server, "GET", "/trace/rule/del_r1") == (200, [])
+    _req(server, "DELETE", "/rules/del_r1")
+
+
+def test_stop_removes_upload_dir(spark, catalog):
+    import os
+
+    srv = RestServer(spark, catalog).start()
+    code, _ = _req(srv, "POST", "/config/uploads", {"name": "a/b.txt", "content": "x"})
+    assert code == 201 and os.path.isdir(srv.upload_dir)
+    srv.stop()
+    assert not os.path.exists(srv.upload_dir)
 
 
 def test_schema_registry_endpoints(server):

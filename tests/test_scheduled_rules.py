@@ -163,4 +163,44 @@ def test_restart_strategy_recovers_failing_rule(spark, catalog, tmp_path):
         time.sleep(0.5)
     rt.stop_rule("rs1")
     assert seen and seen[0] > 0
-    assert rt.restarts["rs1"] == 1
+    assert rt.records["rs1"].restarts == 1
+
+
+def test_restart_monitor_exits_after_delete(spark, catalog):
+    """Deleting a rule while its restartStrategy backs off ends the
+    monitor thread quietly: the dropped rule never restarts, and no
+    thread raises."""
+    import threading
+
+    def failing_sink(batch_df, epoch):
+        raise RuntimeError("injected failure")
+
+    errors = []
+    hook = threading.excepthook
+    threading.excepthook = lambda a: errors.append(a.exc_value)
+    try:
+        before = {q.id for q in spark.streams.active}
+        rt = RuleRuntime(spark, catalog)
+        rec = rt.create_rule(
+            Rule(
+                id="rs_del",
+                sql="SELECT event_id FROM events WHERE value > 150",
+                actions=[{"foreach_batch": {"fn": failing_sink}}],
+                options={"restartStrategy": {
+                    "attempts": 3, "delay": "2s", "jitterFactor": 0,
+                }},
+            )
+        )
+        rt.start_rule("rs_del", available_now=True)
+        deadline = time.time() + 60
+        while time.time() < deadline and not rec.restarts:
+            time.sleep(0.1)
+        assert rec.restarts == 1  # failed once; the monitor is backing off
+        rt.delete_rule("rs_del")
+        time.sleep(3)  # past the backoff
+    finally:
+        threading.excepthook = hook
+    assert errors == []
+    assert "rs_del" not in rt.records
+    assert rec.restarts == 1 and rec.query is None
+    assert {q.id for q in spark.streams.active} == before

@@ -3,12 +3,22 @@
 Shapes mirror the reference grammar (pkg/ast/expr.go, pkg/ast/statement.go)
 but are defined fresh as plain dataclasses.  The translator walks these
 into PySpark Column expressions / DataFrame operations.
+
+Every traversal goes through the helpers at the end of this module
+(``children``, ``walk``, ``conjuncts``/``conjoin``, ``transform``), the
+counterpart of the reference's ``ast.WalkFunc`` (pkg/ast/visitor.go).  The
+rule that keeps them complete: a node's sub-expressions are dataclass
+fields holding a ``Node``, or lists/tuples of them (nested as in
+``CaseWhen.whens``), and ``children`` finds them from the field
+declarations.  A new node class needs no traversal code; a walker that
+must skip a sub-tree says so with a ``prune``/``fn`` at its call site.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Any, Optional
+import copy
+from dataclasses import dataclass, field, fields
+from typing import Any, Callable, Iterable, Iterator, Optional
 
 
 class Node:
@@ -188,3 +198,104 @@ class SelectStatement(Node):
     having: Optional[Node] = None
     order: list[SortSpec] = field(default_factory=list)
     limit: Optional[int] = None
+
+
+# --------------------------------------------------------------------------
+# traversal
+# --------------------------------------------------------------------------
+_FIELD_NAMES: dict[type, tuple[str, ...]] = {}
+
+
+def _field_names(cls: type) -> tuple[str, ...]:
+    names = _FIELD_NAMES.get(cls)
+    if names is None:
+        names = _FIELD_NAMES[cls] = tuple(f.name for f in fields(cls))
+    return names
+
+
+def _flatten_into(v: Any, out: list) -> None:
+    if isinstance(v, Node):
+        out.append(v)
+    elif isinstance(v, (list, tuple)):
+        for x in v:
+            _flatten_into(x, out)
+
+
+def children(n: Node) -> list[Node]:
+    """The Node-valued fields of ``n`` in declaration order, lists and
+    tuples flattened (``CaseWhen.whens`` pairs, ``Wildcard.replaces``)."""
+    out: list[Node] = []
+    for name in _field_names(type(n)):
+        _flatten_into(getattr(n, name), out)
+    return out
+
+
+def walk(
+    n: Optional[Node], prune: Optional[Callable[[Node], bool]] = None
+) -> Iterator[Node]:
+    """Pre-order iterator over ``n`` and its descendants (nothing for
+    None).  A node for which ``prune(node)`` is true is yielded but its
+    children are not entered."""
+    stack = [] if n is None else [n]
+    while stack:
+        x = stack.pop()
+        yield x
+        if prune is None or not prune(x):
+            stack.extend(reversed(children(x)))
+
+
+def conjuncts(n: Optional[Node], op: str = "AND") -> list[Node]:
+    """Flatten a chain of ``op`` (left to right) into its operands; [] for
+    None."""
+    if n is None:
+        return []
+    if isinstance(n, Binary) and n.op == op:
+        return conjuncts(n.left, op) + conjuncts(n.right, op)
+    return [n]
+
+
+def conjoin(nodes: Iterable[Optional[Node]], op: str = "AND") -> Optional[Node]:
+    """Left-deep ``op`` chain over ``nodes`` (None entries skipped); None
+    when nothing is left."""
+    out: Optional[Node] = None
+    for c in nodes:
+        if c is not None:
+            out = c if out is None else Binary(op, out, c)
+    return out
+
+
+def transform(
+    n: Optional[Node], fn: Callable[[Node], Optional[Node]]
+) -> Optional[Node]:
+    """Rebuilt copy of ``n``: where ``fn(node)`` returns a node, that node
+    replaces ``node`` and is not entered; where it returns None the
+    node's children are transformed.  The input is never mutated;
+    unchanged sub-trees are shared with it."""
+    if n is None:
+        return None
+    r = fn(n)
+    if r is not None:
+        return r
+    changed: dict[str, Any] = {}
+    for name in _field_names(type(n)):
+        v = getattr(n, name)
+        nv = _transform_value(v, fn)
+        if nv is not v:
+            changed[name] = nv
+    if not changed:
+        return n
+    out = copy.copy(n)
+    for name, v in changed.items():
+        setattr(out, name, v)
+    return out
+
+
+def _transform_value(v: Any, fn):
+    if isinstance(v, Node):
+        return transform(v, fn)
+    if isinstance(v, (list, tuple)):
+        items = [_transform_value(x, fn) for x in v]
+        if all(a is b for a, b in zip(items, v)):
+            return v
+        return type(v)(items)
+    return v

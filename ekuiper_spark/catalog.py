@@ -131,7 +131,7 @@ class Catalog:
         self._defs: dict[str, StreamDef] = {}
         self._dfs: dict[str, DataFrame] = {}
         self._validation_errors: dict[str, DataFrame] = {}
-        # session -> {(path, with_meta|"schema") -> lazy parquet scan
+        # session -> {(path, with_meta|"schema"|"nano_cols") -> lazy parquet scan
         # DataFrame / probed StructType}; see load()'s parquet branches.
         # WeakKeyDictionary: a stopped+collected SparkSession drops its
         # whole sub-cache (an id()-keyed dict could alias a NEW session
@@ -258,7 +258,6 @@ class Catalog:
         with_meta: bool = False,
         used_cols: "set[str] | None" = None,
     ) -> DataFrame:
-        self._used_cols = used_cols  # consumed by the strict-validation read
         n = name.lower()
         if n in self._dfs:
             return self._dfs[n]
@@ -504,7 +503,7 @@ class Catalog:
             if d.format == "parquet":
                 from pyspark.sql import functions as F
 
-                for c in self._nano_cols(d.path):
+                for c in self._nano_cols(spark, d.path):
                     sdf = sdf.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
                 sdf = self._normalize_ntz(sdf)
             return sdf
@@ -557,7 +556,7 @@ class Catalog:
 
                 valid, errors = strict_validate(
                     spark.read.text(d.path), d.schema,
-                    used_fields=getattr(self, "_used_cols", None),
+                    used_fields=used_cols,
                 )
                 self._validation_errors[d.name.lower()] = errors
                 return valid
@@ -589,11 +588,12 @@ class Catalog:
     # parquet TIMESTAMP(NANOS) columns (fixture files) are unreadable by
     # Spark natively; with spark.sql.legacy.parquet.nanosAsLong they arrive
     # as epoch-nanos longs and are converted back to TimestampType here.
-    _nano_cols_cache: dict[str, list[str]] = {}
-
-    @classmethod
-    def _nano_cols(cls, path: str) -> list[str]:
-        if path not in cls._nano_cols_cache:
+    # The probe is cached with the path's scans, so (un)registering the
+    # path drops it.
+    def _nano_cols(self, spark: SparkSession, path: str) -> list[str]:
+        scache = self._session_cache(spark)
+        sk = (path, "nano_cols")
+        if sk not in scache:
             import pyarrow.parquet as pq
             import glob
             import os
@@ -615,10 +615,10 @@ class Catalog:
                         col.logical_type
                     ).lower():
                         cols.append(col.name)
-                cls._nano_cols_cache[path] = cols
+                scache[sk] = cols
             except Exception:
-                cls._nano_cols_cache[path] = []
-        return cls._nano_cols_cache[path]
+                scache[sk] = []
+        return scache[sk]
 
     def _read_parquet(
         self, spark: SparkSession, path: str, with_meta: bool = False
@@ -631,7 +631,7 @@ class Catalog:
             # the hidden file-source _metadata struct must be selected at
             # the scan, before any projection (backs the meta() builtin)
             df = df.select("*", "_metadata")
-        for c in self._nano_cols(path):
+        for c in self._nano_cols(spark, path):
             # integer division keeps full precision (ns epoch > 2^53)
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
         return self._normalize_ntz(df)

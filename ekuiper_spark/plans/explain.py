@@ -25,9 +25,12 @@ from ekuiper_spark.ast_nodes import (
     Field,
     FuncCall,
     Literal,
+    Node,
     SelectStatement,
     Unary,
     Wildcard,
+    children,
+    walk,
 )
 
 _AGGS = {"count", "sum", "avg", "min", "max"}
@@ -100,88 +103,42 @@ def _call_str(n: FuncCall, src: str, repl: Optional[dict] = None) -> str:
 _ANALYTIC_FNS = {"lag", "latest", "changed_col", "had_changed"}
 
 
-def _collect_analytic(n: Any, out: list, seen: set, src: str) -> None:
+def _collect_analytic(n: Node, out: list, seen: set, src: str) -> None:
     """POST-order analytic-call collection (decorateStmt registers inner
     calls before their enclosing call — AnalyticFuncsPlan_0 lists
     lag(name) before latest(lag(name)))."""
-    import dataclasses
-
-    if n is None or isinstance(n, (str, int, float, bool, bytes)):
-        return
-    if isinstance(n, (list, tuple)):
-        for y in n:
-            _collect_analytic(y, out, seen, src)
-        return
-    if dataclasses.is_dataclass(n) and not isinstance(n, type):
-        for fld in dataclasses.fields(n):
-            _collect_analytic(getattr(n, fld.name), out, seen, src)
-        if isinstance(n, FuncCall) and n.name.lower() in _ANALYTIC_FNS:
-            key = _call_str(n, src)
-            if key not in seen:
-                seen.add(key)
-                out.append(n)
+    for c in children(n):
+        _collect_analytic(c, out, seen, src)
+    if isinstance(n, FuncCall) and n.name.lower() in _ANALYTIC_FNS:
+        key = _call_str(n, src)
+        if key not in seen:
+            seen.add(key)
+            out.append(n)
 
 
-def _walk_calls(n: Any, pred) -> list[FuncCall]:
-    import dataclasses
-
-    out: list[FuncCall] = []
-
-    def walk(x):
-        if x is None or isinstance(x, (str, int, float, bool, bytes)):
-            return
-        if isinstance(x, FuncCall) and pred(x):
-            out.append(x)
-        if isinstance(x, (list, tuple)):
-            for y in x:
-                walk(y)
-            return
-        if dataclasses.is_dataclass(x) and not isinstance(x, type):
-            for fld in dataclasses.fields(x):
-                walk(getattr(x, fld.name))
-
-    walk(n)
-    return out
+def _walk_calls(nodes: list, pred) -> list[FuncCall]:
+    return [
+        x for n in nodes for x in walk(n) if isinstance(x, FuncCall) and pred(x)
+    ]
 
 
 def _used_columns(stmt: SelectStatement) -> Optional[set[str]]:
     """Column names the statement references, None when a wildcard (or
     count(*)-style call) forces all fields (DataSourcePlan pruning)."""
-    import dataclasses
-
+    group = stmt.group
+    roots = [*stmt.fields, stmt.where, stmt.having, *[j.on for j in stmt.joins]]
+    if group:
+        roots += group.dims
+        if group.window is not None:
+            roots.append(group.window.filter)
     used: set[str] = set()
-    wildcard = False
-
-    def walk(x):
-        nonlocal wildcard
-        if x is None or isinstance(x, (str, int, float, bool, bytes)):
-            return
-        if isinstance(x, Wildcard):
-            wildcard = True
-            return
-        if isinstance(x, ColumnRef):
-            used.add(x.name)
-            return
-        if isinstance(x, (list, tuple)):
-            for y in x:
-                walk(y)
-            return
-        if dataclasses.is_dataclass(x) and not isinstance(x, type):
-            for fld in dataclasses.fields(x):
-                walk(getattr(x, fld.name))
-
-    for f in stmt.fields:
-        walk(f.expr)
-    walk(stmt.where)
-    walk(stmt.having)
-    if stmt.group:
-        for d in stmt.group.dims or []:
-            walk(d)
-        if stmt.group.window is not None and stmt.group.window.filter is not None:
-            walk(stmt.group.window.filter)
-    for j in stmt.joins or []:
-        walk(j.on)
-    return None if wildcard else used
+    for root in roots:
+        for x in walk(root):
+            if isinstance(x, Wildcard):
+                return None
+            if isinstance(x, ColumnRef):
+                used.add(x.name)
+    return used
 
 
 def explain_statement(
@@ -193,18 +150,14 @@ def explain_statement(
     src = stmt.source_alias or stmt.source
     window = stmt.group.window if stmt.group else None
     dims = [d for d in (stmt.group.dims or [])] if stmt.group else []
-    field_aggs = _walk_calls(
-        [f.expr for f in stmt.fields], lambda c: c.name.lower() in _AGGS
-    )
+    field_aggs = _walk_calls(stmt.fields, lambda c: c.name.lower() in _AGGS)
     inc = bool(window is not None and field_aggs and not stmt.joins)
 
     # --- window-func + inc-agg rewrites (planner fieldsMap) ---------------
     repl: dict[str, str] = {}
     wf_fields: list[str] = []
     n_wf = 0
-    for c in _walk_calls(
-        [f.expr for f in stmt.fields], lambda c: c.name.lower() in _WINDOW_FUNCS
-    ):
+    for c in _walk_calls(stmt.fields, lambda c: c.name.lower() in _WINDOW_FUNCS):
         n_wf += 1
         name = f"wf_{c.name.lower()}_{n_wf}"
         repl[_call_str(c, src)] = f"Call:{{ name:bypass, args:[{name}] }}"
@@ -227,7 +180,7 @@ def explain_statement(
             repl[_call_str(c, src)] = (
                 f"Call:{{ name:bypass, args:[$$default.{col}] }}"
             )
-        for c in _walk_calls(stmt.having, lambda c: c.name.lower() in _AGGS):
+        for c in _walk_calls([stmt.having], lambda c: c.name.lower() in _AGGS):
             n_inc += 1
             col = f"inc_agg_col_{n_inc}"
             inc_call = FuncCall(name=f"inc_{c.name.lower()}", args=list(c.args))
@@ -353,9 +306,11 @@ def explain_statement(
     # (planner.go:652-659); fields-origin calls dedup WHERE-origin ones
     an_field: list[FuncCall] = []
     _an_seen: set = set()
-    _collect_analytic([f.expr for f in stmt.fields], an_field, _an_seen, src)
+    for f in stmt.fields:
+        _collect_analytic(f, an_field, _an_seen, src)
     an_funcs: list[FuncCall] = []
-    _collect_analytic(stmt.where, an_funcs, _an_seen, src)
+    if stmt.where is not None:
+        _collect_analytic(stmt.where, an_funcs, _an_seen, src)
     if an_field or an_funcs:
         parts2 = []
         if an_funcs:

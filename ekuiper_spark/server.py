@@ -48,6 +48,7 @@ from pyspark.sql import SparkSession
 
 from ekuiper_spark.catalog import Catalog
 from ekuiper_spark.plans.ddl import StreamProcessor
+from ekuiper_spark.sources import confstore
 from ekuiper_spark.streaming.runtime import Rule, RuleRecord, RuleRuntime
 from ekuiper_spark.translator import compile_sql
 
@@ -68,10 +69,8 @@ class RestServer:
 
         # /config/uploads file store (rest.go:181 dataDir/uploads)
         self.upload_dir = tempfile.mkdtemp(prefix="ekuiper_spark_uploads_")
-        # named connections (rest.go:235; connection.go:33-81)
-        self.connections: dict[str, dict[str, Any]] = {}
-        # conf-key store ("{kind}/{type}" -> key -> conf), PUT /metadata/...
-        self.source_confs: dict[str, dict[str, dict]] = {}
+        # conf keys and named connections live in sources.confstore, the
+        # one registry the catalog resolves CONF_KEY/connectionSelector in
         import time as _time
 
         self._started_at = _time.time()
@@ -180,11 +179,7 @@ class RestServer:
                 if isinstance(confs, str):
                     confs = json.loads(confs)
                 for key, conf in sorted(confs.items()):
-                    self.source_confs.setdefault(f"sources/{typ}", {})[key] = conf
-                    if typ == "simulator":
-                        from ekuiper_spark.sources import mock as _mock
-
-                        _mock.register_simulator_conf(key, conf)
+                    confstore.set_conf("sources", typ, key, conf)
                     counts["sourceConfig"] += 1
             except Exception as e:
                 errors["sourceConfig"][typ] = str(e)
@@ -263,7 +258,7 @@ class RestServer:
         TestStreamSchemaWithSharedSource): plain rules contribute null
         entries; useSliceTuple rules contribute {"hasIndex", "index"}
         slots in first-attachment order."""
-        from ekuiper_spark.ast_nodes import ColumnRef
+        from ekuiper_spark.ast_nodes import ColumnRef, walk
 
         cols: list[str] = []
         attached = 0
@@ -277,25 +272,10 @@ class RestServer:
             if not exp.get("useSliceTuple"):
                 all_slice = False
 
-            def visit(n: Any) -> None:
-                import dataclasses
-
-                if isinstance(n, ColumnRef):
-                    if n.name not in cols:
+            for root in [*stmt.fields, stmt.where, stmt.having]:
+                for n in walk(root):
+                    if isinstance(n, ColumnRef) and n.name not in cols:
                         cols.append(n.name)
-                    return
-                if isinstance(n, (list, tuple)):
-                    for x in n:
-                        visit(x)
-                    return
-                if dataclasses.is_dataclass(n) and not isinstance(n, type):
-                    for fld in dataclasses.fields(n):
-                        visit(getattr(n, fld.name))
-
-            for f in stmt.fields:
-                visit(f.expr)
-            visit(stmt.where)
-            visit(stmt.having)
         if attached and all_slice:
             return {c: {"hasIndex": True, "index": i} for i, c in enumerate(cols)}
         return {c: None for c in cols}
@@ -368,8 +348,6 @@ class RestServer:
             # POST /metadata/{sources|sinks}/connection/{type}: ping the
             # connection props (connection.go ping registry; fvt
             # TestSourcePing/TestSinkPing error shapes)
-            from ekuiper_spark.sources import confstore
-
             kind, typ = parts[1], parts[3]
             if method == "POST":
                 try:
@@ -387,29 +365,18 @@ class RestServer:
             # PUT /metadata/{sources|sinks}/{type}/confKeys/{key}
             # (meta_init.go conf-key hot update; fvt sdk.go CreateConf):
             # stores the conf; streams resolve CONF_KEY here
-            from ekuiper_spark.sources import confstore
-
             kind, typ, key = parts[1], parts[2], parts[4]
-            store = self.source_confs.setdefault(f"{kind}/{typ}", {})
             if method == "PUT":
-                store[key] = body or {}
                 confstore.set_conf(kind, typ, key, body or {})
-                if typ == "simulator":
-                    from ekuiper_spark.sources import mock as _mock
-
-                    _mock.register_simulator_conf(key, body or {})
                 return 200, {"result": f"conf {kind}/{typ}/{key} updated"}
             if method == "GET":
-                if key not in store:
+                conf = confstore.get_conf(kind, typ, key)
+                if conf is None:
                     return 404, {"error": f"conf key {key!r} not found"}
-                return 200, store[key]
+                return 200, conf
             if method == "DELETE":
-                if store.pop(key, None) is None:
+                if confstore.drop_conf(kind, typ, key) is None:
                     return 404, {"error": f"conf key {key!r} not found"}
-                if typ == "simulator":
-                    from ekuiper_spark.sources import mock as _mock
-
-                    _mock.SIMULATOR_CONFS.pop(key, None)
                 return 200, {"result": f"conf {kind}/{typ}/{key} dropped"}
 
         if parts == ["ping"]:
@@ -653,19 +620,17 @@ class RestServer:
             # rest.go:235-236 named-connection registry (connection.go:
             # 33-81 request/response shapes); connections are reusable
             # source/sink endpoint configs referenced by connectionSelector
-            from ekuiper_spark.sources import confstore
-
+            conns = confstore.CONNECTIONS
             if method == "POST" and len(parts) == 1:
                 cid = body.get("id")
                 if not cid or not re.match(r"^[A-Za-z0-9_.-]+$", cid):
                     return 400, {"error": "invalid connection id"}
-                if cid in self.connections:
+                if cid in conns:
                     return 400, {"error": f"connection {cid} already exists"}
-                self.connections[cid] = {
+                conns[cid] = {
                     "typ": body.get("typ", ""),
                     "props": body.get("props") or {},
                 }
-                confstore.CONNECTIONS[cid] = self.connections[cid]
                 return 201, "success"
             if method == "GET" and len(parts) == 1:
                 return 200, [
@@ -678,21 +643,20 @@ class RestServer:
                         # the client's connect/disconnect callbacks)
                         "status": confstore.probe(c["typ"], c["props"]),
                     }
-                    for cid, c in sorted(self.connections.items())
+                    for cid, c in sorted(conns.items())
                 ]
             if len(parts) == 2:
                 cid = parts[1]
                 if method == "PUT":
-                    self.connections[cid] = {
+                    conns[cid] = {
                         "typ": body.get("typ", ""),
                         "props": body.get("props") or {},
                     }
-                    confstore.CONNECTIONS[cid] = self.connections[cid]
                     return 200, "success"
-                if cid not in self.connections:
+                if cid not in conns:
                     return 404, {"error": f"connection {cid} not found"}
                 if method == "GET":
-                    c = self.connections[cid]
+                    c = conns[cid]
                     return 200, {
                         "id": cid,
                         "typ": c["typ"],
@@ -701,8 +665,7 @@ class RestServer:
                         "status": confstore.probe(c["typ"], c["props"]),
                     }
                 if method == "DELETE":
-                    del self.connections[cid]
-                    confstore.CONNECTIONS.pop(cid, None)
+                    del conns[cid]
                     return 200, {"result": f"connection {cid} dropped"}
 
         if parts[0] == "data":

@@ -36,6 +36,11 @@ def get_conf(kind: str, typ: str, key: str) -> Optional[dict]:
     return CONF_KEYS.get(f"{kind}/{typ}", {}).get(key)
 
 
+def drop_conf(kind: str, typ: str, key: str) -> Optional[dict]:
+    """Remove a conf key; returns its props, None when it was not set."""
+    return CONF_KEYS.get(f"{kind}/{typ}", {}).pop(key, None)
+
+
 def resolve_props(typ: str, options: dict) -> dict:
     """Merge conf-key props and connectionSelector props under the
     stream's WITH options (inline options win, like the reference's

@@ -19,22 +19,23 @@ from typing import Any, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-# CONF_KEY registry (the reference keeps source confs in etc/sources
-# yaml, hot-updated through PUT /metadata/sources/{type}/confKeys/{key},
-# internal/server/meta_init.go); streams declare WITH (TYPE="simulator",
-# CONF_KEY="x") and resolve their data/interval/loop here at plan time
-SIMULATOR_CONFS: dict[str, dict[str, Any]] = {}
+from ekuiper_spark.sources import confstore
 
 
+# Simulator CONF_KEYs live in the shared conf store (the reference keeps
+# source confs in etc/sources yaml, hot-updated through PUT
+# /metadata/sources/{type}/confKeys/{key}, internal/server/meta_init.go);
+# streams declare WITH (TYPE="simulator", CONF_KEY="x") and resolve their
+# data/interval/loop here at plan time
 def register_simulator_conf(key: str, conf: dict[str, Any]) -> None:
-    SIMULATOR_CONFS[key] = dict(conf)
+    confstore.set_conf("sources", "simulator", key, conf)
 
 
 def get_simulator_conf(key: str) -> dict[str, Any]:
-    if key not in SIMULATOR_CONFS:
+    conf = confstore.get_conf("sources", "simulator", key)
+    if conf is None:
         raise KeyError(f"simulator conf key {key!r} not registered")
-    return SIMULATOR_CONFS[key]
+    return conf
 
 
 def parse_interval_ms(v: Any, default_ms: int = 1000) -> int:

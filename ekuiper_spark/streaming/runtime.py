@@ -629,8 +629,11 @@ class RuleRuntime:
 
             conf: dict = {}
             ck = d.options.get("conf_key")
-            if ck and str(ck) in _mock.SIMULATOR_CONFS:
-                conf.update(_mock.SIMULATOR_CONFS[str(ck)])
+            if ck:
+                try:
+                    conf.update(_mock.get_simulator_conf(str(ck)))
+                except KeyError:
+                    pass  # an unknown key fails the source itself at start
             conf.update(d.options)
             if bool(conf.get("loop", True)):
                 return  # looping simulator: unbounded

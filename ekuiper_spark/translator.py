@@ -35,7 +35,7 @@ from ekuiper_spark import functions as fregistry
 from ekuiper_spark.ast_nodes import (
     Access, Between, Binary, CaseWhen, ColumnRef, Field, FuncCall, InExpr,
     Index, JsonPath, Like, Literal, Node, SelectStatement, Slice, Unary,
-    Wildcard, WindowSpec,
+    Wildcard, WindowSpec, conjoin, conjuncts, transform, walk,
 )
 from ekuiper_spark.catalog import Catalog
 from ekuiper_spark.parser import parse_sql
@@ -98,6 +98,33 @@ class TranslateCtx:
 
 def canon(node: Node) -> str:
     return repr(node)
+
+
+def _is_agg_call(n: Node) -> bool:
+    return isinstance(n, FuncCall) and fregistry.is_aggregate(n.name)
+
+
+def _is_meta_call(n: Node) -> bool:
+    return isinstance(n, FuncCall) and n.name in ("meta", "mqtt")
+
+
+def _is_over_call(n: Node) -> bool:
+    """A call with an OVER (PARTITION BY / ORDER BY) or WHEN clause."""
+    return isinstance(n, FuncCall) and (
+        n.when is not None or bool(n.partition_by) or bool(n.order_by)
+    )
+
+
+_WINDOW_META_FNS = frozenset(fregistry.WINDOW_META) | {"event_time"}
+
+
+def _uses_window_meta(*nodes: Optional[Node]) -> bool:
+    """Any window_start()/window_end()/.../event_time() call in ``nodes``."""
+    return any(
+        isinstance(m, FuncCall) and m.name in _WINDOW_META_FNS
+        for n in nodes
+        for m in walk(n)
+    )
 
 
 
@@ -180,40 +207,12 @@ class Translator:
         preprocessor only validates fields the statement references, so a
         type-mismatched UNUSED column never errors (TestSingleSQLRule4's
         int-color row emits data).  None = all columns (wildcards)."""
-        import dataclasses
-
         used: set[str] = set()
-        wildcard = False
-
-        def walk(n) -> None:
-            nonlocal wildcard
-            if n is None or isinstance(n, (str, int, float, bool, bytes)):
-                return
+        for n in walk(stmt):
             if isinstance(n, Wildcard):
-                wildcard = True
-                return
+                return None
             if isinstance(n, ColumnRef):
                 used.add(n.name.lower())
-                return
-            if isinstance(n, (list, tuple)):
-                for x in n:
-                    walk(x)
-                return
-            if dataclasses.is_dataclass(n) and not isinstance(n, type):
-                for fld in dataclasses.fields(n):
-                    walk(getattr(n, fld.name))
-
-        for f in stmt.fields:
-            walk(f.expr)
-        walk(stmt.where)
-        walk(stmt.having)
-        walk(stmt.group)
-        for s in stmt.order or []:
-            walk(s.expr)
-        for j in stmt.joins or []:
-            walk(j)
-        if wildcard:
-            return None
         # the event-time column is consumed implicitly (windows, analytic
         # ordering) even when never projected
         if self.event_col:
@@ -423,8 +422,7 @@ class Translator:
                     ctx.deferred_prefilter = "__pref"
                 else:
                     df = df.filter(self._expr(pre, ctx))
-            for c in agg_conjs:
-                stmt.having = c if stmt.having is None else Binary("AND", stmt.having, c)
+            stmt.having = conjoin([stmt.having, *agg_conjs])
             if hit_conjs:
                 if len(ctx.source_order) > 1 and any(
                     "time" in (canon(h) or "") for h in hit_conjs
@@ -727,16 +725,7 @@ class Translator:
                 # drop the whole collection; hit conjuncts
                 # (last_agg_hit_*) then count prior EMISSIONS
                 # sequentially (TestWindowRule3's `< 7` cap)
-                hconjs: list[Node] = []
-
-                def _flat(n: Node) -> None:
-                    if isinstance(n, Binary) and n.op == "AND":
-                        _flat(n.left)
-                        _flat(n.right)
-                    else:
-                        hconjs.append(n)
-
-                _flat(stmt.having)
+                hconjs = conjuncts(stmt.having)
                 hitty = [c for c in hconjs if self._has_hit_fn(c, ctx.aliases)]
                 plain = [c for c in hconjs if c not in hitty]
                 if plain:
@@ -1123,47 +1112,30 @@ class Translator:
         keyed by canon."""
         calls: dict[str, FuncCall] = {}
 
-        def walk(n: Node) -> None:
-            if isinstance(n, FuncCall):
-                if n.name in fregistry.ANALYTIC or n.name.startswith("acc_") or n.name == "changed_cols":
-                    calls.setdefault(canon(n), n)
-                    return
-                if n.name in ("meta", "mqtt"):
-                    return  # args are metadata keys, not expressions
-                for a in n.args:
-                    walk(a)
-            elif isinstance(n, Binary):
-                walk(n.left)
-                walk(n.right)
-            elif isinstance(n, Unary):
-                walk(n.operand)
-            elif isinstance(n, CaseWhen):
-                for c, v in n.whens:
-                    walk(c)
-                    walk(v)
-                if n.operand:
-                    walk(n.operand)
-                if n.else_:
-                    walk(n.else_)
-            elif isinstance(n, (Index, Slice, Access, JsonPath)):
-                walk(n.expr)
-            elif isinstance(n, InExpr):
-                walk(n.expr)
-            elif isinstance(n, (Between, Like)):
-                walk(n.expr)
-            elif isinstance(n, ColumnRef) and n.source is None:
-                key = n.name.lower()
-                tgt = ctx.aliases.get(key)
-                if tgt is not None and tgt is not n and key not in walk_stack:
-                    walk_stack.add(key)
-                    walk(tgt)
-                    walk_stack.discard(key)
+        def is_analytic(n: Node) -> bool:
+            return isinstance(n, FuncCall) and (
+                n.name in fregistry.ANALYTIC
+                or n.name.startswith("acc_")
+                or n.name == "changed_cols"
+            )
+
+        def skip(n: Node) -> bool:
+            # meta/mqtt args are metadata keys, not expressions
+            return is_analytic(n) or _is_meta_call(n)
+
+        def visit(n: Node, expanding: frozenset) -> None:
+            for m in walk(n, skip):
+                if is_analytic(m):
+                    calls.setdefault(canon(m), m)
+                elif isinstance(m, ColumnRef) and m.source is None:
+                    key = m.name.lower()
+                    tgt = ctx.aliases.get(key)
+                    if tgt is not None and tgt is not m and key not in expanding:
+                        visit(tgt, expanding | {key})
 
         for f in stmt.fields:
-            walk_stack = {f.alias.lower()} if f.alias else set()
-            walk(f.expr)
-        walk_stack = set()
-        walk(stmt.where)
+            visit(f.expr, frozenset([f.alias.lower()] if f.alias else []))
+        visit(stmt.where, frozenset())
         return calls
 
     _HIT_FNS = ("last_hit_count", "last_hit_time", "last_agg_hit_count", "last_agg_hit_time")
@@ -1171,45 +1143,30 @@ class Translator:
     @staticmethod
     def _has_hit_fn(n: Node, aliases: Optional[dict] = None) -> bool:
         a = aliases or {}
-        if isinstance(n, ColumnRef) and n.source is None and n.name.lower() in a:
-            # a select alias of a hit expression counts (`lc < 2` where
-            # `last_hit_count() as lc`, rule_test.go:1338)
-            return Translator._has_hit_fn(a[n.name.lower()], a)
-        if isinstance(n, FuncCall):
-            if n.name in Translator._HIT_FNS:
-                return True
-            return any(Translator._has_hit_fn(x, a) for x in n.args)
-        if isinstance(n, Binary):
-            return Translator._has_hit_fn(n.left, a) or Translator._has_hit_fn(n.right, a)
-        if isinstance(n, Unary):
-            return Translator._has_hit_fn(n.operand, a)
-        if isinstance(n, (Index, Slice, Access, JsonPath)):
-            return Translator._has_hit_fn(n.expr, a)
-        if isinstance(n, (Between, Like, InExpr)):
-            return Translator._has_hit_fn(n.expr, a)
-        return False
+
+        def hit(n: Node, expanding: frozenset) -> bool:
+            for m in walk(n):
+                if isinstance(m, FuncCall) and m.name in Translator._HIT_FNS:
+                    return True
+                # a select alias of a hit expression counts (`lc < 2` where
+                # `last_hit_count() as lc`, rule_test.go:1338)
+                if isinstance(m, ColumnRef) and m.source is None:
+                    key = m.name.lower()
+                    if key in a and key not in expanding and hit(a[key], expanding | {key}):
+                        return True
+            return False
+
+        return hit(n, frozenset())
 
     def _split_where(self, where: Node, aliases: Optional[dict] = None):
         """Split WHERE conjuncts into (plain predicate, [agg-bearing],
         [last_hit_*-bearing]); alias map resolves select aliases when
         classifying."""
-        conjs: list[Node] = []
-
-        def flatten(n: Node) -> None:
-            if isinstance(n, Binary) and n.op == "AND":
-                flatten(n.left)
-                flatten(n.right)
-            else:
-                conjs.append(n)
-
-        flatten(where)
+        conjs = conjuncts(where)
         aggy = [c for c in conjs if self._find_aggs(c)]
         hitty = [c for c in conjs if not self._find_aggs(c) and self._has_hit_fn(c, aliases)]
         plain = [c for c in conjs if c not in aggy and c not in hitty]
-        pre: Optional[Node] = None
-        for c in plain:
-            pre = c if pre is None else Binary("AND", pre, c)
-        return pre, aggy, hitty
+        return conjoin(plain), aggy, hitty
 
     def _sort_name(self, e: Node, stmt: SelectStatement) -> Optional[str]:
         """ORDER BY referencing an output alias -> sort on the output column."""
@@ -1224,28 +1181,11 @@ class Translator:
 
     # ------------------------------------------------------------------ #
     def _uses_meta(self, stmt: SelectStatement) -> bool:
-        found = False
-
-        def walk(n):
-            nonlocal found
-            if isinstance(n, FuncCall):
-                if n.name in ("meta", "mqtt"):
-                    found = True
-                for a in n.args:
-                    walk(a)
-            elif isinstance(n, Binary):
-                walk(n.left)
-                walk(n.right)
-            elif isinstance(n, Unary):
-                walk(n.operand)
-            elif isinstance(n, (Index, Slice, Access, JsonPath)):
-                walk(n.expr)
-
-        for f in stmt.fields:
-            walk(f.expr)
-        if stmt.where is not None:
-            walk(stmt.where)
-        return found
+        return any(
+            _is_meta_call(n)
+            for root in [*stmt.fields, stmt.where]
+            for n in walk(root)
+        )
 
     def _load_sources(self, stmt: SelectStatement, ctx: TranslateCtx) -> DataFrame:
         left_alias = stmt.source_alias or stmt.source
@@ -1696,42 +1636,24 @@ class Translator:
     def _inline_aliases(self, node: Node, ctx: TranslateCtx) -> Node:
         """Rewrite select-alias ColumnRefs to their target expressions
         (recursively) so an AST can be evaluated outside the Catalyst
-        alias-resolution path (pdeval closures)."""
-        import copy as _copy
+        alias-resolution path (pdeval closures).  An alias is not expanded
+        inside its own expansion (`a + 1 AS a` reads the source's `a`)."""
 
-        def rw(n: Node) -> Node:
-            if isinstance(n, ColumnRef) and n.source is None:
-                tgt = ctx.aliases.get(n.name.lower())
-                if tgt is not None:
-                    return rw(_copy.deepcopy(tgt))
-                return n
-            if isinstance(n, Binary):
-                return Binary(n.op, rw(n.left), rw(n.right))
-            if isinstance(n, Unary):
-                return Unary(n.op, rw(n.operand))
-            if isinstance(n, FuncCall):
-                return FuncCall(
-                    n.name, [rw(a) for a in n.args],
-                    n.partition_by, n.order_by, n.when,
-                )
-            if isinstance(n, CaseWhen):
-                return CaseWhen(
-                    rw(n.operand) if n.operand is not None else None,
-                    [(rw(c), rw(r)) for c, r in n.whens],
-                    rw(n.else_) if n.else_ is not None else None,
-                )
-            if isinstance(n, InExpr):
-                return InExpr(
-                    rw(n.expr), [rw(i) for i in n.items], n.negated,
-                    rw(n.set_expr) if n.set_expr is not None else None,
-                )
-            if isinstance(n, Between):
-                return Between(rw(n.expr), rw(n.lo), rw(n.hi), n.negated)
-            if isinstance(n, Like):
-                return Like(rw(n.expr), rw(n.pattern), n.negated, n.escape)
-            return n
+        def inline(n: Node, expanding: frozenset) -> Node:
+            def fn(m: Node) -> Optional[Node]:
+                if _is_meta_call(m):
+                    return m  # args are metadata keys, not columns
+                if isinstance(m, ColumnRef) and m.source is None:
+                    key = m.name.lower()
+                    tgt = ctx.aliases.get(key)
+                    if tgt is None or key in expanding:
+                        return m
+                    return inline(tgt, expanding | {key})
+                return None
 
-        return rw(node)
+            return transform(n, fn)
+
+        return inline(node, frozenset())
 
     def _pd_closure(self, node: Node, ctx: TranslateCtx, union: DataFrame, fm: dict):
         """Compile an AST node into a pandas lane closure over the merged
@@ -1795,143 +1717,31 @@ class Translator:
         are left untouched (their sites keep the honest raise)."""
 
         def blocked(n: Node) -> bool:
-            hit = [False]
+            return any(
+                isinstance(m, FuncCall)
+                and (
+                    m.name.lower() in self._PD_NO_PRECOMPUTE
+                    or _is_over_call(m)
+                    or fregistry.is_aggregate(m.name)
+                )
+                for m in walk(n)
+            )
 
-            def walk(m: Node) -> None:
-                if hit[0] or m is None:
-                    return
-                if isinstance(m, FuncCall):
-                    if (
-                        m.name.lower() in self._PD_NO_PRECOMPUTE
-                        or m.when is not None
-                        or m.partition_by
-                        or m.order_by
-                        or fregistry.is_aggregate(m.name)
-                    ):
-                        hit[0] = True
-                        return
-                    for a in m.args:
-                        walk(a)
-                elif isinstance(m, Binary):
-                    walk(m.left)
-                    walk(m.right)
-                elif isinstance(m, Unary):
-                    walk(m.operand)
-                elif isinstance(m, CaseWhen):
-                    walk(m.operand)
-                    for c, v in m.whens:
-                        walk(c)
-                        walk(v)
-                    walk(m.else_)
-                elif isinstance(m, Index):
-                    walk(m.expr)
-                    walk(m.index)
-                elif isinstance(m, Slice):
-                    walk(m.expr)
-                    walk(m.lo)
-                    walk(m.hi)
-                elif isinstance(m, (Access, JsonPath)):
-                    walk(m.expr)
-                elif isinstance(m, InExpr):
-                    walk(m.expr)
-                    for i in m.items:
-                        walk(i)
-                    walk(m.set_expr)
-                elif isinstance(m, Between):
-                    walk(m.expr)
-                    walk(m.lo)
-                    walk(m.hi)
-                elif isinstance(m, Like):
-                    walk(m.expr)
-                    walk(m.pattern)
-
-            walk(n)
-            return hit[0]
-
-        def rw(n):
-            if n is None or isinstance(n, (Literal, ColumnRef, Wildcard)):
+        def fn(n: Node) -> Optional[Node]:
+            if isinstance(n, (Literal, ColumnRef, Wildcard)):
                 return n
             if self._find_raw_cols(n) and not blocked(n):
                 s = side_fn(n)
                 if s != "M" and allow(n, s):
                     return attach(n, s)
-            if isinstance(n, Binary):
-                return Binary(n.op, rw(n.left), rw(n.right))
-            if isinstance(n, Unary):
-                return Unary(n.op, rw(n.operand))
-            if isinstance(n, FuncCall):
-                if n.when is not None or n.partition_by or n.order_by:
-                    return n
-                return FuncCall(n.name, [rw(a) for a in n.args])
-            if isinstance(n, CaseWhen):
-                return CaseWhen(
-                    rw(n.operand) if n.operand is not None else None,
-                    [(rw(c), rw(v)) for c, v in n.whens],
-                    rw(n.else_) if n.else_ is not None else None,
-                )
-            if isinstance(n, InExpr):
-                return InExpr(
-                    rw(n.expr),
-                    [rw(i) for i in n.items],
-                    n.negated,
-                    rw(n.set_expr) if n.set_expr is not None else None,
-                )
-            if isinstance(n, Between):
-                return Between(rw(n.expr), rw(n.lo), rw(n.hi), n.negated)
-            if isinstance(n, Like):
-                return Like(rw(n.expr), n.pattern, n.negated, n.escape)
-            return n
-
-        return rw(node)
-
-    def _map_refs(self, node: Node, fn):
-        """Rebuild an expression tree with every ColumnRef passed through
-        ``fn`` (e.g. nil-substitution of the other stream's fields for
-        per-tuple trigger evaluation, window_op.go isMatchCondition)."""
-
-        def rw(n):
-            if n is None:
-                return None
-            if isinstance(n, ColumnRef):
-                return fn(n)
-            if isinstance(n, Literal):
+            if _is_over_call(n):
                 return n
-            if isinstance(n, Binary):
-                return Binary(n.op, rw(n.left), rw(n.right))
-            if isinstance(n, Unary):
-                return Unary(n.op, rw(n.operand))
-            if isinstance(n, FuncCall):
-                out = FuncCall(n.name, [rw(a) for a in n.args])
-                out.partition_by = [rw(p) for p in n.partition_by]
-                out.order_by = n.order_by
-                out.when = rw(n.when)
-                return out
-            if isinstance(n, CaseWhen):
-                return CaseWhen(
-                    rw(n.operand),
-                    [(rw(c), rw(v)) for c, v in n.whens],
-                    rw(n.else_),
-                )
-            if isinstance(n, InExpr):
-                return InExpr(
-                    rw(n.expr), [rw(i) for i in n.items], n.negated,
-                    rw(n.set_expr),
-                )
-            if isinstance(n, Between):
-                return Between(rw(n.expr), rw(n.lo), rw(n.hi), n.negated)
             if isinstance(n, Like):
-                return Like(rw(n.expr), rw(n.pattern), n.negated, n.escape)
-            if isinstance(n, Index):
-                return Index(rw(n.expr), rw(n.index))
-            if isinstance(n, Slice):
-                return Slice(rw(n.expr), rw(n.lo), rw(n.hi))
-            if isinstance(n, Access):
-                return Access(rw(n.expr), n.fieldname)
-            if isinstance(n, JsonPath):
-                return JsonPath(rw(n.expr), n.path)
-            return n
+                # the pattern stays as written
+                return Like(transform(n.expr, fn), n.pattern, n.negated, n.escape)
+            return None
 
-        return rw(node)
+        return transform(node, fn)
 
     def _split_trigger(self, trigger: Node, is_long: bool):
         """Decompose an OVER(WHEN) trigger into (gap_throttle_spec,
@@ -1947,19 +1757,9 @@ class Translator:
         spec = self._join_gap_throttle_spec(trigger, is_long)
         if spec is not None:
             return spec, None
-        conjs: list[Node] = []
-
-        def flat(n: Node) -> None:
-            if isinstance(n, Binary) and n.op == "AND":
-                flat(n.left)
-                flat(n.right)
-            else:
-                conjs.append(n)
-
-        flat(trigger)
         gap = None
         flags: list[Node] = []
-        for c in conjs:
+        for c in conjuncts(trigger):
             s = self._join_gap_throttle_spec(c, is_long)
             if s is not None:
                 if gap is not None:
@@ -1977,10 +1777,7 @@ class Translator:
                 )
             else:
                 flags.append(c)
-        fnode: Optional[Node] = None
-        for c in flags:
-            fnode = c if fnode is None else Binary("AND", fnode, c)
-        return gap, fnode
+        return gap, conjoin(flags)
 
     def _trigger_nil_other(
         self, trigger: Node, ctx: TranslateCtx,
@@ -2000,7 +1797,10 @@ class Translator:
                 return ref
             return Literal(None)
 
-        node = self._map_refs(self._inline_aliases(trigger, ctx), sub)
+        node = transform(
+            self._inline_aliases(trigger, ctx),
+            lambda n: sub(n) if isinstance(n, ColumnRef) else None,
+        )
         return F.coalesce(self._expr(node, ctx).cast("boolean"), F.lit(False))
 
     def _nullrow_yields_null(self, node: Node, ctx: TranslateCtx, union: DataFrame) -> bool:
@@ -2030,28 +1830,15 @@ class Translator:
         The equi subset drives the pandas merge; the residual filters the
         candidate pairs in-op (None when fully equi).  A top-level OR
         yields no equi subset (everything residual)."""
-        conjs: list[Node] = []
-
-        def flat(n: Node) -> None:
-            if isinstance(n, Binary) and n.op == "AND":
-                flat(n.left)
-                flat(n.right)
-            else:
-                conjs.append(n)
-
-        flat(node)
         pairs: list[tuple[str, str]] = []
         residual: list[Node] = []
-        for c in conjs:
+        for c in conjuncts(node):
             p = self._equi_pairs(c, ctx, la, ra)
             if p:
                 pairs.extend(p)
             else:
                 residual.append(c)
-        res_node: Optional[Node] = None
-        for c in residual:
-            res_node = c if res_node is None else Binary("AND", res_node, c)
-        return pairs, res_node
+        return pairs, conjoin(residual)
 
     def _equi_pairs(self, node, ctx: TranslateCtx, la: str, ra: str):
         """Extract [(left_col, right_col)] from a conjunction of equality
@@ -2074,19 +1861,16 @@ class Translator:
                     return ("R", n.name)
             return None
 
-        def walk(n) -> bool:
-            if isinstance(n, Binary) and n.op == "AND":
-                return walk(n.left) and walk(n.right)
-            if isinstance(n, Binary) and n.op == "=":
-                a, b = side_of(n.left), side_of(n.right)
-                if a and b and {a[0], b[0]} == {"L", "R"}:
-                    l = a if a[0] == "L" else b
-                    r = b if b[0] == "R" else a
-                    pairs.append((l[1], r[1]))
-                    return True
-            return False
-
-        return pairs if walk(node) else None
+        for n in conjuncts(node):
+            if not (isinstance(n, Binary) and n.op == "="):
+                return None
+            a, b = side_of(n.left), side_of(n.right)
+            if not (a and b and {a[0], b[0]} == {"L", "R"}):
+                return None
+            l = a if a[0] == "L" else b
+            r = b if b[0] == "R" else a
+            pairs.append((l[1], r[1]))
+        return pairs
 
     def _streaming_sliding_join(
         self, ldf: DataFrame, stmt: SelectStatement, j, ctx: TranslateCtx, left_alias: str
@@ -2134,8 +1918,7 @@ class Translator:
                         "JoinTuple rows carry no event_time FuncValue, "
                         "row.go:549-556)"
                     )
-            for c in agg_conjs:
-                having = c if having is None else Binary("AND", having, c)
+            having = conjoin([having, *agg_conjs])
         r_alias = j.alias or j.source
         rdf = self.catalog.load(self.spark, j.source, streaming=self.streaming).alias(r_alias)
         ctx.source_aliases.add(r_alias.lower())
@@ -2224,17 +2007,7 @@ class Translator:
             and _fields_agg
             and j.kind in ("inner", "cross")
         ):
-            conjs: list[Node] = []
-
-            def _flat_w(n: Node) -> None:
-                if isinstance(n, Binary) and n.op == "AND":
-                    _flat_w(n.left)
-                    _flat_w(n.right)
-                else:
-                    conjs.append(n)
-
-            _flat_w(where_pre)
-
+            conjs = conjuncts(where_pre)
             lconj = [c for c in conjs if _side(c) == "L"]
             rconj = [c for c in conjs if _side(c) == "R"]
             if len(lconj) + len(rconj) == len(conjs):
@@ -2592,10 +2365,7 @@ class Translator:
                 )
             from ekuiper_spark.streaming.pdeval import compile_pd
 
-            hnode: Optional[Node] = None
-            for c in hit_conjs:
-                hnode = c if hnode is None else Binary("AND", hnode, c)
-            hnode = self._inline_aliases(hnode, ctx)
+            hnode = self._inline_aliases(conjoin(hit_conjs), ctx)
             int_types2 = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
             hint_cols = {
                 f2.name
@@ -2815,8 +2585,7 @@ class Translator:
                         "JoinTuple rows carry no event_time FuncValue, "
                         "row.go:549-556)"
                     )
-            for c in agg_conjs:
-                having = c if having is None else Binary("AND", having, c)
+            having = conjoin([having, *agg_conjs])
         stream_joins = [j for j in joins if self._def_is_stream(j.source)]
         static_joins = [j for j in joins if not self._def_is_stream(j.source)]
         for j in stream_joins:
@@ -2950,16 +2719,7 @@ class Translator:
             and not static_joins
             and all(jn.kind in ("inner", "cross") for jn in stream_joins)
         ):
-            _conjs: list[Node] = []
-
-            def _cw_flat(nd: Node) -> None:
-                if isinstance(nd, Binary) and nd.op == "AND":
-                    _cw_flat(nd.left)
-                    _cw_flat(nd.right)
-                else:
-                    _conjs.append(nd)
-
-            _cw_flat(where_pre)
+            _conjs = conjuncts(where_pre)
             _alias_by = {s[2].lower(): idx for idx, s in enumerate(sides)}
             _per_side: dict[int, list[Node]] = {}
             _ok = True
@@ -3049,18 +2809,8 @@ class Translator:
                         return ("L", f"{s}.{node.name.lower()}")
                 return None
 
-            conjs2: list[Node] = []
-
-            def _flat2(node) -> None:
-                if isinstance(node, Binary) and node.op == "AND":
-                    _flat2(node.left)
-                    _flat2(node.right)
-                else:
-                    conjs2.append(node)
-
-            _flat2(j.on)
             residual2: list[Node] = []
-            for cnj in conjs2:
+            for cnj in conjuncts(j.on):
                 matched = False
                 if isinstance(cnj, Binary) and cnj.op == "=":
                     a, b = side_of(cnj.left), side_of(cnj.right)
@@ -3081,10 +2831,7 @@ class Translator:
                 # non-equi residual: candidates merge on the equi subset
                 # (cross when none) and a pdeval lane filters them,
                 # preserved sides null-extending — compiled post-union
-                rnode: Optional[Node] = None
-                for cnj in residual2:
-                    rnode = cnj if rnode is None else Binary("AND", rnode, cnj)
-                spec2["__residual"] = rnode
+                spec2["__residual"] = conjoin(residual2)
                 spec2["__avail"] = {
                     s[4][c] for s in sides[: i + 2] for c in s[3]
                 }
@@ -3352,10 +3099,7 @@ class Translator:
                 )
             from ekuiper_spark.streaming.pdeval import compile_pd
 
-            hnode: Optional[Node] = None
-            for c in hit_conjs:
-                hnode = c if hnode is None else Binary("AND", hnode, c)
-            hnode = self._inline_aliases(hnode, ctx)
+            hnode = self._inline_aliases(conjoin(hit_conjs), ctx)
             hint_cols = set(cw_int_cols) | {"__lhc"}
 
             def _hresolve(ref: ColumnRef) -> Optional[str]:
@@ -3501,18 +3245,8 @@ class Translator:
         epoch-millis event columns (like _throttle_spec)."""
         if not is_long:
             return None
-        disjs: list[Node] = []
-
-        def flat(n: Node) -> None:
-            if isinstance(n, Binary) and n.op == "OR":
-                flat(n.left)
-                flat(n.right)
-            else:
-                disjs.append(n)
-
-        flat(node)
         ks: set = set()
-        for d in disjs:
+        for d in conjuncts(node, "OR"):
             if not (isinstance(d, Binary) and d.op in (">", ">=")):
                 return None
             k = self._raw(d.right)
@@ -3677,27 +3411,10 @@ class Translator:
         dims = list(group.dims) if group else []
         window = group.window if group else None
 
-        def _has_agg(n) -> bool:
-            # generic walk so aggregates nested in CASE/IN/BETWEEN/OVER
-            # dimensions are caught too (sqlValidator.go:28 walks all exprs)
-            import dataclasses
-
-            if n is None or isinstance(n, (str, int, float, bool, bytes)):
-                return False
-            if isinstance(n, (list, tuple)):
-                return any(_has_agg(x) for x in n)
-            if isinstance(n, FuncCall) and fregistry.is_aggregate(n.name):
-                return True
-            if dataclasses.is_dataclass(n) and not isinstance(n, type):
-                return any(
-                    _has_agg(getattr(n, fld.name))
-                    for fld in dataclasses.fields(n)
-                )
-            return False
-
         for d in dims:
-            if _has_agg(d):
-                # sqlValidator.go:28
+            # at any depth: aggregates nested in CASE/IN/BETWEEN/OVER
+            # dimensions count too (sqlValidator.go:28 walks all exprs)
+            if any(_is_agg_call(m) for m in walk(d)):
                 raise ValueError(
                     "Not allowed to call aggregate functions in GROUP BY "
                     f"clause: {self._raw(d) or canon(d)}."
@@ -4191,21 +3908,9 @@ class Translator:
         else:
             ctx.order_cols = list(group_cols)
         if stmt.having is not None:
-            conjs: list[Node] = []
-
-            def flatten(n: Node) -> None:
-                if isinstance(n, Binary) and n.op == "AND":
-                    flatten(n.left)
-                    flatten(n.right)
-                else:
-                    conjs.append(n)
-
-            flatten(stmt.having)
+            conjs = conjuncts(stmt.having)
             hitty = [c for c in conjs if self._has_hit_fn(c, ctx.aliases)]
-            plain = [c for c in conjs if c not in hitty]
-            pre: Optional[Node] = None
-            for c in plain:
-                pre = c if pre is None else Binary("AND", pre, c)
+            pre = conjoin(c for c in conjs if c not in hitty)
             if pre is not None:
                 self._cur_df = gdf  # post-agg type probes (variant routing)
                 ctx.dyn_errs = []
@@ -4471,24 +4176,7 @@ class Translator:
                 kw["watermark_gated"] = True
             # window_start()/window_end()/event_time() in the SELECT pull
             # per-session bounds from the sessionizer (ws-at-tick rule)
-            meta_names = set(fregistry.WINDOW_META) | {"event_time"}
-
-            def _uses_window_meta(n: Node) -> bool:
-                if isinstance(n, FuncCall):
-                    if n.name in meta_names:
-                        return True
-                    return any(_uses_window_meta(a) for a in n.args)
-                if isinstance(n, Binary):
-                    return _uses_window_meta(n.left) or _uses_window_meta(n.right)
-                if isinstance(n, Unary):
-                    return _uses_window_meta(n.operand)
-                if isinstance(n, (Index, Slice, Access, JsonPath, InExpr, Between, Like)):
-                    return _uses_window_meta(n.expr)
-                return False
-
-            if any(_uses_window_meta(f.expr) for f in stmt.fields) or (
-                stmt.having is not None and _uses_window_meta(stmt.having)
-            ):
+            if _uses_window_meta(*stmt.fields, stmt.having):
                 kw["emit_bounds"] = True
             dims = subgroups
             subgroups = []
@@ -4744,34 +4432,15 @@ class Translator:
         # plain columns referenced outside aggregates ride along with the
         # emitting row (per-event emission keeps the row visible)
         passthrough: list[str] = []
-
-        def collect_refs(n: Node) -> None:
-            if isinstance(n, FuncCall):
-                if fregistry.is_aggregate(n.name):
-                    return
-                for a in n.args:
-                    collect_refs(a)
-            elif isinstance(n, ColumnRef) and n.source is None:
-                if n.name in df.columns and n.name not in dims and n.name not in passthrough:
-                    passthrough.append(n.name)
-            elif isinstance(n, Binary):
-                collect_refs(n.left)
-                collect_refs(n.right)
-            elif isinstance(n, Unary):
-                collect_refs(n.operand)
-            elif isinstance(n, CaseWhen):
-                for c, v in n.whens:
-                    collect_refs(c)
-                    collect_refs(v)
-                if n.operand:
-                    collect_refs(n.operand)
-                if n.else_:
-                    collect_refs(n.else_)
-            elif isinstance(n, (Index, Slice, Access, JsonPath, InExpr, Between, Like)):
-                collect_refs(n.expr)
-
         for f in stmt.fields:
-            collect_refs(f.expr)
+            for n in self._find_raw_cols(f.expr):
+                if (
+                    n.source is None
+                    and n.name in df.columns
+                    and n.name not in dims
+                    and n.name not in passthrough
+                ):
+                    passthrough.append(n.name)
         keep_kw: dict = {}
         if ctx.pending_analytics:
             # fused analytics (AnalyticFuncsPlan BELOW the window): the
@@ -4811,20 +4480,7 @@ class Translator:
         # window_start()/window_end()/event_time() need the TRIGGER time on
         # the emission — carried as a hidden trigger-row passthrough
         # (__-prefixed pass cols stay trigger-local, not first-of-frame)
-        meta_names = set(fregistry.WINDOW_META) | {"event_time"}
-
-        def _uses_wmeta(n: Node) -> bool:
-            if isinstance(n, FuncCall):
-                return n.name in meta_names or any(_uses_wmeta(a) for a in n.args)
-            if isinstance(n, Binary):
-                return _uses_wmeta(n.left) or _uses_wmeta(n.right)
-            if isinstance(n, Unary):
-                return _uses_wmeta(n.operand)
-            if isinstance(n, (Index, Slice, Access, JsonPath, InExpr, Between, Like)):
-                return _uses_wmeta(n.expr)
-            return False
-
-        want_meta = any(_uses_wmeta(f.expr) for f in stmt.fields)
+        want_meta = _uses_window_meta(*stmt.fields)
         if want_meta and not dims:
             ec = ctx.event_col
             df = df.withColumn(
@@ -5110,19 +4766,9 @@ class Translator:
         spec = self._throttle_spec(trigger, ctx)
         if spec is not None:
             return None, spec
-        conjs: list[Node] = []
-
-        def flat(n: Node) -> None:
-            if isinstance(n, Binary) and n.op == "AND":
-                flat(n.left)
-                flat(n.right)
-            else:
-                conjs.append(n)
-
-        flat(trigger)
         gap = None
         flags: list[Node] = []
-        for c in conjs:
+        for c in conjuncts(trigger):
             s = self._throttle_spec(c, ctx)
             if s is not None:
                 if gap is not None:
@@ -5146,10 +4792,7 @@ class Translator:
                 "'[flag AND] <event_col> - last_hit_time() > K' over an "
                 "epoch-ms event column"
             )
-        fnode: Optional[Node] = None
-        for c in flags:
-            fnode = c if fnode is None else Binary("AND", fnode, c)
-        return fnode, gap
+        return conjoin(flags), gap
 
     def _agg_hit_throttle_spec(self, node, ctx: TranslateCtx):
         """Detect ``X - last_agg_hit_time() > K`` in a HAVING conjunct;
@@ -6211,27 +5854,9 @@ class Translator:
         for a in self._find_aggs(stmt.having):
             agg_nodes.setdefault(canon(a), a)
         bare: list[str] = []
-
-        def refs(n: Node) -> None:
-            if isinstance(n, ColumnRef):
-                if n.name in df.columns and n.name not in bare:
-                    bare.append(n.name)
-            elif isinstance(n, Binary):
-                refs(n.left)
-                refs(n.right)
-            elif isinstance(n, Unary):
-                refs(n.operand)
-            elif isinstance(n, FuncCall):
-                if fregistry.is_aggregate(n.name):
-                    return
-                for a in n.args:
-                    refs(a)
-            elif isinstance(n, InExpr):
-                refs(n.expr)
-            elif isinstance(n, Between):
-                refs(n.expr)
-
-        refs(stmt.having)
+        for n in self._find_raw_cols(stmt.having):
+            if n.name in df.columns and n.name not in bare:
+                bare.append(n.name)
         order = [F.col(c) for c in ctx.order_cols if c in df.columns]
         exprs: list[Column] = []
         for i, (k, call) in enumerate(agg_nodes.items()):
@@ -6256,75 +5881,20 @@ class Translator:
 
     def _find_fn_calls(self, node: Node, fname: str) -> list[FuncCall]:
         """All calls of a specific function anywhere in the expression."""
-        out: list[FuncCall] = []
-
-        def walk(n: Node) -> None:
-            if isinstance(n, FuncCall):
-                if n.name == fname:
-                    out.append(n)
-                for a in n.args:
-                    walk(a)
-            elif isinstance(n, Binary):
-                walk(n.left)
-                walk(n.right)
-            elif isinstance(n, Unary):
-                walk(n.operand)
-            elif isinstance(n, CaseWhen):
-                if n.operand:
-                    walk(n.operand)
-                for c, v in n.whens:
-                    walk(c)
-                    walk(v)
-                if n.else_:
-                    walk(n.else_)
-            elif isinstance(n, (Index, Slice, Access, JsonPath, InExpr, Between, Like)):
-                walk(n.expr)
-
-        walk(node)
-        return out
+        return [n for n in walk(node) if isinstance(n, FuncCall) and n.name == fname]
 
     def _find_aggs(self, node: Node) -> list[FuncCall]:
+        """Aggregate calls in the expression.  Nested aggs are not allowed,
+        so an aggregate's arguments are not entered; nor is an OVER clause
+        (row_number sort/partition aggregates are collected on their own
+        by the grouped path), only the OVER call's arguments."""
         out: list[FuncCall] = []
-
-        def walk(n: Node) -> None:
-            if isinstance(n, FuncCall):
-                if fregistry.is_aggregate(n.name):
-                    out.append(n)
-                    return  # nested aggs not allowed
+        for n in walk(node, lambda m: _is_agg_call(m) or _is_over_call(m)):
+            if _is_agg_call(n):
+                out.append(n)
+            elif _is_over_call(n):
                 for a in n.args:
-                    walk(a)
-            elif isinstance(n, Binary):
-                walk(n.left)
-                walk(n.right)
-            elif isinstance(n, Unary):
-                walk(n.operand)
-            elif isinstance(n, CaseWhen):
-                if n.operand:
-                    walk(n.operand)
-                for c, v in n.whens:
-                    walk(c)
-                    walk(v)
-                if n.else_:
-                    walk(n.else_)
-            elif isinstance(n, (Index, Slice, Access, JsonPath)):
-                walk(n.expr)
-            elif isinstance(n, InExpr):
-                walk(n.expr)
-                for i in n.items:
-                    walk(i)
-            elif isinstance(n, Between):
-                walk(n.expr)
-                walk(n.lo)
-                walk(n.hi)
-            elif isinstance(n, Like):
-                walk(n.expr)
-            elif isinstance(n, ColumnRef):
-                # alias inlining may hide aggs behind a name
-                target = self._alias_target(n)
-                if target is not None:
-                    walk(target)
-
-        walk(node)
+                    out.extend(self._find_aggs(a))
         return out
 
     def _agg_args_use_window_meta(self, stmt) -> bool:
@@ -6332,64 +5902,17 @@ class Translator:
         window struct (window_start()/window_end()/... inside an agg call)
         — those must resolve pre-agg, so the deferred session-bounds
         construction cannot apply."""
-        meta = set(fregistry.WINDOW_META) | {"event_time"}
-        exprs = [f.expr for f in stmt.fields]
-        if stmt.having is not None:
-            exprs.append(stmt.having)
-        for s in getattr(stmt, "order_by", None) or []:
-            exprs.append(s.expr)
-        for e in exprs:
-            for call in self._find_aggs(e):
-                for arg in call.args:
-                    if any(self._find_fn_calls(arg, m) for m in meta):
-                        return True
-        return False
+        return any(
+            _uses_window_meta(*call.args)
+            for root in [*stmt.fields, stmt.having, *stmt.order]
+            for call in self._find_aggs(root)
+        )
 
     def _find_raw_cols(self, node: Node) -> list[ColumnRef]:
         """Column refs OUTSIDE aggregate calls (the refs that need the
-        first-row-per-group treatment in an aggregated query)."""
-        out: list[ColumnRef] = []
-
-        def walk(n: Node) -> None:
-            if isinstance(n, FuncCall):
-                if fregistry.is_aggregate(n.name):
-                    return  # agg args aggregate, they don't project raw
-                for a in n.args:
-                    walk(a)
-            elif isinstance(n, Binary):
-                walk(n.left)
-                walk(n.right)
-            elif isinstance(n, Unary):
-                walk(n.operand)
-            elif isinstance(n, CaseWhen):
-                if n.operand:
-                    walk(n.operand)
-                for c, v in n.whens:
-                    walk(c)
-                    walk(v)
-                if n.else_:
-                    walk(n.else_)
-            elif isinstance(n, (Index, Slice, Access, JsonPath)):
-                walk(n.expr)
-            elif isinstance(n, InExpr):
-                walk(n.expr)
-                for i in n.items:
-                    walk(i)
-            elif isinstance(n, Between):
-                walk(n.expr)
-                walk(n.lo)
-                walk(n.hi)
-            elif isinstance(n, Like):
-                walk(n.expr)
-            elif isinstance(n, ColumnRef):
-                out.append(n)
-
-        walk(node)
-        return out
-
-    def _alias_target(self, n: ColumnRef) -> Optional[Node]:
-        return None  # populated per-compile via ctx in _expr; aggs in aliases
-        # are found because _find_aggs runs on the aliased expr directly too
+        first-row-per-group treatment in an aggregated query); agg args
+        aggregate, they don't project raw."""
+        return [n for n in walk(node, _is_agg_call) if isinstance(n, ColumnRef)]
 
     def _raw(self, node: Node) -> Any:
         if isinstance(node, Literal):
@@ -7655,31 +7178,12 @@ class Translator:
         """True when the statement contains calls whose typed inputs can
         error PER ROW in the reference (json_path_query/_query_first on a
         nil document)."""
-        import dataclasses
-
-        hit = False
-
-        def walk(n) -> None:
-            nonlocal hit
-            if hit or n is None or isinstance(n, (str, int, float, bool, bytes)):
-                return
-            if isinstance(n, FuncCall) and n.name.lower() in (
-                "json_path_query", "json_path_query_first"
-            ):
-                hit = True
-                return
-            if isinstance(n, (list, tuple)):
-                for x in n:
-                    walk(x)
-                return
-            if dataclasses.is_dataclass(n) and not isinstance(n, type):
-                for fld in dataclasses.fields(n):
-                    walk(getattr(n, fld.name))
-
-        for f in stmt.fields:
-            walk(f.expr)
-        walk(stmt.where)
-        return hit
+        return any(
+            isinstance(n, FuncCall)
+            and n.name.lower() in ("json_path_query", "json_path_query_first")
+            for root in [*stmt.fields, stmt.where]
+            for n in walk(root)
+        )
 
     def _json_path(self, name: str, col: Column, path: str, ctx: TranslateCtx = None) -> Column:
         """json_path_query / _query_first / _exists with the reference's

@@ -339,12 +339,22 @@ def test_partial_aggregation_in_plan(spark, catalog):
     assert "partial_count" in plan or "partial" in plan
 
 
-def test_meta_function(spark, catalog):
+@pytest.mark.parametrize(
+    "expr,expected",
+    [
+        ("meta('file_name')", "events.parquet"),
+        ("CASE WHEN 1 = 1 THEN meta('file_name') ELSE 'other' END", "events.parquet"),
+        ("meta('file_name') IN ('events.parquet')", True),
+    ],
+    ids=["plain", "case_when", "in_list"],
+)
+def test_meta_function(spark, catalog, expr, expected):
+    # meta() anywhere in the expression tree loads the source metadata
     df = compile_sql(
-        spark, "SELECT event_id, meta('file_name') AS src FROM events LIMIT 3", catalog
+        spark, f"SELECT event_id, {expr} AS src FROM events LIMIT 3", catalog
     )
     rows = df.collect()
-    assert all(r["src"] == "events.parquet" for r in rows)
+    assert rows and all(r["src"] == expected for r in rows)
 
 
 def test_streaming_lag_matches_batch(spark, catalog):

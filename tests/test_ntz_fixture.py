@@ -100,3 +100,20 @@ def test_epoch_us_accepts_ntz_directly(spark):
 
     micro = df.select(REGISTRY["microsecond"]([F.col("ts")], [None]).alias("m"))
     assert micro.first()["m"] == 123456
+
+
+def test_reregistered_rewritten_path_reprobes_nanos(spark, tmp_path):
+    # the TIMESTAMP(NANOS) column probe belongs to the catalog's per-path
+    # cache: re-registering a rewritten file must not reuse the old answer
+    from ekuiper_spark.catalog import StreamDef
+
+    path = str(tmp_path / "events.parquet")
+    _write_events(path, VARIANTS["utc_micros"])
+    cat = Catalog()
+    cat.register(StreamDef(name="events", format="parquet", path=path, kind="scan"))
+    assert isinstance(cat.load(spark, "events").schema["ts"].dataType, T.TimestampType)
+    _write_events(path, VARIANTS["ntz_nanos"])
+    cat.register(StreamDef(name="events", format="parquet", path=path, kind="scan"))
+    df = cat.load(spark, "events")
+    assert isinstance(df.schema["ts"].dataType, T.TimestampType)
+    assert df.orderBy("event_id").first()["ts"] == dt.datetime(2024, 1, 1, 0, 0, 0)

@@ -140,6 +140,19 @@ def test_session_agg_arg_window_meta_falls_back(spark, catalog):
     )
     rows = df.limit(5).collect()
     assert rows and all(r["first_end"] is not None for r in rows)
+    # the same holds for an aggregate argument in ORDER BY
+    df = compile_sql(
+        spark,
+        "SELECT user_id, window_start() AS ws, count(*) AS n FROM events "
+        "GROUP BY user_id, SESSIONWINDOW(mi, 120, 30) "
+        "ORDER BY min(window_start()), user_id",
+        catalog,
+    )
+    rows = df.collect()
+    assert rows
+    assert [(r["ws"], r["user_id"]) for r in rows] == sorted(
+        (r["ws"], r["user_id"]) for r in rows
+    )
 
 
 def test_pyspark_debugging_cache_attr_exists():

@@ -500,6 +500,37 @@ def test_data_export_import_roundtrip(server):
     assert code == 200 and body["status"] == "finished"
 
 
+def test_imported_conf_key_resolves_for_streams(server):
+    """/data/import sourceConfig lands in the conf store streams read:
+    a non-simulator CONF_KEY resolves after the import."""
+    from ekuiper_spark.sources import confstore
+
+    code, body = _req(server, "POST", "/data/import", {
+        "sourceConfig": {"mqtt": {"imp_key": {"server": "tcp://imported:1883"}}},
+    })
+    assert code == 200 and body["imported"]["sourceConfig"] == 1
+    props = confstore.resolve_props("mqtt", {"conf_key": "imp_key"})
+    assert props["server"] == "tcp://imported:1883"
+
+
+def test_deleted_conf_key_no_longer_resolves(server):
+    """DELETE /metadata/{kind}/{type}/confKeys/{key} removes the key the
+    catalog resolves, not just the listing."""
+    from ekuiper_spark.sources import confstore
+
+    path = "/metadata/sources/mqtt/confKeys/del_key"
+    code, _ = _req(server, "PUT", path, {"server": "tcp://gone:1883"})
+    assert code == 200
+    assert confstore.resolve_props("mqtt", {"conf_key": "del_key"})["server"] == "tcp://gone:1883"
+    code, _ = _req(server, "DELETE", path)
+    assert code == 200
+    assert "server" not in confstore.resolve_props("mqtt", {"conf_key": "del_key"})
+    code, _ = _req(server, "GET", path)
+    assert code == 404
+    code, _ = _req(server, "DELETE", path)
+    assert code == 404
+
+
 def test_connections_crud(server):
     """/connections named-connection registry (connection.go:33-81
     shapes): POST creates, duplicate id is a 400, GET lists/details,

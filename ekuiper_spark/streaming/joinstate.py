@@ -1,45 +1,43 @@
-"""Streaming stateful window JOIN ops: the specialized two-stream
-SLIDING join, the N-stream sliding chain, and the COUNT-window chain.
+"""Stateful window JOIN ops: the streaming N-stream sliding chain and
+the COUNT-window chain (streaming and batch).
 
-Reference: the window op batches tuples from BOTH streams and every
+Reference: the window op batches tuples from ALL streams and every
 arrival triggers a scan (window_op.go:593-619); JoinOp then joins within
-each window's contents (join_operator.go:27-398).  The Spark analog for
-TUMBLING/HOPPING is a watermarked bucket equi-join, but a per-event
-sliding frame has no bucket Spark state eviction can key on — so this
-op mirrors the reference's single-process window+join chain directly:
-both streams union into ONE stateful operator (single state partition,
-loudly warned by the caller — exactly the reference's process model),
-which buffers the lookback, joins each trigger's frame contents with a
-pandas merge on the extracted equi keys, and emits either the joined
-content rows or per-trigger aggregates.
+each window's contents left to right (evalJoinSets,
+join_operator.go:282-398).  The Spark analog for TUMBLING/HOPPING is a
+watermarked bucket equi-join, but a per-event sliding frame or a count
+window has no bucket Spark state eviction can key on — so these ops
+mirror the reference's single-process window+join chain directly: the
+streams union into ONE tagged frame (``__src`` = S0..Sn, ``__u`` event
+time or arrival sequence), a stateful operator (single state partition,
+loudly warned by the caller — exactly the reference's process model)
+buffers what the next window still needs, and each window's contents
+join through pandas merges on the natively precomputed equi keys
+(``_join_chain``).  Two streams are the N=2 case of the same chain.
 
-Supported here (round 9-10): GROUP BY dims via per-trigger ``subgroups``
-sub-grouping (single-side dims compute natively upstream; MIXED-side
-dims as pdeval ``merged_cols`` closures over the joined frame), HAVING
-via in-op aggregate specs (aggregate mode) or attached per-frame
-aggregate/first-row columns (content mode, incl. raw-column gates),
-window ``delay`` via pending triggers, OVER(WHEN) gap-throttles, WHERE
-above the join via per-side keep flags (``pair_keep``, INNER/CROSS) or
-a general ``where_filter`` lane over the joined rows (mixed-side /
-OUTER kinds), non-equi ON via ``cross_pairs`` + native downstream
-filter (INNER content) or ``on_filter`` + null-extension
-(outer/aggregated kinds), mixed-side aggregate inputs via
-``merged_cols``, and the aggregate set count/sum/avg/min/max/first/
-stddev/stddevs/var/vars/median/collect/last_value/percentile_cont/
-percentile_disc.
+All three ops share one window emission (``_WindowJoin``): GROUP BY dims
+via ``subgroups`` (single-side dims compute natively upstream; MIXED-side
+dims as pdeval ``merged_cols`` closures over the joined frame), HAVING via
+in-op aggregate specs (aggregate mode) or attached per-window
+aggregate/first-row columns (content mode, incl. raw-column gates), WHERE
+above the join via per-side keep flags (``pair_keep``, INNER/CROSS) or a
+general ``where_filter`` lane over the joined rows (mixed-side / OUTER
+kinds), non-equi ON via a per-step ``on_fn`` lane with null-extension,
+mixed-side aggregate inputs via ``merged_cols``, and the aggregate set
+count/sum/avg/min/max/first/stddev/stddevs/var/vars/median/collect/
+last_value/percentile_cont/percentile_disc.
 
-last_hit_count() WHERE conjuncts gate the emission sequence in-op
-(``hit_count_filter`` + a persisted counter); last_hit_time() over a
-JOINED collection is an ERROR in the reference itself (JoinTuple rows
-carry no event_time FuncValue, row.go:549-556) and raises the same
-message in both modes here.
+The sliding chain adds window ``delay`` via pending triggers, OVER(WHEN)
+flags and gap-throttles, and last_hit_count() WHERE conjuncts that gate
+the emission sequence in-op (``hit_count_filter`` + a persisted
+counter); last_hit_time() over a JOINED collection is an ERROR in the
+reference itself (JoinTuple rows carry no event_time FuncValue,
+row.go:549-556) and raises the same message in both modes here.
 
-Remaining raises live in the translator (each cites the batch
-equivalent): expressions outside the pdeval subset in in-op positions,
-and aggregate functions beyond the list above.  Batch mode supports the
-full surface (translator._batch_sliding_join).
+Remaining raises live in the translator: expressions outside the pdeval
+subset in in-op positions, and aggregate functions beyond the list
+above.  Batch sliding joins run natively (translator._batch_sliding_join).
 """
-
 from __future__ import annotations
 
 import math
@@ -151,328 +149,6 @@ def _spec_out_type(a: JoinAggSpec, types: dict) -> T.DataType:
     return types[a.in_col]
 
 
-def sliding_join_stream(
-    union_df: DataFrame,
-    *,
-    length: int,                 # in the __u column's own unit
-    how: str,                    # inner | left | right | full | cross
-    lkeys: Sequence[str],
-    rkeys: Sequence[str],
-    left_cols: Sequence[str],
-    right_cols: Sequence[str],
-    aggs: Optional[Sequence[JoinAggSpec]] = None,
-    delay: int = 0,              # SLIDINGWINDOW(unit, L, D): frame [t-L, t+D)
-    throttle: Optional[tuple[int, bool]] = None,  # (K, ge) gap-throttle
-    trigger_col: Optional[str] = None,  # boolean column: OVER(WHEN cond)
-                                 # evaluated per raw arrival upstream
-                                 # (other stream's fields nil -> false,
-                                 # window_op.go:757-784 isMatchCondition);
-                                 # false rows stay frame MEMBERS but never
-                                 # fire triggers
-    attach_aggs: Optional[Sequence[JoinAggSpec]] = None,  # content mode:
-                                 # frame aggregates replicated on each row
-    cross_pairs: bool = False,   # non-equi ON: emit ALL frame pairs; the
-                                 # caller filters the ON condition natively
-    pair_keep: Optional[Sequence[str]] = None,  # bool flag cols (one per
-                                 # side); a merged pair survives iff every
-                                 # flag is true — WHERE above the join,
-                                 # factorized per side (INNER/CROSS only)
-    subgroups: Sequence[str] = (),  # GROUP BY dims over the joined frame:
-                                 # aggregate mode emits one row per
-                                 # (trigger, dim value) instead of one
-    merged_cols: Optional[Sequence[tuple]] = None,  # [(name, fn)] pdeval
-                                 # closures computed on the JOINED frame
-                                 # (mixed-side dims / aggregate inputs /
-                                 # HAVING inputs); fn(frame) -> lane
-    merged_types: Optional[dict] = None,  # Spark DataType per merged col
-    on_filter=None,              # pdeval lane fn for a non-equi ON: pairs
-                                 # form (equi subset or cross), the ON
-                                 # condition filters them, preserved sides
-                                 # null-extend (join_operator.go per-kind)
-    where_filter=None,           # pdeval lane fn for WHERE above the join
-                                 # (FilterPlan > JoinPlan, planner.go:797):
-                                 # prunes JOINED rows (incl. null-extended)
-                                 # before aggregation / HAVING attach
-    hit_count_filter=None,       # pdeval lane over rows + a virtual
-                                 # __lhc column = count of previously
-                                 # EVALUATED rows (last_hit_count
-                                 # emission-sequence gate; the counter
-                                 # advances pass or fail and persists)
-) -> DataFrame:
-    """Stateful per-event sliding join over a packed two-stream union.
-
-    ``union_df`` columns: __src ('L'/'R'), __u (long event time in the
-    source unit), then all left columns (right-side rows carry nulls)
-    and all right columns (flat, pre-renamed to avoid collisions).
-
-    Content mode (aggs None): emits the joined frame rows per trigger
-    with __ws/__we bounds (plus ``attach_aggs`` frame aggregates for
-    downstream HAVING gates).  Aggregate mode: one row per trigger with
-    the spec outputs + bounds.  Triggers whose join result is empty emit
-    nothing (join_operator records_out < windows in TestWindowRule3).
-
-    delay: a trigger at t waits for the frame's right bound — it emits
-    once a row with u >= t + delay has been seen (window_op.go delayed
-    trigger; the reference fires a wall-clock timer, this op fires on
-    the next covering arrival, so a stream tail needs a later event or
-    heartbeat to flush pending triggers — same availableNow caveat as
-    the other stateful compat modes).
-
-    throttle: the OVER (WHEN ts - last_hit_time() > K) gap gate —
-    sequential last-hit bookkeeping over the merged trigger order
-    (window_op.go isMatchCondition; lastHit starts at Go zero and
-    advances on emission).
-    """
-    schema = union_df.schema
-    buffered = ["__src", "__u"] + list(left_cols) + list(right_cols)
-    if trigger_col is not None:
-        buffered.append(trigger_col)
-    buf_types = {f.name: f.dataType for f in schema.fields}
-
-    state_fields = [
-        T.StructField(c, T.ArrayType(buf_types[c]), True) for c in buffered
-    ]
-    # optional scalars ride behind the buffers so feature-off checkpoints
-    # keep their layout
-    if delay:
-        state_fields.append(T.StructField("__pend", T.ArrayType(T.LongType()), True))
-    if throttle is not None:
-        state_fields.append(T.StructField("__lhit", T.LongType(), True))
-    if hit_count_filter is not None:
-        state_fields.append(T.StructField("__lhc", T.LongType(), True))
-    state_schema = T.StructType(state_fields)
-
-    att_list = list(attach_aggs) if attach_aggs else []
-    all_types = dict(buf_types)
-    if merged_types:
-        all_types.update(merged_types)
-    if aggs is None:
-        out_fields = (
-            [T.StructField(c, buf_types[c], True) for c in list(left_cols) + list(right_cols)]
-        )
-        for a in att_list:
-            out_fields.append(T.StructField(a.out, _spec_out_type(a, all_types), True))
-        out_fields += [T.StructField("__ws", T.LongType()), T.StructField("__we", T.LongType())]
-    else:
-        out_fields = [T.StructField(c, all_types[c], True) for c in subgroups]
-        for a in aggs:
-            out_fields.append(T.StructField(a.out, _spec_out_type(a, all_types), True))
-        out_fields += [T.StructField("__ws", T.LongType()), T.StructField("__we", T.LongType())]
-    out_schema = T.StructType(out_fields)
-    agg_list = list(aggs) if aggs is not None else None
-    sub_list = list(subgroups)
-    pk_list = list(pair_keep) if pair_keep else []
-    how_ = how
-    lk, rk = list(lkeys), list(rkeys)
-    lcols, rcols = list(left_cols), list(right_cols)
-    n_buf = len(buffered)
-    thr = throttle
-
-    merged_list = list(merged_cols) if merged_cols else []
-
-    def _merge(lf: pd.DataFrame, rf: pd.DataFrame) -> pd.DataFrame:
-        if on_filter is not None:
-            return _merge_on(lf, rf, how_, lk, rk, on_filter)
-        if cross_pairs:
-            return _merge_one(lf, rf, "cross", [], [])
-        return _merge_one(lf, rf, how_, lk, rk)
-
-    def _emit_trigger(full, u_arr, t, lo, hi, outs, hit_state=None) -> None:
-        """Join the frame [lo, hi) for trigger t; append the emission."""
-        frame = full.iloc[lo:hi]
-        lf = frame[frame["__src"] == "L"][lcols]
-        rf = frame[frame["__src"] == "R"][rcols]
-        merged = _merge(lf, rf)
-        if not len(merged):
-            return
-        if pk_list:
-            # WHERE above the join prunes PAIRS (FilterPlan semantics);
-            # an all-pruned trigger emits nothing, like an empty join
-            keep = None
-            for c in pk_list:
-                k = (merged[c] == True).to_numpy()  # noqa: E712 (null -> False)
-                keep = k if keep is None else (keep & k)
-            merged = merged[keep]
-            if not len(merged):
-                return
-        if merged_list:
-            # mixed-side expressions (dims / aggregate inputs / WHERE /
-            # HAVING inputs) evaluate on the JOINED frame — null-extended
-            # rows see nulls, exactly like Catalyst over a join output
-            merged = merged.copy()
-            for name, fnc in merged_list:
-                merged[name] = fnc(merged)
-        if where_filter is not None:
-            from ekuiper_spark.streaming.pdeval import filter_mask
-
-            merged = merged[filter_mask(where_filter(merged))]
-            if not len(merged):
-                return
-        if hit_count_filter is not None and hit_state is not None:
-            # last_hit_count gate: the counter ticks for every EVALUATED
-            # (plain-passing) row, pass or fail, carried across triggers
-            # and micro-batches
-            from ekuiper_spark.streaming.pdeval import filter_mask
-
-            merged = merged.copy()
-            merged["__lhc"] = hit_state["c"] + np.arange(len(merged), dtype="int64")
-            hit_state["c"] += len(merged)
-            merged = merged[filter_mask(hit_count_filter(merged))]
-            if not len(merged):
-                return
-        if agg_list is None:
-            em = merged.copy()
-            for a in att_list:
-                em[a.out] = _pd_agg(merged, a)
-            em["__ws"] = t - length
-            # with delay the window's right bound is t + D (frame
-            # (t-L, t+D]; batch _batch_sliding_join convention)
-            em["__we"] = t + delay
-            outs.append(em)
-        elif sub_list:
-            rows = _pd_agg_grouped(merged, agg_list, sub_list)
-            rows["__ws"] = t - length
-            rows["__we"] = t + delay
-            outs.append(rows)
-        else:
-            row = {a.out: [_pd_agg(merged, a)] for a in agg_list}
-            row["__ws"] = [t - length]
-            row["__we"] = [t + delay]
-            outs.append(pd.DataFrame(row))
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        pend: list[int] = []
-        lhit = 0
-        hit_state = {"c": 0}
-        if state.exists:
-            vals = state.get
-            carry = pd.DataFrame({c: pd.Series(list(vals[i] or [])) for i, c in enumerate(buffered)})
-            if not len(carry):
-                carry = pd.DataFrame({c: pd.Series(dtype="object") for c in buffered})
-            pos_extra = n_buf
-            if delay:
-                pend = list(vals[pos_extra] or [])
-                pos_extra += 1
-            if thr is not None:
-                lhit = int(vals[pos_extra] or 0)
-                pos_extra += 1
-            if hit_count_filter is not None:
-                hit_state["c"] = int(vals[pos_extra] or 0)
-        else:
-            carry = pd.DataFrame({c: pd.Series(dtype="object") for c in buffered})
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        n_new = len(batch)
-        if n_new:
-            batch = batch.sort_values("__u", kind="mergesort").reset_index(drop=True)
-        # skip empty frames before concat (pandas deprecates dtype
-        # inference over empty/all-NA entries — the FutureWarning would
-        # change buffer dtypes under a pandas upgrade)
-        _parts = [p for p in (carry[buffered] if len(carry) else None,
-                              batch[buffered] if n_new else None) if p is not None]
-        if len(_parts) == 2:
-            full = pd.concat(_parts, ignore_index=True)
-        elif _parts:
-            full = _parts[0].reset_index(drop=True)
-        else:
-            full = carry[buffered] if set(buffered) <= set(carry.columns) else pd.DataFrame(columns=buffered)
-
-        def save(keep_from_u: int) -> None:
-            if len(full):
-                u_all = full["__u"].to_numpy(dtype="int64")
-                keep = full[u_all >= keep_from_u]
-            else:
-                keep = full
-            vals_out = _state_lists(keep, buffered, buf_types)
-            if delay:
-                vals_out.append(list(pend))
-            if thr is not None:
-                vals_out.append(int(lhit))
-            if hit_count_filter is not None:
-                vals_out.append(int(hit_state["c"]))
-            state.update(tuple(vals_out))
-
-        if not len(full):
-            save(0)
-            return
-        order = np.argsort(full["__u"].to_numpy(dtype="float64"), kind="stable")
-        full = full.iloc[order].reset_index(drop=True)
-        is_new = np.concatenate(
-            [np.zeros(len(carry), dtype=bool), np.ones(n_new, dtype=bool)]
-        )[order]
-        u_arr = full["__u"].to_numpy(dtype="int64")
-        outs: list[pd.DataFrame] = []
-
-        # new arrivals become trigger candidates (throttle-gated in merged
-        # event order, lastHit advancing on emission)
-        trig_arr = (
-            full[trigger_col].to_numpy() if trigger_col is not None else None
-        )
-        new_ts: list[int] = []
-        for pos in np.nonzero(is_new)[0]:
-            if trig_arr is not None and not (trig_arr[pos] == True):  # noqa: E712
-                continue  # OVER(WHEN) false/null: member, never a trigger
-            t = int(u_arr[pos])
-            if thr is not None:
-                k, ge = thr
-                gap = t - lhit
-                hit = gap >= k if ge else gap > k
-                if not hit:
-                    continue
-                lhit = t
-            new_ts.append(t if delay else pos)
-
-        if not delay:
-            # frame = ALL rows with u <= t (ties INCLUDED — the batch
-            # replay includes both same-time cross-stream rows in both
-            # triggers' frames; a position-based bound excluded the
-            # equal-time row that sorted after the trigger, emitting an
-            # empty join for the first of two same-time triggers)
-            for pos in new_ts:
-                t = int(u_arr[pos])
-                lo = int(np.searchsorted(u_arr, t - length, side="left"))
-                hi = int(np.searchsorted(u_arr, t, side="right"))
-                _emit_trigger(full, u_arr, t, lo, hi, outs, hit_state)
-            last = int(u_arr[-1])
-            keep_from = last - length
-        else:
-            # delayed frames [t-L, t+D): a trigger emits once a covering
-            # row (u >= t + D) has arrived
-            pend.extend(int(t) for t in new_ts)
-            max_u = int(u_arr[-1])
-            ready = sorted(t for t in pend if t + delay <= max_u)
-            pend = [t for t in pend if t + delay > max_u]
-            for t in ready:
-                lo = int(np.searchsorted(u_arr, t - length, side="left"))
-                hi = int(np.searchsorted(u_arr, t + delay, side="left"))
-                _emit_trigger(full, u_arr, t, lo, hi, outs, hit_state)
-            # retain enough history for every pending trigger's left bound
-            keep_from = min(
-                [max_u - length] + [t - length for t in pend]
-            )
-        save(keep_from)
-        if outs:
-            out = pd.concat(outs, ignore_index=True)
-            for f in out_fields:
-                if f.name not in out.columns:
-                    out[f.name] = None
-                col = out[f.name]
-                if isinstance(
-                    f.dataType, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-                ) and getattr(col.dtype, "kind", "") == "f":
-                    out[f.name] = pd.array(
-                        [None if pd.isna(x) else int(x) for x in col], dtype="Int64"
-                    )
-            yield out[[f.name for f in out_fields]]
-
-    return (
-        union_df.withColumn("__g0", F.lit(0))
-        .groupBy("__g0")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-        )
-    )
-
-
 def _state_lists(keep: pd.DataFrame, cols: Sequence[str], types: dict) -> list:
     """Column value-lists for ``state.update`` with dtype repair: Arrow
     hands nullable long columns to pandas as float64 (NaN for null), and
@@ -482,7 +158,7 @@ def _state_lists(keep: pd.DataFrame, cols: Sequence[str], types: dict) -> list:
     integer-typed buffer column must go back to int/None here.  (Losing
     this repair drops all long columns — join keys included — from rows
     that survive a micro-batch boundary; caught by the 3-stream chain's
-    cross-micro-batch pin, latent in the two-stream op since r9.)"""
+    cross-micro-batch pin.)"""
     int_t = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
     out: list = []
     for c in cols:
@@ -566,6 +242,114 @@ def _merge_on(
     return out.drop(columns=["__li", "__ri"])
 
 
+class _WindowJoin:
+    """One window's join and emission, shared by the window-join ops:
+    the output schema, the left-deep chain over a window's rows with the
+    WHERE/mixed-side/hit-count lanes, content-or-aggregate emission, and
+    the output dtype repair."""
+
+    def __init__(
+        self,
+        buf_types: dict,
+        sides: Sequence[tuple[str, Sequence[str]]],
+        joins: Sequence[dict],
+        *,
+        aggs: Optional[Sequence[JoinAggSpec]],
+        attach_aggs: Optional[Sequence[JoinAggSpec]],
+        pair_keep: Optional[Sequence[str]],
+        subgroups: Sequence[str],
+        merged_cols: Optional[Sequence[tuple]],
+        merged_types: Optional[dict],
+        where_filter,
+        hit_count_filter=None,
+        bounds: bool = False,
+    ) -> None:
+        self.sides = [(t, list(c)) for t, c in sides]
+        self.joins = [dict(j) for j in joins]
+        self.all_cols = [c for _t, cols in self.sides for c in cols]
+        self.aggs = list(aggs) if aggs is not None else None
+        self.attach = list(attach_aggs) if attach_aggs else []
+        self.pair_keep = list(pair_keep) if pair_keep else []
+        self.subgroups = list(subgroups)
+        self.merged = list(merged_cols) if merged_cols else []
+        self.where_filter = where_filter
+        self.hit_count_filter = hit_count_filter
+        types = {**buf_types, **(merged_types or {})}
+        if self.aggs is None:
+            fields = [T.StructField(c, buf_types[c], True) for c in self.all_cols]
+            specs = self.attach
+        else:
+            fields = [T.StructField(c, types[c], True) for c in self.subgroups]
+            specs = self.aggs
+        fields += [T.StructField(a.out, _spec_out_type(a, types), True) for a in specs]
+        if bounds:
+            fields += [T.StructField("__ws", T.LongType()), T.StructField("__we", T.LongType())]
+        self.out_fields = fields
+        self.schema = T.StructType(fields)
+
+    def rows(self, frame: pd.DataFrame, hit_state: Optional[dict] = None) -> Optional[pd.DataFrame]:
+        """Join one window's rows and return its emission: the joined
+        rows (content mode, plus attached window aggregates) or the
+        aggregate row(s).  None when nothing survives — an empty join
+        emits nothing (join_operator records_out < windows in
+        TestWindowRule3)."""
+        from ekuiper_spark.streaming.pdeval import filter_mask
+
+        merged = _join_chain(frame, self.sides, self.joins)
+        if self.pair_keep and len(merged):
+            # WHERE above the join prunes joined PAIRS: keep rows where
+            # every per-side flag is true (null -> False)
+            keep = np.logical_and.reduce(
+                [(merged[c] == True).to_numpy() for c in self.pair_keep]  # noqa: E712
+            )
+            merged = merged[keep]
+        if not len(merged):
+            return None
+        if self.merged:
+            # mixed-side expressions evaluate on the JOINED frame —
+            # null-extended rows see nulls, like Catalyst over a join
+            merged = merged.copy()
+            for name, fnc in self.merged:
+                merged[name] = fnc(merged)
+        if self.where_filter is not None:
+            # FilterPlan > JoinPlan (planner.go:797)
+            merged = merged[filter_mask(self.where_filter(merged))]
+            if not len(merged):
+                return None
+        if self.hit_count_filter is not None:
+            # last_hit_count gate: the counter ticks for every EVALUATED
+            # row, pass or fail, carried across windows and micro-batches
+            merged = merged.copy()
+            merged["__lhc"] = hit_state["c"] + np.arange(len(merged), dtype="int64")
+            hit_state["c"] += len(merged)
+            merged = merged[filter_mask(self.hit_count_filter(merged))]
+            if not len(merged):
+                return None
+        if self.aggs is None:
+            em = merged.copy()
+            for a in self.attach:
+                em[a.out] = _pd_agg(merged, a)
+            return em
+        if self.subgroups:
+            return _pd_agg_grouped(merged, self.aggs, self.subgroups)
+        return pd.DataFrame({a.out: [_pd_agg(merged, a)] for a in self.aggs})
+
+    def finish(self, out: pd.DataFrame) -> pd.DataFrame:
+        """Schema-ordered output columns, with integer columns that
+        pandas widened to float (null-extension, concat) turned back
+        into nullable ints before the Arrow conversion."""
+        int_t = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
+        for f in self.out_fields:
+            if f.name not in out.columns:
+                out[f.name] = None
+            col = out[f.name]
+            if isinstance(f.dataType, int_t) and getattr(col.dtype, "kind", "") == "f":
+                out[f.name] = pd.array(
+                    [None if pd.isna(x) else int(x) for x in col], dtype="Int64"
+                )
+        return out[[f.name for f in self.out_fields]]
+
+
 def sliding_join_chain_stream(
     union_df: DataFrame,
     *,
@@ -589,31 +373,42 @@ def sliding_join_chain_stream(
                                  # (count of previously EVALUATED rows;
                                  # advances pass or fail, persisted)
 ) -> DataFrame:
-    """Stateful per-event sliding window over an N-stream (3+) join
-    chain: the trigger/lookback machinery of ``sliding_join_stream``
-    driving the left-deep ``_join_chain`` merge of the COUNT-window
-    chain ops (evalJoinSets, join_operator.go:282-398 — each step with
-    its own ON/kind).  Every arrival from ANY stream triggers a scan of
-    the frame [t-L, t+D) (OVER(WHEN) flags and the sequential
-    gap-throttle gate the candidates, isMatchCondition); the chain
-    joins within the frame's contents and emits content rows or
-    per-trigger aggregates with __ws/__we bounds.  Same
-    single-state-partition process model as the other sliding compat
-    modes (loudly warned by the caller).  The two-stream statement
-    shape keeps its specialized op (``sliding_join_stream``); this
-    chain lane carries the full feature matrix — triggers, throttles,
-    hit-count gates, dims, mixed-side lanes — at N sides."""
-    schema = union_df.schema
-    buf_types = {f.name: f.dataType for f in schema.fields}
-    all_cols: list[str] = []
-    for _tag, cols in sides:
-        all_cols.extend(cols)
-    buffered = ["__src", "__u"] + all_cols
+    """Stateful per-event sliding window over an N-stream (N >= 2) join
+    chain.  Every arrival from ANY stream triggers a scan of the frame
+    [t-L, t+D) (OVER(WHEN) flags and the sequential gap-throttle gate
+    the candidates, isMatchCondition); the left-deep chain joins within
+    the frame's contents and emits content rows or per-trigger
+    aggregates with __ws/__we bounds.  Single state partition (the
+    reference's per-rule process, warned by the caller).
+
+    delay: a trigger at t waits for the frame's right bound — it emits
+    once a row with u >= t + delay has been seen (the reference fires a
+    wall-clock timer; this op fires on the next covering arrival, so a
+    stream tail needs a later event or heartbeat to flush pending
+    triggers).
+
+    State: one array per buffered column (__src, __u, every side's
+    columns, the trigger flag), then the optional scalars.  A restored
+    buffer whose __src tags are not this op's sides is refused — such
+    a checkpoint was written by an earlier layout (two-stream joins
+    once tagged L/R) and its rows would silently drop out of every
+    frame."""
+    buf_types = {f.name: f.dataType for f in union_df.schema.fields}
+    wj = _WindowJoin(
+        buf_types, sides, joins, aggs=aggs, attach_aggs=attach_aggs,
+        pair_keep=pair_keep, subgroups=subgroups, merged_cols=merged_cols,
+        merged_types=merged_types, where_filter=where_filter,
+        hit_count_filter=hit_count_filter, bounds=True,
+    )
+    own_tags = {t for t, _c in wj.sides}
+    buffered = ["__src", "__u"] + wj.all_cols
     if trigger_col is not None:
         buffered.append(trigger_col)
     state_fields = [
         T.StructField(c, T.ArrayType(buf_types[c]), True) for c in buffered
     ]
+    # optional scalars ride behind the buffers so feature-off
+    # checkpoints keep their layout
     if delay:
         state_fields.append(T.StructField("__pend", T.ArrayType(T.LongType()), True))
     if throttle is not None:
@@ -621,68 +416,18 @@ def sliding_join_chain_stream(
     if hit_count_filter is not None:
         state_fields.append(T.StructField("__lhc", T.LongType(), True))
     state_schema = T.StructType(state_fields)
-
-    att_list = list(attach_aggs) if attach_aggs else []
-    all_types = dict(buf_types)
-    if merged_types:
-        all_types.update(merged_types)
-    if aggs is None:
-        out_fields = [T.StructField(c, buf_types[c], True) for c in all_cols]
-        for a in att_list:
-            out_fields.append(T.StructField(a.out, _spec_out_type(a, all_types), True))
-    else:
-        out_fields = [T.StructField(c, all_types[c], True) for c in subgroups]
-        for a in aggs:
-            out_fields.append(T.StructField(a.out, _spec_out_type(a, all_types), True))
-    out_fields += [T.StructField("__ws", T.LongType()), T.StructField("__we", T.LongType())]
-    out_schema = T.StructType(out_fields)
-    agg_list = list(aggs) if aggs is not None else None
-    sub_list = list(subgroups)
-    pk_list = list(pair_keep) if pair_keep else []
-    merged_list = list(merged_cols) if merged_cols else []
-    side_list = [(t, list(c)) for t, c in sides]
-    join_list = [dict(j) for j in joins]
     n_buf = len(buffered)
+    thr = throttle
 
     def _emit(full: pd.DataFrame, t: int, lo: int, hi: int, outs: list,
-              hit_state=None) -> None:
-        frame = full.iloc[lo:hi]
-        merged = _join_chain(frame, side_list, join_list)
-        if pk_list and len(merged):
-            merged = _apply_pair_keep(merged, pk_list)
-        merged = _apply_merged(merged, merged_list, where_filter)
-        if not len(merged):
-            return  # empty join: the trigger emits nothing
-        if hit_count_filter is not None and hit_state is not None:
-            # counter ticks for every EVALUATED row, pass or fail,
-            # carried across triggers and micro-batches
-            from ekuiper_spark.streaming.pdeval import filter_mask
-
-            merged = merged.copy()
-            merged["__lhc"] = hit_state["c"] + np.arange(len(merged), dtype="int64")
-            hit_state["c"] += len(merged)
-            merged = merged[filter_mask(hit_count_filter(merged))]
-            if not len(merged):
-                return
-        if agg_list is None:
-            em = merged.copy()
-            for a in att_list:
-                em[a.out] = _pd_agg(merged, a)
+              hit_state: dict) -> None:
+        em = wj.rows(full.iloc[lo:hi], hit_state)
+        if em is not None:
             em["__ws"] = t - length
+            # with delay the window's right bound is t + D (frame
+            # (t-L, t+D]; batch _batch_sliding_join convention)
             em["__we"] = t + delay
             outs.append(em)
-        elif sub_list:
-            rows = _pd_agg_grouped(merged, agg_list, sub_list)
-            rows["__ws"] = t - length
-            rows["__we"] = t + delay
-            outs.append(rows)
-        else:
-            row = {a.out: [_pd_agg(merged, a)] for a in agg_list}
-            row["__ws"] = [t - length]
-            row["__we"] = [t + delay]
-            outs.append(pd.DataFrame(row))
-
-    thr = throttle
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         pend: list[int] = []
@@ -690,6 +435,14 @@ def sliding_join_chain_stream(
         hit_state = {"c": 0}
         if state.exists:
             vals = state.get
+            foreign = set(vals[0] or ()) - own_tags
+            if foreign:
+                raise RuntimeError(
+                    f"sliding-join state holds rows tagged {sorted(foreign)}, "
+                    f"not this join's sides {sorted(own_tags)}: the "
+                    "checkpoint predates the S0..Sn side layout and cannot "
+                    "be read; delete the checkpoint and restart the rule"
+                )
             carry = pd.DataFrame({c: pd.Series(list(vals[i] or [])) for i, c in enumerate(buffered)})
             if not len(carry):
                 carry = pd.DataFrame({c: pd.Series(dtype="object") for c in buffered})
@@ -708,6 +461,8 @@ def sliding_join_chain_stream(
         n_new = len(batch)
         if n_new:
             batch = batch.sort_values("__u", kind="mergesort").reset_index(drop=True)
+        # skip empty frames before concat (pandas deprecates dtype
+        # inference over empty/all-NA entries)
         _parts = [p for p in (carry[buffered] if len(carry) else None,
                               batch[buffered] if n_new else None) if p is not None]
         if len(_parts) == 2:
@@ -744,7 +499,7 @@ def sliding_join_chain_stream(
         outs: list[pd.DataFrame] = []
         # new arrivals become trigger candidates: OVER(WHEN)-false rows
         # stay members, the gap-throttle gates sequentially in merged
-        # event order (lastHit advances on hits)
+        # event order (lastHit starts at Go zero, advances on hits)
         trig_arr = (
             full[trigger_col].to_numpy() if trigger_col is not None else None
         )
@@ -780,27 +535,17 @@ def sliding_join_chain_stream(
                 lo = int(np.searchsorted(u_arr, t - length, side="left"))
                 hi = int(np.searchsorted(u_arr, t + delay, side="left"))
                 _emit(full, t, lo, hi, outs, hit_state)
+            # retain enough history for every pending trigger's left bound
             keep_from = min([max_u - length] + [t - length for t in pend])
         save(keep_from)
         if outs:
-            out = pd.concat(outs, ignore_index=True)
-            for f in out_fields:
-                if f.name not in out.columns:
-                    out[f.name] = None
-                col = out[f.name]
-                if isinstance(
-                    f.dataType, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-                ) and getattr(col.dtype, "kind", "") == "f":
-                    out[f.name] = pd.array(
-                        [None if pd.isna(x) else int(x) for x in col], dtype="Int64"
-                    )
-            yield out[[f.name for f in out_fields]]
+            yield wj.finish(pd.concat(outs, ignore_index=True))
 
     return (
         union_df.withColumn("__g0", F.lit(0))
         .groupBy("__g0")
         .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+            fn, wj.schema, state_schema, "append", GroupStateTimeout.NoTimeout
         )
     )
 
@@ -810,7 +555,8 @@ def count_join_stream(
     *,
     n: int,
     sides: Sequence[tuple[str, Sequence[str]]],  # (tag, flat column names)
-    joins: Sequence[dict],  # {"how", "lkeys", "rkeys"}; joins[i] attaches sides[i+1]
+    joins: Sequence[dict],  # {"how", "lkeys", "rkeys"[, "on_fn"]};
+                            # joins[i] attaches sides[i+1]
     aggs: Optional[Sequence[JoinAggSpec]] = None,
     attach_aggs: Optional[Sequence[JoinAggSpec]] = None,
     pair_keep: Optional[Sequence[str]] = None,  # per-side bool flags; a
@@ -841,35 +587,17 @@ def count_join_stream(
     Single state partition (the reference's per-rule process model),
     warned by the caller; per-window work is bounded by n.
     """
-    schema = union_df.schema
-    all_cols: list[str] = []
-    for _tag, cols in sides:
-        all_cols.extend(cols)
-    buffered = ["__src", "__u"] + all_cols
-    buf_types = {f.name: f.dataType for f in schema.fields}
+    buf_types = {f.name: f.dataType for f in union_df.schema.fields}
+    wj = _WindowJoin(
+        buf_types, sides, joins, aggs=aggs, attach_aggs=attach_aggs,
+        pair_keep=pair_keep, subgroups=subgroups, merged_cols=merged_cols,
+        merged_types=merged_types, where_filter=where_filter,
+    )
+    buffered = ["__src", "__u"] + wj.all_cols
     state_schema = T.StructType(
         [T.StructField("emitted", T.LongType())]
         + [T.StructField(c, T.ArrayType(buf_types[c]), True) for c in buffered]
     )
-    att_list = list(attach_aggs) if attach_aggs else []
-    all_types = dict(buf_types)
-    if merged_types:
-        all_types.update(merged_types)
-    if aggs is None:
-        out_fields = [T.StructField(c, buf_types[c], True) for c in all_cols]
-        for a in att_list:
-            out_fields.append(T.StructField(a.out, _spec_out_type(a, all_types), True))
-    else:
-        out_fields = [T.StructField(c, all_types[c], True) for c in subgroups]
-        for a in aggs:
-            out_fields.append(T.StructField(a.out, _spec_out_type(a, all_types), True))
-    out_schema = T.StructType(out_fields)
-    agg_list = list(aggs) if aggs is not None else None
-    sub_list = list(subgroups)
-    pk_list = list(pair_keep) if pair_keep else []
-    merged_list = list(merged_cols) if merged_cols else []
-    side_list = [(t, list(c)) for t, c in sides]
-    join_list = [dict(j) for j in joins]
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         if state.exists:
@@ -885,49 +613,24 @@ def count_join_stream(
             full = pd.concat([carry, batch[buffered]], ignore_index=True)
         else:
             full = carry
-        total = len(full)
-        n_win = total // n
+        n_win = len(full) // n
         outs: list[pd.DataFrame] = []
         for w in range(n_win):
-            frame = full.iloc[w * n : (w + 1) * n]
-            merged = _join_chain(frame, side_list, join_list)
-            if pk_list and len(merged):
-                merged = _apply_pair_keep(merged, pk_list)
-            merged = _apply_merged(merged, merged_list, where_filter)
-            if not len(merged):
-                continue
-            if agg_list is None:
-                em = merged.copy()
-                for a in att_list:
-                    em[a.out] = _pd_agg(merged, a)
+            em = wj.rows(full.iloc[w * n : (w + 1) * n])
+            if em is not None:
                 outs.append(em)
-            elif sub_list:
-                outs.append(_pd_agg_grouped(merged, agg_list, sub_list))
-            else:
-                outs.append(pd.DataFrame({a.out: [_pd_agg(merged, a)] for a in agg_list}))
         rest = full.iloc[n_win * n :]
         state.update(
             tuple([emitted + n_win] + _state_lists(rest, buffered, buf_types))
         )
         if outs:
-            out = pd.concat(outs, ignore_index=True)
-            for f in out_fields:
-                if f.name not in out.columns:
-                    out[f.name] = None
-                col = out[f.name]
-                if isinstance(
-                    f.dataType, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-                ) and getattr(col.dtype, "kind", "") == "f":
-                    out[f.name] = pd.array(
-                        [None if pd.isna(x) else int(x) for x in col], dtype="Int64"
-                    )
-            yield out[[f.name for f in out_fields]]
+            yield wj.finish(pd.concat(outs, ignore_index=True))
 
     return (
         union_df.withColumn("__g0", F.lit(0))
         .groupBy("__g0")
         .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+            fn, wj.schema, state_schema, "append", GroupStateTimeout.NoTimeout
         )
     )
 
@@ -948,33 +651,6 @@ def _pd_agg_grouped(
     for a in specs:
         out[a.out] = cols[a.out]
     return out
-
-
-def _apply_merged(merged: pd.DataFrame, merged_list, where_filter) -> pd.DataFrame:
-    """Mixed-side expression columns + WHERE-above-the-join lane over one
-    window's joined chain (FilterPlan > JoinPlan; null-extended rows see
-    nulls like Catalyst over a join output)."""
-    if not len(merged):
-        return merged
-    if merged_list:
-        merged = merged.copy()
-        for name, fnc in merged_list:
-            merged[name] = fnc(merged)
-    if where_filter is not None:
-        from ekuiper_spark.streaming.pdeval import filter_mask
-
-        merged = merged[filter_mask(where_filter(merged))]
-    return merged
-
-
-def _apply_pair_keep(merged: pd.DataFrame, pk_list: Sequence[str]) -> pd.DataFrame:
-    """WHERE above the join prunes joined PAIRS: keep rows where every
-    per-side flag is true (null -> False)."""
-    keep = None
-    for c in pk_list:
-        k = (merged[c] == True).to_numpy()  # noqa: E712
-        keep = k if keep is None else (keep & k)
-    return merged[keep] if keep is not None else merged
 
 
 def _join_chain(
@@ -1021,31 +697,12 @@ def count_join_batch(
     number of windows, which shuffles on wid)."""
     from pyspark.sql.window import Window as W
 
-    schema = union_df.schema
-    buf_types = {f.name: f.dataType for f in schema.fields}
-    all_cols: list[str] = []
-    for _tag, cols in sides:
-        all_cols.extend(cols)
-    att_list = list(attach_aggs) if attach_aggs else []
-    all_types = dict(buf_types)
-    if merged_types:
-        all_types.update(merged_types)
-    if aggs is None:
-        out_fields = [T.StructField(c, buf_types[c], True) for c in all_cols]
-        for a in att_list:
-            out_fields.append(T.StructField(a.out, _spec_out_type(a, all_types), True))
-    else:
-        out_fields = [T.StructField(c, all_types[c], True) for c in subgroups]
-        for a in aggs:
-            out_fields.append(T.StructField(a.out, _spec_out_type(a, all_types), True))
-    out_schema = T.StructType(out_fields)
-    side_list = [(t, list(c)) for t, c in sides]
-    join_list = [dict(j) for j in joins]
-    agg_list = list(aggs) if aggs is not None else None
-    sub_list = list(subgroups)
-    pk_list = list(pair_keep) if pair_keep else []
-    merged_list = list(merged_cols) if merged_cols else []
-
+    wj = _WindowJoin(
+        {f.name: f.dataType for f in union_df.schema.fields}, sides, joins,
+        aggs=aggs, attach_aggs=attach_aggs, pair_keep=pair_keep,
+        subgroups=subgroups, merged_cols=merged_cols,
+        merged_types=merged_types, where_filter=where_filter,
+    )
     w = W.orderBy("__u", "__src")
     df = union_df.withColumn("__rn", F.row_number().over(w) - 1)
     df = df.withColumn("__wid", (F.col("__rn") - F.col("__rn") % n) / n)
@@ -1053,29 +710,9 @@ def count_join_batch(
     df = df.filter(F.col("__wn") == n).drop("__rn", "__wn")
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = _join_chain(pdf, side_list, join_list)
-        if pk_list and len(merged):
-            merged = _apply_pair_keep(merged, pk_list)
-        merged = _apply_merged(merged, merged_list, where_filter)
-        if not len(merged):
-            return pd.DataFrame({f.name: pd.Series(dtype="object") for f in out_fields})
-        if agg_list is not None and sub_list:
-            merged = _pd_agg_grouped(merged, agg_list, sub_list)
-        elif agg_list is not None:
-            merged = pd.DataFrame({a.out: [_pd_agg(merged, a)] for a in agg_list})
-        else:
-            for a in att_list:
-                merged[a.out] = _pd_agg(merged, a)
-        for f in out_fields:
-            if f.name not in merged.columns:
-                merged[f.name] = None
-            col = merged[f.name]
-            if isinstance(
-                f.dataType, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-            ) and getattr(col.dtype, "kind", "") == "f":
-                merged[f.name] = pd.array(
-                    [None if pd.isna(x) else int(x) for x in col], dtype="Int64"
-                )
-        return merged[[f.name for f in out_fields]]
+        em = wj.rows(pdf)
+        if em is None:
+            return pd.DataFrame({f.name: pd.Series(dtype="object") for f in wj.out_fields})
+        return wj.finish(em)
 
-    return df.groupBy("__wid").applyInPandas(fn, out_schema)
+    return df.groupBy("__wid").applyInPandas(fn, wj.schema)

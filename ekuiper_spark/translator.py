@@ -1247,37 +1247,20 @@ class Translator:
                 # analog: an equi-join on the window bucket (watermarked in
                 # streaming).  Scan/lookup TABLE sides below stay ungated
                 # (side-input semantics).
-                if (
-                    stmt.group is not None
-                    and stmt.group.window is not None
-                    and stmt.group.window.kind == "count"
+                w = stmt.group.window if stmt.group is not None else None
+                if w is not None and (
+                    w.kind == "count" or (self.streaming and w.kind == "sliding")
                 ):
-                    # COUNT window join consumes the remaining join list
-                    # (stream sides pack into the window op; scan/lookup
-                    # sides join after) and finalizes the statement
+                    # COUNT windows, and streaming SLIDING windows with any
+                    # number of stream sides, consume the remaining join
+                    # list in the chain compiler (stream sides pack into
+                    # ONE window op joined left-deep, evalJoinSets;
+                    # scan/lookup sides join after) and finalize the
+                    # statement
                     idx = stmt.joins.index(j)
-                    return self._count_window_join(
+                    return self._window_join_chain(
                         df, stmt, ctx, left_alias, stmt.joins[idx:]
                     )
-                if (
-                    self.streaming
-                    and stmt.group is not None
-                    and stmt.group.window is not None
-                    and stmt.group.window.kind == "sliding"
-                ):
-                    # streaming sliding joins with 3+ STREAM sides route
-                    # through the N-side chain compiler (evalJoinSets
-                    # left-deep in ONE stateful op); the two-stream
-                    # statement keeps its specialized lane below
-                    idx = stmt.joins.index(j)
-                    rest = stmt.joins[idx:]
-                    if 1 + sum(
-                        1 for jj in rest if self._def_is_stream(jj.source)
-                    ) > 2:
-                        return self._count_window_join(
-                            df, stmt, ctx, left_alias, rest,
-                            sliding_w=stmt.group.window,
-                        )
                 df = self._stream_stream_join(df, stmt, j, ctx, left_alias)
                 continue
             rdf = self.catalog.load(self.spark, j.source, streaming=False).alias(r_alias)
@@ -1483,15 +1466,13 @@ class Translator:
             trig = self._sequential_throttle(
                 trig.select("__tu", "__ttid"), "__tu", k_us, ge
             )
-        # persist: the trigger relation is referenced by BOTH membership
-        # joins, and the synthetic id must be identical across them (it is
-        # deterministic for batch inputs, but the cache also computes the
-        # relation once instead of twice)
+        # BOTH membership joins read this relation; the (u, 1..k) ids
+        # above are identical on every recompute, so it needs no cache
         triggers = trig.select(
             "__tu",
             F.struct(F.col("__tu").alias("u"), F.col("__ttid").alias("t0")).alias("__tkey"),
             F.floor(F.col("__tu") / Wd).alias("__tb"),
-        ).persist()
+        )
 
         def _members(sdf: DataFrame, ucol, tkey_name: str, tu_name: str) -> DataFrame:
             # row u belongs to trigger t iff t-L <= u <= t+D (right bound
@@ -1655,34 +1636,6 @@ class Translator:
 
         return inline(node, frozenset())
 
-    def _pd_closure(self, node: Node, ctx: TranslateCtx, union: DataFrame, fm: dict):
-        """Compile an AST node into a pandas lane closure over the merged
-        joined frame (mixed-side expressions the stateful join op must
-        evaluate itself — join_operator.go runs the full valuer there).
-        Returns (fn, spark_type); raises the caller's NotImplementedError
-        path via pdeval.UnsupportedExpr for nodes outside the subset."""
-        from ekuiper_spark.streaming.pdeval import compile_pd
-
-        node = self._inline_aliases(node, ctx)
-        int_types = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-        int_cols = {
-            f.name for f in union.schema.fields if isinstance(f.dataType, int_types)
-        }
-
-        def resolve(ref: ColumnRef) -> Optional[str]:
-            k = (
-                f"{ref.source.lower()}.{ref.name.lower()}"
-                if ref.source
-                else ref.name.lower()
-            )
-            return fm.get(k)
-
-        fn = compile_pd(node, resolve, int_cols=int_cols)
-        # Catalyst types the same expression over the packed union (which
-        # carries every flat column) — schema-only, nothing executes
-        dt = union.select(self._expr(node, ctx).alias("__probe")).schema[0].dataType
-        return fn, dt
-
     # calls that must never be hoisted out of their operator position:
     # stateful/positional bookkeeping, window metadata, and the analytic
     # family (hoisted through their own pre-pass, not this one)
@@ -1825,720 +1778,37 @@ class Translator:
         except Exception:
             return False
 
-    def _split_on_conjuncts(self, node, ctx: TranslateCtx, la: str, ra: str):
-        """Split a join ON condition into (equi pairs, residual node).
-        The equi subset drives the pandas merge; the residual filters the
-        candidate pairs in-op (None when fully equi).  A top-level OR
-        yields no equi subset (everything residual)."""
-        pairs: list[tuple[str, str]] = []
-        residual: list[Node] = []
-        for c in conjuncts(node):
-            p = self._equi_pairs(c, ctx, la, ra)
-            if p:
-                pairs.extend(p)
-            else:
-                residual.append(c)
-        return pairs, conjoin(residual)
-
-    def _equi_pairs(self, node, ctx: TranslateCtx, la: str, ra: str):
-        """Extract [(left_col, right_col)] from a conjunction of equality
-        comparisons between one column of each side (resolving select
-        aliases); None when the ON has any other shape."""
-        pairs = []
-
-        def side_of(n) -> Optional[tuple[str, str]]:
-            # resolve through select aliases to a single-source ColumnRef
-            if isinstance(n, ColumnRef):
-                if n.source is None:
-                    tgt = ctx.aliases.get(n.name.lower())
-                    if tgt is not None:
-                        return side_of(tgt)
-                    return None
-                s = n.source.lower()
-                if s == la.lower():
-                    return ("L", n.name)
-                if s == ra.lower():
-                    return ("R", n.name)
-            return None
-
-        for n in conjuncts(node):
-            if not (isinstance(n, Binary) and n.op == "="):
-                return None
-            a, b = side_of(n.left), side_of(n.right)
-            if not (a and b and {a[0], b[0]} == {"L", "R"}):
-                return None
-            l = a if a[0] == "L" else b
-            r = b if b[0] == "R" else a
-            pairs.append((l[1], r[1]))
-        return pairs
-
-    def _streaming_sliding_join(
-        self, ldf: DataFrame, stmt: SelectStatement, j, ctx: TranslateCtx, left_alias: str
-    ) -> DataFrame:
-        """Streaming per-event sliding join (window-then-join order): both
-        streams union into one stateful op that buffers the lookback,
-        joins each trigger's frame on the extracted equi keys, and emits
-        content rows or per-trigger aggregates — the reference's
-        single-process window+join chain (window_op.go:593-619 +
-        join_operator.go).  Single state partition, loudly warned, like
-        the other unkeyed streaming windows; the batch path
-        (_batch_sliding_join) is the distributed surface.
-        """
-        import warnings
-
-        from ekuiper_spark.streaming.joinstate import JoinAggSpec, sliding_join_stream
-
-        w = stmt.group.window
-        if j.kind not in ("inner", "left", "right", "full", "cross"):
-            raise NotImplementedError(
-                f"streaming sliding {j.kind} join is unsupported"
-            )
-        # WHERE over the joined frames (FilterPlan sits ABOVE JoinPlan,
-        # planner.go:797): plain conjuncts filter the emitted content
-        # rows natively; agg conjuncts merge into HAVING; hit conjuncts
-        # (last_hit_*) stay batch-only
-        where_pre = None
-        having = stmt.having
-        hit_conjs: list = []
-        if stmt.where is not None:
-            where_pre, agg_conjs, hit_conjs = self._split_where(
-                stmt.where, ctx.aliases
-            )
-            if hit_conjs:
-                # last_hit_time needs the row's event_time FuncValue,
-                # which JoinTuple rows don't implement — the reference
-                # errors (row.go:549-556, valuer.go:370-380); batch does
-                # the same.  last_hit_count() gates the emission sequence
-                # in-op (count of prior evaluated rows, compiled below
-                # once the flat column map exists).
-                if any("time" in (canon(h) or "") for h in hit_conjs):
-                    raise ValueError(
-                        "call last_hit_time error: cannot get current time "
-                        "(last_hit_time() over a JOINED collection — "
-                        "JoinTuple rows carry no event_time FuncValue, "
-                        "row.go:549-556)"
-                    )
-            having = conjoin([having, *agg_conjs])
-        r_alias = j.alias or j.source
-        rdf = self.catalog.load(self.spark, j.source, streaming=self.streaming).alias(r_alias)
-        ctx.source_aliases.add(r_alias.lower())
-        ctx.source_order.append(r_alias)
-        length_us = int(w.args[0] * UNIT_SECONDS[w.unit] * 1_000_000)
-        delay_us = (
-            int(w.args[1] * UNIT_SECONDS[w.unit] * 1_000_000)
-            if len(w.args) > 1 and w.args[1]
-            else 0
-        )
-
-        def _ev(sdf: DataFrame, alias: str, name: str):
-            d = self.catalog.get(name)
-            ec = self.event_col or (d.timestamp_col if d else None) or (
-                "ts" if "ts" in sdf.columns else None
-            )
-            if ec is None:
-                raise ValueError("sliding-window join requires event-time columns")
-            col = F.col(f"{alias}.{ec}")
-            is_long = isinstance(sdf.schema[ec].dataType, T.LongType)
-            return (col * 1000) if is_long else epoch_us(col), is_long
-
-        lu, l_long = _ev(ldf, left_alias, stmt.source)
-        ru, _ = _ev(rdf, r_alias, j.source)
-        lcols, rcols = list(ldf.columns), list(rdf.columns)
-
-        # WHERE over an AGGREGATED sliding join: the reference filter runs
-        # between the join and the aggregation (FilterPlan above JoinPlan),
-        # so it prunes PAIRS — filtered rows still trigger frames and the
-        # surviving pairs aggregate per trigger.  Pair formation happens
-        # inside the stateful op; SINGLE-SIDE conjuncts factorize into a
-        # keep flag per side, evaluated natively upstream, with the op
-        # filtering merged pairs on flag conjunction.  Exact for
-        # INNER/CROSS (no null extension); outer kinds would evaluate
-        # conjuncts on the null-extended side post-join, which per-side
-        # flags cannot express — they keep the raise, as do mixed
-        # conjuncts.
-        def _side(c: Node) -> str:
-            sides = set()
-            for ref in self._find_raw_cols(c):
-                s = (ref.source or "").lower()
-                if s == left_alias.lower():
-                    sides.add("L")
-                elif s == r_alias.lower():
-                    sides.add("R")
-                elif not s and ref.name in lcols and ref.name not in rcols:
-                    sides.add("L")
-                elif not s and ref.name in rcols and ref.name not in lcols:
-                    sides.add("R")
-                else:
-                    sides.add("?")
-            if sides == {"L"}:
-                return "L"
-            if sides == {"R"}:
-                return "R"
-            return "?"
-
-        # GROUP BY dims over the joined frames (window-then-join-then-
-        # aggregate): single-side dim expressions compute natively on
-        # their own side pre-union; MIXED-side dims compile to pdeval
-        # closures the op evaluates on each trigger's merged frame
-        # (join_operator.go runs the full valuer over JoinTuples).  The
-        # op sub-groups each trigger's joined content either way — one
-        # row per (trigger, dim value).
-        sub_dim_info: list[tuple] = []  # (dim node, col name, side)
-        for di, d in enumerate(stmt.group.dims or []):
-            dside = _side(d)
-            if dside == "L":
-                nm = f"__ldim{di}"
-                ldf = ldf.withColumn(nm, self._expr(d, ctx)).alias(left_alias)
-            elif dside == "R":
-                nm = f"__rdim{di}"
-                rdf = rdf.withColumn(nm, self._expr(d, ctx)).alias(r_alias)
-            else:
-                nm = f"__mdim{di}"  # compiled after the union/fm exist
-            sub_dim_info.append((d, nm, dside))
-        if any(sd in ("L", "R") for _d, _n, sd in sub_dim_info):
-            lcols, rcols = list(ldf.columns), list(rdf.columns)
-
-        pair_keep_cols: list[str] = []
-        _fields_agg = any(self._find_aggs(f.expr) for f in stmt.fields) or bool(
-            sub_dim_info
-        )
-        if (
-            where_pre is not None
-            and _fields_agg
-            and j.kind in ("inner", "cross")
-        ):
-            conjs = conjuncts(where_pre)
-            lconj = [c for c in conjs if _side(c) == "L"]
-            rconj = [c for c in conjs if _side(c) == "R"]
-            if len(lconj) + len(rconj) == len(conjs):
-                def _keep(cs: list[Node]) -> Column:
-                    out = None
-                    for c in cs:
-                        e = F.coalesce(self._expr(c, ctx).cast("boolean"), F.lit(False))
-                        out = e if out is None else (out & e)
-                    return out
-
-                if lconj:
-                    # re-alias: withColumn drops the subquery alias the
-                    # qualified selects below rely on
-                    ldf = ldf.withColumn("__lkeep", _keep(lconj)).alias(left_alias)
-                    pair_keep_cols.append("__lkeep")
-                if rconj:
-                    rdf = rdf.withColumn("__rkeep", _keep(rconj)).alias(r_alias)
-                    pair_keep_cols.append("__rkeep")
-                lcols, rcols = list(ldf.columns), list(rdf.columns)
-                where_pre = None
-        # OVER(WHEN) trigger: gap-throttle compiles to the op's sequential
-        # last-hit gate; ANY OTHER boolean evaluates per raw arrival with
-        # the other stream's fields nil (isMatchCondition,
-        # window_op.go:757-784) — natively per side, packed as a __twhen
-        # flag the op reads when choosing trigger candidates (false rows
-        # remain frame MEMBERS)
-        throttle_spec = None
-        trig_flag_l = trig_flag_r = None
-        if w.trigger is not None:
-            throttle_spec, flag_node = self._split_trigger(w.trigger, l_long)
-            if flag_node is not None:
-                trig_flag_l = self._trigger_nil_other(
-                    flag_node, ctx, left_alias, lcols, r_alias
-                )
-                trig_flag_r = self._trigger_nil_other(
-                    flag_node, ctx, r_alias, rcols, left_alias
-                )
-        rflat = {c: f"__r_{c}" for c in rcols}
-        lsel = ldf.select(
-            F.lit("L").alias("__src"),
-            lu.cast("long").alias("__u"),
-            *[F.col(f"{left_alias}.{c}").alias(c) for c in lcols],
-            *[F.lit(None).cast(rdf.schema[c].dataType).alias(rflat[c]) for c in rcols],
-            *([trig_flag_l.alias("__twhen")] if trig_flag_l is not None else []),
-        )
-        rsel = rdf.select(
-            F.lit("R").alias("__src"),
-            ru.cast("long").alias("__u"),
-            *[F.lit(None).cast(ldf.schema[c].dataType).alias(c) for c in lcols],
-            *[F.col(f"{r_alias}.{c}").alias(rflat[c]) for c in rcols],
-            *([trig_flag_r.alias("__twhen")] if trig_flag_r is not None else []),
-        )
-        union = lsel.unionByName(rsel)
-        trigger_col = "__twhen" if trig_flag_l is not None else None
-        fm: dict[str, str] = {}
-        for c in lcols:
-            fm[f"{left_alias.lower()}.{c.lower()}"] = c
-        for c in rcols:
-            fm[f"{r_alias.lower()}.{c.lower()}"] = rflat[c]
-        for c in lcols:
-            if c not in rcols:
-                fm.setdefault(c.lower(), c)
-        for c in rcols:
-            if c not in lcols:
-                fm.setdefault(c.lower(), rflat[c])
-        ctx.flat_col_map = fm
-        agg_nodes: dict[str, FuncCall] = {}
-        for f in stmt.fields:
-            for a in self._find_aggs(f.expr):
-                agg_nodes.setdefault(canon(a), a)
-
-        _has_dims = bool(stmt.group.dims)
-        _has_aggs = (
-            bool(agg_nodes)
-            or _has_dims
-            or (having is not None and bool(self._find_aggs(having)))
-        )
-        pairs: list[tuple[str, str]] = []
-        non_equi_on = None   # residual filtered NATIVELY downstream (INNER content)
-        on_filter = None     # residual filtered IN-OP (outer / aggregated kinds)
-        on_residual_node = None  # deferred: compiled once _pd_auto exists
-        if j.kind != "cross":
-            pairs, residual = self._split_on_conjuncts(j.on, ctx, left_alias, r_alias)
-            if residual is not None:
-                if j.kind == "inner" and not _has_aggs:
-                    # INNER content: candidate pairs merge on the equi
-                    # subset (cross when none) and the residual condition
-                    # filters emitted rows natively — cheapest plan
-                    non_equi_on = residual
-                else:
-                    # outer kinds need unmatched-row tracking and
-                    # aggregates must count post-ON pairs: the residual
-                    # compiles to a pdeval lane the op evaluates on the
-                    # candidate pairs before null-extension
-                    # (join_operator.go per-kind match loops) — compiled
-                    # below via _pd_auto (single-side subtrees precompute
-                    # natively; only mixed glue stays in-op)
-                    on_residual_node = residual
-        lkeys = [p[0] for p in pairs]
-        rkeys = [rflat[p[1]] for p in pairs]
-
-        # (throttle_spec / trigger_col computed above, pre-pack; spec K is
-        # micros — __u is micros for both long-ms and timestamp columns)
-        specs: list[JoinAggSpec] = []
-        extra_left: list[str] = []
-        extra_right: list[str] = []
-
-        def owner_of(node: Node) -> str:
-            sides = set()
-            for ref in self._find_raw_cols(node):
-                k = (
-                    f"{ref.source.lower()}.{ref.name.lower()}"
-                    if ref.source
-                    else ref.name.lower()
-                )
-                flat = ctx.flat_col_map.get(k)
-                if flat is None:
-                    tgt = ctx.aliases.get(ref.name.lower()) if ref.source is None else None
-                    if tgt is not None:
-                        sides.add(owner_of(tgt))
-                        continue
-                    raise ValueError(f"unknown column {ref.name} in sliding join")
-                sides.add("R" if flat.startswith("__r_") else "L")
-            if len(sides) > 1:
-                return "M"  # mixed: evaluate on the merged frame in-op
-            return sides.pop() if sides else "L"
-
-        nonlocal_union = union
-        # NOTE: keying the stateful op by the equi-join key is NOT sound
-        # here — every arrival (any key) triggers a scan whose frame
-        # joins pairs across ALL keys, so both per-trigger aggregates and
-        # content multiplicity depend on cross-key triggers.  The single
-        # state partition mirrors the reference's per-rule process.
-        import warnings as _warnings
-
-        _warnings.warn(
-            "streaming sliding join: all rows route through ONE state "
-            "partition (the reference's single-process window+join chain); "
-            "use TUMBLING/HOPPING for the distributed bucket join.",
-            UserWarning,
-            stacklevel=6,
-        )
-        merged_cols: list[tuple] = []   # (name, pdeval closure) for in-op eval
-        merged_types: dict[str, T.DataType] = {}
-
-        # sides whose rows can arrive NULL-EXTENDED in the joined frame:
-        # a precomputed column from such a side is null there, which only
-        # matches the reference when the expression itself is null over
-        # an all-null row (see _nullrow_yields_null)
-        _ext_sides = {
-            "left": {"R"}, "right": {"L"}, "full": {"L", "R"}
-        }.get(j.kind, set())
-        _pc_n = [0]
-
-        def _pd_auto(node: Node, null_extend_sensitive: bool):
-            """pdeval compile with the single-side precompute fallback:
-            direct compile first (keeps existing plans byte-identical);
-            on UnsupportedExpr, rewrite maximal single-side subtrees into
-            native Catalyst columns buffered through the op and retry
-            with only the mixed-side glue in-op."""
-            nonlocal nonlocal_union
-            node = self._inline_aliases(node, ctx)
-            try:
-                return self._pd_closure(node, ctx, nonlocal_union, fm)
-            except NotImplementedError:
-                pass
-
-            def side_fn(n: Node) -> str:
-                try:
-                    return owner_of(n)
-                except Exception:
-                    return "M"
-
-            def allow(n: Node, side: str) -> bool:
-                if not null_extend_sensitive or side not in _ext_sides:
-                    return True
-                return self._nullrow_yields_null(n, ctx, nonlocal_union)
-
-            def attach(n: Node, side: str) -> ColumnRef:
-                nonlocal nonlocal_union
-                name = f"__pc{_pc_n[0]}"
-                _pc_n[0] += 1
-                nonlocal_union = nonlocal_union.withColumn(
-                    name, self._expr(n, ctx)
-                )
-                fm[name] = name
-                (extra_right if side == "R" else extra_left).append(name)
-                return ColumnRef(name=name)
-
-            node2 = self._rewrite_singleside(node, side_fn, attach, allow)
-            return self._pd_closure(node2, ctx, nonlocal_union, fm)
-
-        if on_residual_node is not None:
-            try:
-                # ON evaluates on candidate pairs BEFORE null-extension
-                # (join_operator.go match loops), so single-side
-                # precompute is always sound here
-                on_filter, _ = _pd_auto(on_residual_node, False)
-            except NotImplementedError as e:
-                raise NotImplementedError(
-                    f"streaming sliding {j.kind} join ON uses a "
-                    f"mixed-side expression outside the in-op subset "
-                    f"({e}); batch mode supports arbitrary conditions"
-                ) from None
-
-        def _merged_input(node: Node, name: str, what: str) -> None:
-            """Register a mixed-side expression as an in-op merged column."""
-            try:
-                fnc, dt = _pd_auto(node, True)
-            except NotImplementedError as e:
-                raise NotImplementedError(
-                    f"streaming sliding-join {what} uses a mixed-side "
-                    f"expression outside the in-op subset ({e}); batch "
-                    "mode supports it"
-                ) from None
-            merged_cols.append((name, fnc))
-            merged_types[name] = dt
-
-        def _agg_spec_arg(call: FuncCall, op: str):
-            if op not in self._JOIN_AGG_ARG_OPS:
-                return None
-            if op == "last_value":
-                # (col, ignoreNull) — funcs_agg.go:371
-                return bool(self._raw(call.args[1])) if len(call.args) > 1 else False
-            # percentile_cont/disc (col, p)
-            return float(self._raw(call.args[1]))
-
-        for i, (key, call) in enumerate(agg_nodes.items()):
-            op = self._JOIN_STREAM_AGG_OPS.get(call.name.lower())
-            if op is None:
-                raise NotImplementedError(
-                    f"{call.name} is unsupported over a streaming sliding join"
-                )
-            args = [a for a in call.args if not isinstance(a, Wildcard)]
-            if op in self._JOIN_AGG_ARG_OPS:
-                args = args[:1]
-            if not args:
-                in_col = None
-            else:
-                in_col = f"__in{i}"
-                side = owner_of(args[0])
-                if side == "M":
-                    _merged_input(args[0], in_col, "aggregate input")
-                else:
-                    nonlocal_union = nonlocal_union.withColumn(
-                        in_col, self._expr(args[0], ctx)
-                    )
-                    if side == "R":
-                        extra_right.append(in_col)
-                    else:
-                        extra_left.append(in_col)
-            specs.append(
-                JoinAggSpec(op, in_col, f"__agg{i}", _agg_spec_arg(call, op))
-            )
-            ctx.agg_map[key] = f"__agg{i}"
-
-        # HAVING aggregates: computed in-op — as regular spec outputs in
-        # aggregate mode, or replicated per content row (the whole frame
-        # shares the value, so a native filter gates the collection —
-        # HavingOp semantics) in content mode
-        having_specs: list[JoinAggSpec] = []
-        if having is not None:
-            for key, call in (
-                (canon(a), a) for a in self._find_aggs(having)
-            ):
-                if key in ctx.agg_map:
-                    continue
-                op = self._JOIN_STREAM_AGG_OPS.get(call.name.lower())
-                if op is None:
-                    raise NotImplementedError(
-                        f"{call.name} is unsupported over a streaming sliding join"
-                    )
-                args = [a for a in call.args if not isinstance(a, Wildcard)]
-                if op in self._JOIN_AGG_ARG_OPS:
-                    args = args[:1]
-                in_col = None
-                if args:
-                    in_col = f"__hin{len(having_specs)}"
-                    side = owner_of(args[0])
-                    if side == "M":
-                        _merged_input(args[0], in_col, "HAVING aggregate input")
-                    else:
-                        nonlocal_union = nonlocal_union.withColumn(
-                            in_col, self._expr(args[0], ctx)
-                        )
-                        if side == "R":
-                            extra_right.append(in_col)
-                        else:
-                            extra_left.append(in_col)
-                out_name = f"__hagg{len(having_specs)}"
-                having_specs.append(
-                    JoinAggSpec(op, in_col, out_name, _agg_spec_arg(call, op))
-                )
-                ctx.agg_map[key] = out_name
-            if not agg_nodes and not sub_dim_info:
-                # content mode: a raw column in HAVING reads the
-                # COLLECTION's value = its FIRST joined row
-                # (HavingOp GroupRange over the whole window ->
-                # aggRow.Value -> Content[0], having_operator.go:40-56 +
-                # row.go:743-748) — attach first-of-frame columns and
-                # resolve the refs through them in the native gate below
-                for n_i, ref in enumerate(
-                    {canon(r): r for r in self._find_raw_cols(having)}.values()
-                ):
-                    key = canon(ref)
-                    if key in ctx.agg_map or key in ctx.dim_map or (
-                        ref.source is None and ref.name.lower() in ctx.aliases
-                    ):
-                        continue
-                    k = (
-                        f"{ref.source.lower()}.{ref.name.lower()}"
-                        if ref.source
-                        else ref.name.lower()
-                    )
-                    flat = ctx.flat_col_map.get(k)
-                    if flat is None:
-                        raise ValueError(f"unknown column {ref.name} in HAVING")
-                    out_name = f"__hraw{n_i}"
-                    having_specs.append(JoinAggSpec("first", flat, out_name))
-                    ctx.dim_map[key] = out_name
-
-        # WHERE residuals the per-side keep flags could not express
-        # (mixed-side conjuncts, OUTER kinds over aggregated joins) — and
-        # content-mode WHERE when HAVING attach-aggs exist (the gate must
-        # aggregate the WHERE-pruned frame, FilterPlan < HavingPlan):
-        # compile to a pdeval lane the op applies to the JOINED rows
-        # (incl. null-extended ones) before aggregation/attach
-        where_filter = None
-        _where_in_op = where_pre is not None and (
-            agg_nodes or sub_dim_info or hit_conjs
-            or (having_specs and not agg_nodes and not sub_dim_info)
-        )
-        if _where_in_op:
-            try:
-                where_filter, _ = _pd_auto(where_pre, True)
-            except NotImplementedError as e:
-                raise NotImplementedError(
-                    f"WHERE over this streaming sliding join needs in-op "
-                    f"evaluation but uses a mixed-side expression outside "
-                    f"the in-op subset ({e}); batch mode supports it"
-                ) from None
-            where_pre = None
-
-        # last_hit_count() conjuncts gate the emission sequence in-op:
-        # every row evaluated (post plain conjuncts) increments the
-        # counter, pass or fail (funcs_global_state.go IncrCounter on
-        # each uncached evaluation); the carried count persists in state
-        hit_filter = None
-        if hit_conjs:
-            if agg_nodes or sub_dim_info:
-                # analyzer_test.go:131-132
-                raise NotImplementedError(
-                    "function last_hit_count is not allowed in an "
-                    "aggregate query"
-                )
-            from ekuiper_spark.streaming.pdeval import compile_pd
-
-            hnode = self._inline_aliases(conjoin(hit_conjs), ctx)
-            int_types2 = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-            hint_cols = {
-                f2.name
-                for f2 in nonlocal_union.schema.fields
-                if isinstance(f2.dataType, int_types2)
-            } | {"__lhc"}
-
-            def _hresolve(ref: ColumnRef) -> Optional[str]:
-                k = (
-                    f"{ref.source.lower()}.{ref.name.lower()}"
-                    if ref.source
-                    else ref.name.lower()
-                )
-                return fm.get(k)
-
-            def _hspecial(call2: FuncCall) -> Optional[str]:
-                if call2.name.lower() in ("last_hit_count", "last_agg_hit_count"):
-                    return "__lhc"
-                return None
-
-            try:
-                hit_filter = compile_pd(
-                    hnode, _hresolve, int_cols=hint_cols, special_call=_hspecial
-                )
-            except NotImplementedError as e:
-                raise NotImplementedError(
-                    f"last_hit_count conjunct over a streaming sliding "
-                    f"join uses an expression outside the in-op subset "
-                    f"({e})"
-                ) from None
-
-        if agg_nodes or sub_dim_info:
-            # GROUP BY dims: one row per (trigger, dim value), registered
-            # before raw-ref resolution so dim refs read the group key.
-            # Mixed-side dims ("?") compile to pdeval closures evaluated
-            # on the merged frame in-op.
-            join_subgroups = []
-            for d, nm, sd in sub_dim_info:
-                if sd == "L":
-                    col = nm
-                elif sd == "R":
-                    col = rflat[nm]
-                else:
-                    col = nm
-                    _merged_input(d, nm, "GROUP BY dim")
-                join_subgroups.append(col)
-                ctx.dim_map[canon(d)] = col
-            # raw columns beside aggregates: FIRST joined row's value
-            # (project-over-grouped, same rule as the batch path; with
-            # dims, first of the GROUP); HAVING raw refs follow the same
-            # first-of-group rule in aggregate context
-            raw_refs: dict[str, ColumnRef] = {}
-            for f in stmt.fields:
-                for ref in self._find_raw_cols(f.expr):
-                    raw_refs.setdefault(canon(ref), ref)
-            if having is not None:
-                for ref in self._find_raw_cols(having):
-                    raw_refs.setdefault(canon(ref), ref)
-            for n_i, (key, ref) in enumerate(raw_refs.items()):
-                if key in ctx.agg_map or key in ctx.dim_map or (
-                    ref.source is None and ref.name.lower() in ctx.aliases
-                ):
-                    continue
-                k = (
-                    f"{ref.source.lower()}.{ref.name.lower()}"
-                    if ref.source
-                    else ref.name.lower()
-                )
-                flat = ctx.flat_col_map.get(k)
-                if flat is None:
-                    continue
-                out_name = f"__fr{n_i}"
-                specs.append(JoinAggSpec("first", flat, out_name))
-                ctx.dim_map[key] = out_name
-            union = nonlocal_union
-            out = sliding_join_stream(
-                union,
-                length=length_us,
-                how=j.kind,
-                lkeys=lkeys,
-                rkeys=rkeys,
-                left_cols=lcols + extra_left,
-                right_cols=[rflat[c] for c in rcols] + extra_right,
-                aggs=specs + having_specs,
-                delay=delay_us,
-                throttle=throttle_spec,
-                trigger_col=trigger_col,
-                pair_keep=[
-                    ("__lkeep" if c == "__lkeep" else rflat["__rkeep"])
-                    for c in pair_keep_cols
-                ] or None,
-                subgroups=join_subgroups,
-                merged_cols=merged_cols or None,
-                merged_types=merged_types or None,
-                on_filter=on_filter,
-                where_filter=where_filter,
-            )
-            ctx.post_agg = True
-        else:
-            out = sliding_join_stream(
-                nonlocal_union,
-                length=length_us,
-                how=j.kind,
-                lkeys=lkeys,
-                rkeys=rkeys,
-                left_cols=lcols + extra_left,
-                right_cols=[rflat[c] for c in rcols] + extra_right,
-                aggs=None,
-                delay=delay_us,
-                throttle=throttle_spec,
-                trigger_col=trigger_col,
-                attach_aggs=having_specs or None,
-                cross_pairs=non_equi_on is not None and not lkeys,
-                merged_cols=merged_cols or None,
-                merged_types=merged_types or None,
-                on_filter=on_filter,
-                where_filter=where_filter,
-                hit_count_filter=hit_filter,
-            )
-        out = out.withColumn(
-            "window",
-            F.struct(
-                F.timestamp_micros(F.col("__ws")).alias("start"),
-                F.timestamp_micros(F.col("__we")).alias("end"),
-            ),
-        ).drop("__ws", "__we")
-        ctx.window_col = "window"
-        ctx.window_bounds_ms = l_long
-        ctx.event_col = "window.end"
-        if non_equi_on is not None:
-            out = out.filter(self._expr(non_equi_on, ctx))
-        if where_pre is not None:
-            out = out.filter(self._expr(where_pre, ctx))
-        if having is not None:
-            # resolve aggregate calls to the in-op output / attached
-            # columns (agg_map lookups are post_agg-gated)
-            was_post = ctx.post_agg
-            ctx.post_agg = True
-            out = out.filter(self._expr(having, ctx))
-            ctx.post_agg = was_post
-            stmt.having = None  # consumed; the statement is finalized here
-        out = self._project(out, stmt, ctx)
-        ctx.finalized = True
-        return out
-
-    def _count_window_join(
+    def _window_join_chain(
         self, ldf: DataFrame, stmt: SelectStatement, ctx: TranslateCtx,
-        left_alias: str, joins: list, sliding_w=None,
+        left_alias: str, joins: list,
     ) -> DataFrame:
-        """COUNT window over a multi-stream join (planner.go:734-735
-        allows "a time window or count window"; fvt/rule_test.go
-        TestJoinWithLookup): the window op batches n tuples from ALL
-        streams in arrival order, JoinOp joins each full window's
-        per-emitter groups left-to-right (join_operator.go), then any
-        scan/lookup sides join as ungated side inputs.
+        """Windowed join of two or more streams in the reference's
+        window-then-join order (planner.go:734-735 allows "a time window
+        or count window"; fvt/rule_test.go TestJoinWithLookup): the window
+        op batches tuples from ALL streams, JoinOp joins each window's
+        per-emitter groups left-to-right (evalJoinSets,
+        join_operator.go:282-398, each step with its own ON/kind), then
+        any scan/lookup sides join as ungated side inputs.
 
-        Spark mapping: the stream sides pack into one tagged union; batch
-        assigns window ids natively and joins each window DISTRIBUTED by
-        wid (joinstate.count_join_batch); streaming runs the reference's
-        single-process window+join chain in one stateful op
-        (count_join_stream, single state partition, warned).  Equi-ON
-        only — the keys are precomputed natively per side.
+        Spark mapping: the stream sides pack into one tagged union
+        (``__src`` = S0..Sn, side i>0 columns renamed ``__s<i>_<c>``).
+        - COUNT windows: batch assigns window ids natively and joins each
+          window DISTRIBUTED by wid (joinstate.count_join_batch);
+          streaming runs the chain in one stateful op
+          (count_join_stream).
+        - streaming SLIDING windows: every arrival triggers a frame scan
+          in one stateful op (sliding_join_chain_stream), with OVER(WHEN)
+          triggers (per-side nil-other flags + gap-throttle), window
+          delay and last_hit_count emission gates.  Batch sliding joins
+          take _batch_sliding_join instead.
+        Streaming ops run in a single state partition (the reference's
+        single-process window+join chain, warned).
 
-        ``sliding_w`` switches the WINDOW mechanics: the same N-side
-        packing / chain-descriptor compilation drives the streaming
-        3+-stream SLIDINGWINDOW join (sliding_join_chain_stream — every
-        arrival triggers a frame scan, evalJoinSets left-deep per
-        window; batch 3+ keeps its native lane, _batch_sliding_join),
-        including OVER(WHEN) triggers (per-side nil-other flags +
-        gap-throttle) and last_hit_count emission gates.
-
-        Narrow shapes raised here (batch non-count paths support them):
-        WHERE/HAVING over the joined windows, GROUP BY dims, non-equi ON.
+        ON: equi conjuncts precompute natively per side; residuals
+        compile to pdeval lanes over the candidate pairs.  WHERE/HAVING
+        over the joined windows, GROUP BY dims and mixed-side
+        expressions evaluate in-op (single-side subtrees precompute
+        natively); expressions outside the pdeval subset raise.
         """
         import warnings
 
@@ -2548,7 +1818,8 @@ class Translator:
         )
 
         w = stmt.group.window
-        if sliding_w is not None:
+        sliding = w.kind == "sliding"
+        if sliding:
             _lbl = "sliding-window join chain"
             length_us = int(w.args[0] * UNIT_SECONDS[w.unit] * 1_000_000)
             delay_us = (
@@ -2570,14 +1841,14 @@ class Translator:
                 stmt.where, ctx.aliases
             )
             if hit_conjs:
-                if sliding_w is None:
+                if not sliding:
                     raise NotImplementedError(
                         f"last_hit_* conjuncts over a {_lbl} are unsupported"
                     )
                 # sliding chain: last_hit_count gates the emission
-                # sequence in-op (compiled below once fm exists, same as
-                # the two-stream lane); last_hit_time over a JOINED
-                # collection is a reference error (row.go:549-556)
+                # sequence in-op (compiled below once fm exists);
+                # last_hit_time over a JOINED collection is a reference
+                # error (row.go:549-556)
                 if any("time" in (canon(h) or "") for h in hit_conjs):
                     raise ValueError(
                         "call last_hit_time error: cannot get current time "
@@ -2594,9 +1865,8 @@ class Translator:
                     f"{_lbl}: {j.kind} join is unsupported"
                 )
         sl_long = False
-        if sliding_w is not None:
+        if sliding:
             # epoch-ms LEFT event column → window bounds render as ms
-            # (same convention as the two-stream lane's _ev)
             d0 = self.catalog.get(stmt.source)
             ec0 = self.event_col or (d0.timestamp_col if d0 else None) or (
                 "ts" if "ts" in ldf.columns else None
@@ -2607,10 +1877,9 @@ class Translator:
         # OVER(WHEN) triggers on the sliding chain: gap-throttle conjunct
         # -> the op's sequential lastHit gate; any other boolean -> a
         # per-side __twhen flag with ALL other streams' fields nil
-        # (isMatchCondition, window_op.go:757-784 — same decomposition as
-        # the two-stream lane)
+        # (isMatchCondition, window_op.go:757-784)
         sl_throttle = sl_flag = None
-        if sliding_w is not None and w.trigger is not None:
+        if sliding and w.trigger is not None:
             sl_throttle, sl_flag = self._split_trigger(w.trigger, sl_long)
         if self.streaming:
             warnings.warn(
@@ -2632,7 +1901,7 @@ class Translator:
                 if isinstance(sdf.schema[ec].dataType, T.LongType):
                     return col * 1000
                 return epoch_us(col)
-            if sliding_w is not None:
+            if sliding:
                 # sliding frames are event-time ranges — arrival-order
                 # fallbacks would silently misplace the lookback
                 raise ValueError(
@@ -3173,7 +2442,7 @@ class Translator:
             merged_types=cw_merged_types or None,
             where_filter=cw_where_filter,
         )
-        if sliding_w is not None:
+        if sliding:
             out = sliding_join_chain_stream(
                 union, length=length_us, delay=delay_us,
                 throttle=sl_throttle,
@@ -3283,13 +2552,6 @@ class Translator:
         """
         group = stmt.group
         window = group.window if group else None
-        if window is not None and window.kind == "sliding" and self.streaming:
-            # per-event sliding joins have no bucket for Spark's join
-            # state eviction — route through the reference-style stateful
-            # window+join chain (streaming/joinstate.py; 3+-stream
-            # statements were routed to the N-side chain compiler by
-            # _load_sources before reaching here)
-            return self._streaming_sliding_join(df, stmt, j, ctx, left_alias)
         if window is None or window.kind not in ("tumbling", "hopping"):
             raise NotImplementedError(
                 "a time window is required to join multiple streams "
@@ -5945,6 +5207,22 @@ class Translator:
         args = [a for a in call.args if not isinstance(a, Wildcard)]
         cols = [self._expr(a, ctx) for a in args]
         raw = [self._raw(a) for a in args]
+        if name in ("collect", "last_value") and ctx.join_sliding_keys and over is None and cols:
+            # batch sliding JOIN: a frame's rows reach the aggregate in no
+            # defined order after the membership joins — order them by
+            # __rowu, the reference's join scan order (what the streaming
+            # chain op iterates), so collect/last_value are deterministic
+            entries = F.array_sort(
+                F.collect_list(F.struct(F.col("__rowu").alias("o"), cols[0].alias("v"))),
+                lambda a, b: F.when(a["o"] < b["o"], -1).when(a["o"] > b["o"], 1).otherwise(0),
+            )
+            if name == "collect" or (len(raw) > 1 and raw[1]):
+                # collect skips nulls (collect_list); last_value(c, true)
+                # ignores them
+                entries = F.filter(entries, lambda e: e["v"].isNotNull())
+            if name == "collect":
+                return F.transform(entries, lambda e: e["v"])
+            return F.try_element_at(entries, F.lit(-1))["v"]
         # NB only plain avg: the reference's inc_avg accumulates float64
         # (funcs_inc_agg.go:105 ToFloat64 CONVERT_ALL; its own test pins
         # inc_avg(1), inc_avg(3) -> 2.0), so it does NOT integer-divide

@@ -2,10 +2,12 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# import the checkout this file lives in, not whichever copy is installed
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from ekuiper_spark import Catalog, get_spark
 

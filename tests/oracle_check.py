@@ -12,10 +12,11 @@ from __future__ import annotations
 import math
 import os
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entrymod
 from ekuiper_spark import get_spark

@@ -226,6 +226,57 @@ def test_sliding_join_checkpoint_recovery(spark, tmp_path):
     assert a == b, f"join recovery drift: {len(a)} vs {len(b)} rows"
 
 
+def test_sliding_join_refuses_foreign_side_tags(spark, tmp_path):
+    """A sliding-join checkpoint whose buffered rows carry side tags the
+    op does not own is refused on restart, not misread.  Two-stream
+    joins once tagged their sides L/R; Spark's state-schema check
+    ignores field names, so such a checkpoint loads, and its rows would
+    silently drop out of every S0/S1 frame for one window length."""
+    from pyspark.errors import StreamingQueryException
+
+    from ekuiper_spark.streaming.joinstate import sliding_join_chain_stream
+
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ck")
+
+    def feed(i, rows):
+        tmp = tmp_path / f"w{i}"
+        spark.createDataFrame(rows, "k long, u long").coalesce(1).write.parquet(str(tmp))
+        os.makedirs(src, exist_ok=True)
+        dst = os.path.join(src, f"{i}.parquet")
+        shutil.copy(glob.glob(str(tmp / "*.parquet"))[0], dst)
+        os.utime(dst, (time.time() - 600 + i,) * 2)
+
+    def run(tags):
+        # even k on the first side, odd k on the second; the sides join
+        # on k // 2
+        s = spark.readStream.schema("k long, u long").parquet(src)
+        first = F.col("k") % 2 == 0
+        union = s.select(
+            F.when(first, F.lit(tags[0])).otherwise(F.lit(tags[1])).alias("__src"),
+            F.col("u").alias("__u"),
+            F.when(first, F.col("k") / 2).cast("long").alias("a"),
+            F.when(~first, (F.col("k") - 1) / 2).cast("long").alias("b"),
+        )
+        out = sliding_join_chain_stream(
+            union, length=10_000_000,
+            sides=[(tags[0], ["a"]), (tags[1], ["b"])],
+            joins=[{"how": "inner", "lkeys": ["a"], "rkeys": ["b"]}],
+        )
+        q = (
+            out.writeStream.format("parquet").option("path", str(tmp_path / "out"))
+            .option("checkpointLocation", ckpt).outputMode("append")
+            .trigger(availableNow=True).start()
+        )
+        q.awaitTermination()
+
+    feed(0, [(0, 1_000_000), (1, 2_000_000)])
+    run(("L", "R"))
+    feed(1, [(2, 3_000_000), (3, 4_000_000)])
+    with pytest.raises(StreamingQueryException, match="predates the S0..Sn side layout"):
+        run(("S0", "S1"))
+
+
 def test_streaming_dedup_checkpoint_recovery(spark, tmp_path):
     """dropDuplicatesWithinWatermark digests survive the restart: a
     duplicate of a pre-crash document arriving after recovery is still

@@ -884,6 +884,35 @@ def test_streaming_sliding_join_general_trigger_conditions(spark, tmp_path):
         assert got == want and len(want) > 0, sql
 
 
+def test_batch_sliding_join_pins_no_cached_relation(spark, tmp_path):
+    """Compiling and running a batch sliding join leaves no persisted
+    relation behind: a long-lived session would otherwise pin one more
+    cached trigger relation per compile."""
+    base = str(tmp_path / "pin")
+    spark.createDataFrame(
+        [("red", 50, 1541152486013), ("blue", 58, 1541152486822)],
+        "color string, size long, ts long",
+    ).coalesce(1).write.parquet(base + "/a")
+    spark.createDataFrame(
+        [(25.5, 65, 1541152486013), (27.5, 59, 1541152486823)],
+        "temp double, hum long, ts long",
+    ).coalesce(1).write.parquet(base + "/b")
+    cat = Catalog()
+    for nm, sub in (("demo", "/a"), ("demo1", "/b")):
+        cat.register_df(nm, spark.read.parquet(base + sub))
+        cat.register(StreamDef(name=nm, kind="stream"))
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    rows = compile_sql(
+        spark,
+        "SELECT count(*) AS c FROM demo INNER JOIN demo1 ON demo.ts = demo1.ts "
+        "GROUP BY SLIDINGWINDOW(ss, 1)",
+        cat,
+        order_cols=["ts"],
+    ).collect()
+    assert sorted(r["c"] for r in rows) == [1, 1, 1, 1]
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
 def test_batch_sliding_join_three_streams_duckdb(spark, tmp_path):
     """r11: 3-stream BATCH sliding-window joins chain left-deep like the
     reference's evalJoinSets (join_operator.go:282-398) — every arrival

@@ -1466,8 +1466,10 @@ class Translator:
             trig = self._sequential_throttle(
                 trig.select("__tu", "__ttid"), "__tu", k_us, ge
             )
-        # BOTH membership joins read this relation; the (u, 1..k) ids
-        # above are identical on every recompute, so it needs no cache
+        # BOTH membership joins read this relation and recompute it past
+        # the shared scan exchange (ReusedExchange): the (u, 1..k) ids and
+        # the throttle's (u, id)-ordered scan give the same triggers on
+        # every recompute, so it needs no cache
         triggers = trig.select(
             "__tu",
             F.struct(F.col("__tu").alias("u"), F.col("__ttid").alias("t0")).alias("__tkey"),
@@ -1805,7 +1807,9 @@ class Translator:
         single-process window+join chain, warned).
 
         ON: equi conjuncts precompute natively per side; residuals
-        compile to pdeval lanes over the candidate pairs.  WHERE/HAVING
+        compile to pdeval lanes over the candidate pairs (an INNER
+        content-mode residual outside that subset filters the op's
+        output natively instead).  WHERE/HAVING
         over the joined windows, GROUP BY dims and mixed-side
         expressions evaluate in-op (single-side subtrees precompute
         natively); expressions outside the pdeval subset raise.
@@ -2325,13 +2329,44 @@ class Translator:
             fnc, dt = _cw_closure(d, "GROUP BY dim")
             cw_merged_cols.append((kn, fnc))
             cw_merged_types[kn] = dt
-        for spec2 in join_specs:
+        # a residual outside the in-op subset can still filter natively
+        # after the op when nothing in-op reads the post-ON pairs (content
+        # mode, no HAVING/WHERE/last_hit_count lanes), its step is INNER
+        # and no later step is RIGHT/FULL: the op then emits the step's
+        # candidate pairs, and a filter on earlier sides commutes with
+        # later inner/left/cross steps
+        native_ok = not (agg_nodes or cw_sub_info or having_specs or hit_conjs)
+        native_on: list[Node] = []
+        for s_i, spec2 in enumerate(join_specs):
             rnode = spec2.pop("__residual", None)
             avail = spec2.pop("__avail", None)
-            if rnode is not None:
+            if rnode is None:
+                continue
+            try:
                 spec2["on_fn"], _ = _cw_closure(
                     rnode, "non-equi ON", avail, null_extend_sensitive=False
                 )
+            except NotImplementedError:
+                refs = self._find_raw_cols(self._inline_aliases(rnode, ctx))
+                if not (
+                    native_ok
+                    and spec2["how"] == "inner"
+                    and all(
+                        fm.get(
+                            f"{r.source.lower()}.{r.name.lower()}"
+                            if r.source else r.name.lower()
+                        ) in avail
+                        for r in refs
+                    )
+                    and all(
+                        s["how"] in ("inner", "left", "cross")
+                        for s in join_specs[s_i + 1:]
+                    )
+                ):
+                    raise
+                if not spec2["lkeys"]:
+                    spec2["how"] = "cross"
+                native_on.append(rnode)
         cw_where_filter = None
         if where_pre is not None and (
             agg_nodes or cw_sub_info
@@ -2472,6 +2507,8 @@ class Translator:
                 k: (f"__cwj.{v}" if v in out_cols else v)
                 for k, v in ctx.flat_col_map.items()
             }
+        for rnode in native_on:
+            out = out.filter(self._expr(rnode, ctx))
 
         # trailing scan/lookup sides: ungated side-input joins on the
         # joined window content (lookup_node.go semantics)
@@ -4095,8 +4132,13 @@ class Translator:
 
         schema = base.schema
 
+        # a stable sort with the id as tie-break keeps the same row among
+        # equal values on every recompute (the shuffle delivers rows in no
+        # fixed order)
+        order = [value_col] + (["__ttid"] if "__ttid" in schema.names else [])
+
         def scan(_key, pdf: "pd.DataFrame"):
-            pdf = pdf.sort_values(value_col).reset_index(drop=True)
+            pdf = pdf.sort_values(order, kind="mergesort").reset_index(drop=True)
             last = 0  # reference initial lastHit = Go zero value
             keep = []
             for u in pdf[value_col]:
@@ -5211,10 +5253,10 @@ class Translator:
             # batch sliding JOIN: a frame's rows reach the aggregate in no
             # defined order after the membership joins — order them by
             # __rowu, the reference's join scan order (what the streaming
-            # chain op iterates), so collect/last_value are deterministic
-            entries = F.array_sort(
-                F.collect_list(F.struct(F.col("__rowu").alias("o"), cols[0].alias("v"))),
-                lambda a, b: F.when(a["o"] < b["o"], -1).when(a["o"] > b["o"], 1).otherwise(0),
+            # chain op iterates), ties by value, so collect/last_value are
+            # deterministic
+            entries = F.sort_array(
+                F.collect_list(F.struct(F.col("__rowu").alias("o"), cols[0].alias("v")))
             )
             if name == "collect" or (len(raw) > 1 and raw[1]):
                 # collect skips nulls (collect_list); last_value(c, true)

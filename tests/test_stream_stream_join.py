@@ -525,6 +525,48 @@ def test_streaming_sliding_join_non_equi_inner(spark, tmp_path):
     assert got == want and len(want) > 0
 
 
+def test_streaming_sliding_join_mixed_side_call_on(spark, tmp_path):
+    """An INNER content join whose ON mixes both sides inside a call the
+    in-op lane cannot evaluate (startswith): the op emits the candidate
+    pairs (equi subset, or cross when none) and the residual filters
+    natively downstream — same rows as the batch join."""
+    base = str(tmp_path / "msc")
+    spark.createDataFrame(
+        [("red", 50, 1541152486013), ("blue", 58, 1541152486822),
+         ("red", 49, 1541152487632), ("yellow", 51, 1541152488442),
+         ("red", 48, 1541152489252)],
+        "color string, size long, ts long",
+    ).coalesce(1).write.parquet(base + "/a")
+    spark.createDataFrame(
+        [(25.5, "re", 1541152486013), (27.5, "bl", 1541152486822),
+         (28.1, "ye", 1541152487632), (27.4, "ye", 1541152488442),
+         (25.5, "r", 1541152489252)],
+        "temp double, prefix string, ts long",
+    ).coalesce(1).write.parquet(base + "/b")
+    scat, bcat = Catalog(), Catalog()
+    for nm, sub, schema in (
+        ("demo", "/a", "color string, size long, ts long"),
+        ("demo1", "/b", "temp double, prefix string, ts long"),
+    ):
+        scat.register_df(nm, spark.readStream.schema(schema).parquet(base + sub))
+        scat.register(StreamDef(name=nm, kind="stream"))
+        bcat.register_df(nm, spark.read.parquet(base + sub))
+        bcat.register(StreamDef(name=nm, kind="stream"))
+    for on in (
+        "demo.ts = demo1.ts AND startswith(demo.color, demo1.prefix)",
+        "startswith(demo.color, demo1.prefix)",
+    ):
+        sql = (
+            f"SELECT color, temp, prefix FROM demo INNER JOIN demo1 ON {on} "
+            "GROUP BY SLIDINGWINDOW(ss, 1)"
+        )
+        got, want = _stream_vs_batch(
+            spark, sql, scat, bcat, ["color", "temp", "prefix"]
+        )
+        assert got == want and len(want) > 0, on
+        assert all(c.startswith(p) for c, _t, p in got), on
+
+
 def test_streaming_sliding_join_trigger_throttle(spark, tmp_path):
     """OVER (WHEN ts - last_hit_time() > K): the gap-throttle gates which
     arrivals trigger, with last-hit advancing on emission."""
@@ -911,6 +953,82 @@ def test_batch_sliding_join_pins_no_cached_relation(spark, tmp_path):
     ).collect()
     assert sorted(r["c"] for r in rows) == [1, 1, 1, 1]
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
+def test_batch_sliding_join_gap_throttle_duckdb(spark, tmp_path):
+    """A gap-throttled batch sliding join with more than 16 trigger rows
+    and equal timestamps across the streams: the throttle keeps one of
+    the equal-timestamp triggers, and both membership joins must see the
+    same one (a frame is otherwise lost under INNER or null-extended
+    under LEFT).  Pinned against a DuckDB oracle over the kept trigger
+    times."""
+    import duckdb
+
+    base = str(tmp_path / "gth")
+    t0 = 1541152486000
+    a_rows = [(i, t0 + 300 * i) for i in range(18)]
+    b_rows = [(60 + i, t0 + 300 * i) for i in range(0, 18, 2)] + [
+        (99, t0 + 300 * i + 150) for i in range(1, 18, 4)
+    ]
+    spark.createDataFrame(a_rows, "size long, ts long").coalesce(1).write.parquet(base + "/a")
+    spark.createDataFrame(b_rows, "hum long, ts long").coalesce(1).write.parquet(base + "/b")
+    cat = Catalog()
+    for nm, sub in (("demo", "/a"), ("demo1", "/b")):
+        cat.register_df(nm, spark.read.parquet(base + sub))
+        cat.register(StreamDef(name=nm, kind="stream"))
+
+    # the sequential gap-throttle over the merged arrivals: a trigger
+    # fires when its time exceeds the last fired one by more than 500 ms
+    kept, last = [], 0
+    for u in sorted(ts for _v, ts in a_rows + b_rows):
+        if u - last > 500:
+            kept.append(u)
+            last = u
+    con = duckdb.connect()
+    for nm, sub in (("a", "/a"), ("b", "/b")):
+        con.execute(
+            f"CREATE VIEW {nm} AS SELECT * FROM read_parquet('{base}{sub}/*.parquet')"
+        )
+    con.execute("CREATE TABLE trig (tu BIGINT)")
+    con.executemany("INSERT INTO trig VALUES (?)", [(u,) for u in kept])
+    for kind in ("INNER", "LEFT"):
+        sql = (
+            "SELECT window_end() AS we, count(*) AS c, count(hum) AS ch "
+            f"FROM demo {kind} JOIN demo1 ON demo.ts = demo1.ts "
+            "GROUP BY SLIDINGWINDOW(ss, 1) OVER (WHEN ts - last_hit_time() > 500)"
+        )
+        with pytest.warns(UserWarning):
+            df = compile_sql(spark, sql, cat, order_cols=["ts"])
+        got = sorted((r["we"], r["c"], r["ch"]) for r in df.collect())
+        want = sorted(
+            tuple(r) for r in con.execute(
+                "SELECT trig.tu, count(*), count(b.hum) FROM trig "
+                "JOIN a ON a.ts BETWEEN trig.tu - 1000 AND trig.tu "
+                f"{kind} JOIN b ON b.ts = a.ts "
+                "AND b.ts BETWEEN trig.tu - 1000 AND trig.tu "
+                "GROUP BY trig.tu"
+            ).fetchall()
+        )
+        assert got == want and len(want) > 5, kind
+
+
+def test_sequential_throttle_tie_break_ignores_arrival_order(spark):
+    """Among equal-timestamp triggers the gap-throttle keeps the lowest
+    __ttid, whatever order the rows reach it in: both membership joins
+    of a batch sliding join recompute the throttle and must keep the
+    same trigger."""
+    from ekuiper_spark.translator import Translator
+
+    tr = Translator(spark, Catalog())
+    rows = [(u, k) for u in range(0, 6000, 200) for k in (3, 2, 1)]
+    got = {}
+    for name, rs in (("asc", sorted(rows)), ("desc", rows)):
+        df = spark.createDataFrame(rs, "__tu long, __ttid long").coalesce(1)
+        with pytest.warns(UserWarning):
+            out = tr._sequential_throttle(df, "__tu", 500, False)
+        got[name] = sorted(tuple(r) for r in out.collect())
+    assert got["asc"] == got["desc"]
+    assert len(got["asc"]) > 5 and all(t == 1 for _u, t in got["asc"])
 
 
 def test_batch_sliding_join_three_streams_duckdb(spark, tmp_path):

@@ -91,6 +91,13 @@ def _star_round(edges: DataFrame, small: bool) -> DataFrame:
     )
 
 
+def _release_checkpoint(df: DataFrame) -> None:
+    """Free the persisted RDD behind a localCheckpoint()ed frame
+    (``DataFrame.unpersist`` does not reach it: the checkpoint is a
+    LogicalRDD, not a cache-manager entry)."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -128,6 +135,7 @@ def connected_components(
             .filter(F.col("count") == 1)
             .take(1)
         )
+        _release_checkpoint(edges)  # superseded by this round's edges
         edges = after_small
         if not changed:
             break

@@ -1,23 +1,34 @@
 """Custom stateful streaming operators via applyInPandasWithState.
 
-The reference implements count/state/sliding windows and analytic funcs as
-stateful Go operators (internal/topo/node/window_op.go:520-568 count
-windows, window_op.go:593-619 sliding, window_v2_op.go:124-247 state
-windows; funcs_analytic.go lag state).  Spark has no native count/state
-window, so the streaming path uses applyInPandasWithState: state carries
-the open-window buffer between micro-batches; complete windows emit, the
-trailing partial stays buffered (exactly the reference's emit-on-full
-behavior).
+The reference implements count/state/session/sliding windows as stateful
+Go operators (internal/topo/node/window_op.go:304-347 sessions, :520-568
+count windows, :593-619 sliding; window_v2_op.go:124-247 state windows).
+Spark has no native count/state window, so the streaming path uses
+applyInPandasWithState: state carries the open-window buffer between
+micro-batches; complete windows emit, the trailing partial stays buffered
+(the reference's emit-on-full behavior).
 
-The core is :func:`window_agg_stream` — a *generic* stateful window
-operator parameterized by window kind and a list of :class:`AggSpec`.  The
-translator computes aggregate *input expressions* natively (Catalyst,
-upstream of the stateful op) and this operator only buffers + slices +
-reduces with vectorized numpy/pandas — no per-row Python loops:
+The core is :func:`window_agg_stream`, one operator parameterized by
+window kind and a list of :class:`AggSpec`.  The translator computes
+aggregate *input expressions* natively (Catalyst, upstream of the
+stateful op); each kind's function only buffers rows and cuts windows.
+Every cut window then goes through one helper, ``reduce_window``, that
+reduces it and appends its rows to the output (content, GROUP BY
+subgroup and scalar modes).  Two fast paths reduce many windows at once:
 
-- count windows reduce via ``ndarray.reshape(-1, n)`` + axis reductions;
-- sliding windows use pandas time-based ``rolling`` (C implementation);
-- state windows loop per *window* (not per row), slicing numpy arrays.
+- count windows without content, WHERE or subgroups reduce via
+  ``ndarray.reshape(-1, n)`` + axis reductions;
+- aggregated sliding windows use pandas time-based ``rolling`` (no delay)
+  or prefix sums and a sparse table (delay / watermark-gated).
+
+Two scans stay per row, over one key's rows of one micro-batch: the
+session close scan (``_session_bounds``; the cap tick depends on the
+running session start) and the sliding gap throttle (``_gap_gate``;
+lastHit advances only on hits).
+
+Sliding ties: ``rolling`` bounds equal timestamps by row position, so a
+trigger's frame holds the rows up to itself; the ``searchsorted`` frames
+(delay, subgroups, frame content) hold every row with the same timestamp.
 
 Scale note: state is keyed — a global count/sliding window (the
 reference's semantics, single-process) uses one key and is inherently
@@ -27,6 +38,8 @@ fires on the global path (see ``_warn_global``).
 
 from __future__ import annotations
 
+import json
+import sys
 import warnings
 from dataclasses import dataclass
 from typing import Iterator, Optional, Sequence
@@ -77,7 +90,6 @@ __all__ = [
     "count_window_stream",
     "state_window_stream",
     "sliding_window_stream",
-    "lag_stream",
 ]
 
 
@@ -134,6 +146,9 @@ def _warn_global(kind: str) -> None:
 # --------------------------------------------------------------------------- #
 # type plumbing
 # --------------------------------------------------------------------------- #
+_INT_TYPES = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
+
+
 def _is_ts(dt: T.DataType) -> bool:
     return isinstance(dt, (T.TimestampType, T.TimestampNTZType))
 
@@ -141,7 +156,7 @@ def _is_ts(dt: T.DataType) -> bool:
 def _state_elem_type(dt: T.DataType) -> T.DataType:
     if _is_ts(dt):
         return T.LongType()  # epoch micros
-    if isinstance(dt, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
+    if isinstance(dt, _INT_TYPES):
         return T.LongType()
     if isinstance(dt, (T.DoubleType, T.FloatType)):
         return T.DoubleType()
@@ -153,9 +168,7 @@ def _state_elem_type(dt: T.DataType) -> T.DataType:
 def _agg_out_type(op: str, in_type: Optional[T.DataType]) -> T.DataType:
     if op == "count":
         return T.LongType()
-    if op == "avg" and isinstance(
-        in_type, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-    ):
+    if op == "avg" and isinstance(in_type, _INT_TYPES):
         # integer avg is integer division in the reference
         # (funcs_agg.go:56-81) — matches the batch translator's
         # truncating division
@@ -165,7 +178,7 @@ def _agg_out_type(op: str, in_type: Optional[T.DataType]) -> T.DataType:
     if op == "collect":
         return T.ArrayType(in_type)
     if op == "sum":
-        if isinstance(in_type, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
+        if isinstance(in_type, _INT_TYPES):
             return T.LongType()
         return T.DoubleType()
     # min/max/first/last preserve the input type
@@ -182,7 +195,7 @@ def _col_to_np(series: pd.Series, dt: T.DataType) -> np.ndarray:
         return series.values.astype("datetime64[us]").astype("int64")
     if isinstance(dt, (T.DoubleType, T.FloatType)):
         return series.to_numpy(dtype="float64")
-    if isinstance(dt, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
+    if isinstance(dt, _INT_TYPES):
         if series.isna().any():
             # narrower-than-long ints with nulls cross Arrow -> pandas
             # as float64 — exact for their whole range (< 2^53).  LONG
@@ -200,9 +213,7 @@ def _col_to_np(series: pd.Series, dt: T.DataType) -> np.ndarray:
 def _f64_nulls(arr: np.ndarray, dt: T.DataType) -> np.ndarray:
     """float64 view of a buffered column with nulls restored to NaN."""
     v = arr.astype("float64")
-    if _is_ts(dt) or isinstance(
-        dt, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-    ):
+    if _is_ts(dt) or isinstance(dt, _INT_TYPES):
         v[arr == _LONG_NULL] = np.nan
     return v
 
@@ -248,22 +259,8 @@ _MATRIX_OPS = {
     "collect": lambda m: list(m.tolist()),
 }
 
-# 1-D reducers for the slice path (state windows): (k,) -> scalar
-_SLICE_OPS = {
-    "count": lambda a: len(a),
-    "sum": lambda a: a.sum(),
-    "avg": lambda a: float(a.astype("float64").mean()),
-    "min": lambda a: a.min(),
-    "max": lambda a: a.max(),
-    "first": lambda a: a[0],
-    "last": lambda a: a[-1],
-    "stddev": lambda a: float(a.astype("float64").std(ddof=0)),
-    "stddevs": lambda a: float(a.astype("float64").std(ddof=1)),
-    "var": lambda a: float(a.astype("float64").var(ddof=0)),
-    "vars": lambda a: float(a.astype("float64").var(ddof=1)),
-    "median": lambda a: float(np.median(a.astype("float64"))),
-    "collect": lambda a: list(a.tolist()),
-}
+# value-picking aggregates: their result keeps the input type
+_PICK_OPS = ("min", "max", "first", "last", "last_nn")
 
 # pandas rolling methods for the sliding path
 _ROLLING_OPS = {"count", "sum", "avg", "min", "max", "stddev", "stddevs", "median"}
@@ -272,9 +269,7 @@ _ROLLING_OPS = {"count", "sum", "avg", "min", "max", "stddev", "stddevs", "media
 def _null_mask(arr: np.ndarray, dt: T.DataType) -> np.ndarray:
     """True where a buffered value is a SQL null (sentinel for ints AND
     timestamps — NaT buffers as the same INT64_MIN — NaN for floats)."""
-    if _is_ts(dt) or isinstance(
-        dt, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-    ):
+    if _is_ts(dt) or isinstance(dt, _INT_TYPES):
         return arr == _LONG_NULL
     if isinstance(dt, (T.DoubleType, T.FloatType)):
         return np.isnan(arr)
@@ -353,8 +348,6 @@ def _reduce_matrix(op: str, mat: np.ndarray, dt: T.DataType) -> np.ndarray:
             out[all_null] = None
             return out
         return res
-    import warnings
-
     f = _f64_nulls(mat, dt)
     with warnings.catch_warnings():
         warnings.simplefilter("ignore", category=RuntimeWarning)
@@ -364,38 +357,34 @@ def _reduce_matrix(op: str, mat: np.ndarray, dt: T.DataType) -> np.ndarray:
     return res
 
 
-def _reduce_slice(op: str, arr: np.ndarray, dt: T.DataType):
-    """(k,) -> scalar with the same null semantics as _reduce_matrix."""
-    if op == "last_nn":
-        valid = np.asarray(arr)[~_null_mask(arr, dt)]
-        return valid[-1] if len(valid) else None
-    if op in ("first", "last"):
-        v = _SLICE_OPS[op](arr)
-        return None if _null_mask(np.asarray([v]), dt)[0] else v
-    if op == "collect":
-        m = _null_mask(arr, dt)
-        if m.any():
-            return [None if nn else v for v, nn in zip(arr.tolist(), m.tolist())]
-        return _SLICE_OPS[op](arr)
-    mask = _null_mask(arr, dt)
-    if op == "count":
-        return int((~mask).sum())
-    if not mask.any():
-        return _SLICE_OPS[op](arr)
-    if (
-        np.asarray(arr).dtype.kind == "i"
-        and not _is_ts(dt)
-        and op in ("sum", "min", "max")
-    ):
-        ivalid = np.asarray(arr)[~mask]
-        if len(ivalid) == 0:
-            return None
-        return _SLICE_OPS[op](ivalid)  # stays int64-exact
-    valid = _f64_nulls(np.asarray(arr), dt)
-    valid = valid[~np.isnan(valid)]
-    if len(valid) == 0:
-        return None
-    return _SLICE_OPS[op](valid)
+def _row_numbers(frame: pd.DataFrame, wf: WinFuncSpec) -> np.ndarray:
+    """row_number() per ``wf`` over ``frame``'s rows (RangeIndex), which
+    arrive in the default rank order (event or group-formation order):
+    a stable sort on the OVER keys with nil keys LAST in both directions,
+    numbering restarting per OVER partition."""
+    n = len(frame)
+    order = (
+        frame.sort_values(
+            list(wf.orders),
+            ascending=list(wf.ascs),
+            na_position="last",
+            kind="mergesort",
+        ).index.to_numpy()
+        if wf.orders
+        else np.arange(n)
+    )
+    ranks = np.empty(n, dtype="int64")
+    if wf.parts:
+        ranks[order] = (
+            frame.loc[order]
+            .groupby(list(wf.parts), sort=False, dropna=False)
+            .cumcount()
+            .to_numpy()
+            + 1
+        )
+    else:
+        ranks[order] = np.arange(1, n + 1)
+    return ranks
 
 
 def _range_extrema(
@@ -511,14 +500,26 @@ def window_agg_stream(
                      emit_col is not allowed — use ``emit_col=None`` with
                      ``begin_col=cond`` (run-of-true islands; a window
                      closes when the condition turns false).
-    kind='sliding' : SLIDINGWINDOW(length) — per-event emission of aggs
-                     over [t-length, t] (window_op.go:593-619); aggs are
-                     restricted to the pandas-rolling subset; passthrough
-                     columns of the triggering row are emitted alongside.
+    kind='sliding' : SLIDINGWINDOW(length[, delay]) — per-event emission
+                     of aggs over [t-length, t] (window_op.go:593-619),
+                     or [t-length, t+delay) once event time passes
+                     t+delay; passthrough columns emit alongside.  Without
+                     subgroups the aggs are the pandas-rolling subset
+                     (count/sum/avg/min/max/stddev/stddevs/median), or
+                     count/sum/avg/min/max with a delay or watermark.
     kind='session' : capped SESSIONWINDOW(unit, length, interval) —
                      cap_us/timeout_us (window_op.go:304-347); sessions
                      are keyed by dims (per-key state), closed sessions
                      emit, the open tail carries in state.
+
+    Each kind's function buffers rows and cuts windows; every cut
+    window goes through one helper, ``reduce_window``, which reduces it
+    and appends its rows (content, subgroup or scalar mode).  Only the
+    count reshape path and the sliding rolling / prefix-sum paths reduce
+    many windows at once.  Sliding ties: ``rolling`` bounds equal
+    timestamps by row position (a trigger's frame ends at its own row),
+    while the ``searchsorted`` frames of the delayed, subgrouped and
+    frame-content forms include every row with the trigger's timestamp.
 
     dims key the state (the 100 TB path); with no dims a single global
     key is used and a warning fires.
@@ -704,38 +705,157 @@ def window_agg_stream(
     )
     state_schema = T.StructType(state_fields)
 
+    state_names = [f.name for f in state_fields]
+
     dim_list = list(dims)
     sub_list = list(subgroups)
     agg_list = list(aggs)
     pass_list = list(passthrough)
     order_list = list(order_cols)
+    winfunc_list = list(winfuncs)
     buf_types = {c: schema[c] for c in buffered}
+    buf_dtypes = {c: _empty_np(_state_elem_type(buf_types[c])).dtype for c in buffered}
     out_types = {f.name: f.dataType for f in out_fields}
 
-    def subgroup_window(win: dict, wid: int, sink: dict) -> None:
-        """One window's rows -> one output row per subgroup value
-        (pandas groupby; the window's rows stay in event order, so
-        first/last within a subgroup follow the reference)."""
+    # ------------------------------------------------------------------ #
+    # state: one row per key, read and written by the schema's field names
+    # ------------------------------------------------------------------ #
+    def load_state(state: GroupState) -> tuple[dict, dict]:
+        """The key's state as (slots, buf): the scalar slots by field name
+        (a fresh key gets the defaults) and the row buffers as arrays.
+        ``emitted`` counts emitted windows (the sliding-delay op keeps its
+        emission threshold there); ``an_state`` is the decoded fused
+        analytic state, advanced in place by ``read_batch``; ``lhit`` is
+        the gap throttle's lastHit, advanced by ``_gap_gate``."""
+        row = dict(zip(state_names, state.get)) if state.exists else {}
+        ws, an = row.get("ws_open"), row.get("an_state")
+        slots = {
+            "emitted": row.get("emitted", 0),
+            "is_open": row.get("is_open", False),
+            "ws_open": -1 if ws is None else int(ws),
+            "an_state": _an_decode(json.loads(an)) if an else {},
+            "lhit": int(row.get("lhit") or 0),
+        }
+        buf = {
+            c: np.asarray(list(row.get(f"b_{c}") or []), dtype=buf_dtypes[c])
+            for c in buffered
+        }
+        return slots, buf
+
+    def save_state(state: GroupState, slots: dict, buf: dict) -> None:
+        n_buf = len(buf[ts_col]) if buffered else 0
+        if state_max_rows and n_buf > state_max_rows:
+            print(
+                f"ekuiper_spark: open-window state exceeded "
+                f"{state_max_rows} rows ({n_buf}); trimming oldest "
+                f"(emit-partial)",
+                file=sys.stderr,
+            )
+            buf = {c: buf[c][-state_max_rows:] for c in buffered}
+        row = {f"b_{c}": list(buf[c].tolist()) for c in buffered}
+        row.update(
+            emitted=int(slots["emitted"]),
+            is_open=bool(slots["is_open"]),
+            ws_open=int(slots["ws_open"]),
+            lhit=int(slots["lhit"]),
+            # lag rings / latest carries hold numpy scalars, pandas
+            # Timestamps, or bytes from the arriving Arrow batch —
+            # TIMESTAMP encodes as tagged epoch-micros and BINARY as
+            # tagged base64 so value-carrying state round-trips the
+            # checkpoint for every input type (decoded by _an_decode)
+            an_state=json.dumps(slots["an_state"], default=_an_default) if pre_an else None,
+        )
+        state.update(tuple(row[f] for f in state_names))
+
+    # ------------------------------------------------------------------ #
+    # batch intake
+    # ------------------------------------------------------------------ #
+    def read_batch(pdfs: Iterator[pd.DataFrame], slots: dict, wm: Optional[int] = None) -> pd.DataFrame:
+        """This key's micro-batch rows in event order.  Rows below the
+        watermark ``wm`` drop first (the reference filters late events
+        before the window op; Spark does not filter stateful-op input).
+        The fused analytic state then advances over ALL remaining rows
+        (each spec's output becomes a virtual column) before the deferred
+        WHERE (pre_filter_col) prunes rows ahead of window formation."""
+        parts = list(pdfs)
+        batch = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame()
+        if len(batch) and wm is not None and wm > 0:
+            late = batch[ts_col].values.astype("datetime64[us]").astype("int64") < wm
+            batch = batch[~late]
+        if not len(batch):
+            return batch
+        batch = batch.sort_values(order_list, kind="mergesort").reset_index(drop=True)
+        if pre_an:
+            from ekuiper_spark.streaming.analytics import _vector_spec
+
+            an_st = slots["an_state"]
+            for i, s in enumerate(pre_an):
+                batch[s.out] = _vector_spec(s, an_st.setdefault(str(i), {}), batch)
+        if pre_filter_col is not None:
+            batch = batch[
+                (batch[pre_filter_col] == True).to_numpy()  # noqa: E712
+            ].reset_index(drop=True)
+        return batch
+
+    def batch_arrays(batch: pd.DataFrame) -> dict:
+        return {c: _col_to_np(batch[c], schema[c]) for c in buffered}
+
+    def append_rows(buf: dict, batch: pd.DataFrame) -> dict:
+        if not len(batch):
+            return buf
+        add = batch_arrays(batch)
+        return {c: np.concatenate([buf[c], add[c]]) for c in buffered}
+
+    # ------------------------------------------------------------------ #
+    # reduce and emit
+    # ------------------------------------------------------------------ #
+    def new_sink() -> dict:
+        """Output columns as lists, one key per emitted column (wid /
+        window bounds / trigger time only when the op emits them)."""
+        cols = [a.out for a in agg_list]
+        if emit_trigger_us:
+            cols.append("__et_us")
+        if emit_content or frame_content:
+            cols += pass_list
+        cols += [wf.out for wf in winfunc_list] + sub_list
+        if emit_wid:
+            cols.append("wid")
+        if emit_bounds:
+            cols += ["__ws", "__we"]
+        return {c: [] for c in cols}
+
+    def window_aggs(win: dict) -> dict:
+        """The window's aggregate values, one per AggSpec (timestamp picks
+        and collects come back as timestamps)."""
+        vals = {}
+        for a in agg_list:
+            src = a.in_col or ts_col
+            dt = buf_types[src]
+            val = _reduce_matrix(a.op, win[src].reshape(1, -1), dt)[0]
+            if _is_ts(dt) and a.op in _PICK_OPS:
+                val = pd.NaT if val is None or (isinstance(val, float) and np.isnan(val)) else pd.Timestamp(int(val), unit="us")
+            elif _is_ts(dt) and a.op == "collect":
+                val = list(pd.to_datetime(pd.Series(list(val)), unit="us"))
+            vals[a.out] = val
+        return vals
+
+    def subgroup_rows(win: dict, sink: dict) -> int:
+        """One window's rows -> one output row per subgroup value (pandas
+        groupby; the window's rows stay in event order, so first/last
+        within a subgroup follow the reference).  Returns the row count."""
         src_cols = {a.in_col or ts_col for a in agg_list} | set(sub_list)
-        # restore buffered int-null sentinels to NaN for agg inputs so
-        # pandas' null-skipping groupby aggregations see real nulls
-        # (subgroup key columns keep their raw values)
         data = {}
         for c in src_cols:
             arr = win[c]
             dt = buf_types.get(c, T.StringType())
             # restore sentinel-buffered nulls so pandas aggregations see
             # real NA — nullable Int64 (not float64, which would round
-            # int64 values above 2^53) for integral/ts columns; object
-            # arrays already hold real None; float NaN is already NA
+            # int64 values above 2^53) for integral/ts agg inputs; object
+            # arrays already hold real None; float NaN is already NA;
+            # subgroup key columns keep their raw values
             if (
                 c not in sub_list
-                and (
-                    _is_ts(dt)
-                    or isinstance(
-                        dt, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-                    )
-                )
+                and (_is_ts(dt) or isinstance(dt, _INT_TYPES))
                 and _null_mask(arr, dt).any()
             ):
                 ser = pd.Series(arr, dtype="Int64")
@@ -745,8 +865,6 @@ def window_agg_stream(
         pdf = pd.DataFrame(data)
         g = pdf.groupby(sub_list, sort=True)
         keys = g.size().reset_index()
-        for sc in sub_list:
-            sink[sc].extend(keys[sc].tolist())
         grp_rows: dict[str, list] = {sc: keys[sc].tolist() for sc in sub_list}
         for a in agg_list:
             src = a.in_col or ts_col
@@ -781,17 +899,16 @@ def window_agg_stream(
             else:  # pragma: no cover
                 raise KeyError(a.op)
             vals = vals.reset_index(drop=True)
-            if a.op in ("min", "max", "first", "last", "last_nn") and _is_ts(
-                buf_types.get(src, T.DoubleType())
-            ):
+            if a.op in _PICK_OPS and _is_ts(buf_types.get(src, T.DoubleType())):
                 # float (null-restored) series convert directly: NaN -> NaT
                 vals = pd.to_datetime(vals, unit="us")
             elif a.op == "collect" and _is_ts(buf_types.get(src, T.DoubleType())):
                 # buffered timestamps are int64 micros; ArrayType(TimestampType)
                 # output needs datetime elements
                 vals = vals.apply(lambda lst: list(pd.to_datetime(pd.Series(list(lst)), unit="us")))
-            sink[a.out].extend(vals.tolist())
             grp_rows[a.out] = vals.tolist()
+        for c, v in grp_rows.items():
+            sink[c].extend(v)
         if winfunc_list:
             # row_number over the window's GROUPS (WindowFuncPlan above
             # AggregatePlan; rowNumberFuncHandle over a GroupedTuplesSet):
@@ -802,219 +919,65 @@ def window_agg_stream(
                 pd.Series(np.arange(len(pdf)))
                 .groupby([pdf[sc] for sc in sub_list], sort=True)
                 .min()
-                .reset_index(drop=True)
+                .to_numpy()
             )
-            seg = pd.DataFrame(grp_rows)
-            seg["__ford"] = ford.to_numpy()
-            k2 = len(seg)
+            formed = np.argsort(ford, kind="stable")
+            seg = pd.DataFrame(grp_rows).iloc[formed].reset_index(drop=True)
             for wf in winfunc_list:
-                if wf.orders:
-                    # formation-order tiebreaker (OrderOp stable sort over
-                    # the GroupedTuplesSet); seg rows sit in KEY order here
-                    idx = seg.sort_values(
-                        list(wf.orders) + ["__ford"],
-                        ascending=list(wf.ascs) + [True],
-                        na_position="last",
-                        kind="mergesort",
-                    ).index.to_numpy()
-                else:
-                    idx = seg.sort_values("__ford", kind="mergesort").index.to_numpy()
-                ranks = np.empty(k2, dtype="int64")
-                if wf.parts:
-                    cum = (
-                        seg.loc[idx]
-                        .groupby(list(wf.parts), sort=False, dropna=False)
-                        .cumcount()
-                        .to_numpy()
-                        + 1
-                    )
-                    ranks[idx] = cum
-                else:
-                    ranks[idx] = np.arange(1, k2 + 1)
+                ranks = np.empty(len(seg), dtype="int64")
+                ranks[formed] = _row_numbers(seg, wf)
                 sink[wf.out].extend(ranks.tolist())
-        if emit_wid:
-            sink["wid"].extend([wid] * len(keys))
+        return len(keys)
 
-    winfunc_list = list(winfuncs)
-
-    def winfunc_cols(win: dict, length: int) -> dict[str, np.ndarray]:
+    def content_ranks(win: dict, length: int) -> dict[str, np.ndarray]:
         """Per-window row_number ranks over the (pruned) content rows —
         reference WindowFuncOperator semantics: rank within the window
-        collection, per OVER partition, ordered by the OVER sort fields
-        with nil keys LAST in both directions; without ORDER BY the rank
-        follows the collection (event) order."""
+        collection, per OVER partition; without ORDER BY the rank follows
+        the collection (event) order."""
         out: dict[str, np.ndarray] = {}
         for wf in winfunc_list:
             cols = {}
             for c in dict.fromkeys(list(wf.parts) + list(wf.orders)):
                 arr = win[c]
                 dt = buf_types.get(c, T.StringType())
-                if (
-                    _is_ts(dt)
-                    or isinstance(
-                        dt, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-                    )
-                ) and _null_mask(arr, dt).any():
+                if (_is_ts(dt) or isinstance(dt, _INT_TYPES)) and _null_mask(arr, dt).any():
                     arr = _f64_nulls(arr, dt)  # sentinel nulls -> NaN (rank last)
                 cols[c] = arr
-            pdf = pd.DataFrame(cols) if cols else pd.DataFrame(index=range(length))
-            if wf.orders:
-                idx = pdf.sort_values(
-                    list(wf.orders),
-                    ascending=list(wf.ascs),
-                    na_position="last",
-                    kind="mergesort",
-                ).index.to_numpy()
-            else:
-                idx = np.arange(length)
-            ranks = np.empty(length, dtype="int64")
-            if wf.parts:
-                cum = (
-                    pdf.loc[idx]
-                    .groupby(list(wf.parts), sort=False, dropna=False)
-                    .cumcount()
-                    .to_numpy()
-                    + 1
-                )
-                ranks[idx] = cum
-            else:
-                ranks[idx] = np.arange(1, length + 1)
-            out[wf.out] = ranks
+            frame = pd.DataFrame(cols) if cols else pd.DataFrame(index=range(length))
+            out[wf.out] = _row_numbers(frame, wf)
         return out
 
-    def new_sink() -> dict:
-        sink: dict[str, list] = {a.out: [] for a in agg_list}
-        if emit_trigger_us:
-            sink["__et_us"] = []
-        if emit_content:
-            for c in pass_list:
-                sink[c] = []
-        for wf in winfunc_list:
-            sink[wf.out] = []
-        for sc in sub_list:
-            sink[sc] = []
-        if emit_wid:
-            sink["wid"] = []
-        if emit_bounds:
-            sink["__ws"] = []
-            sink["__we"] = []
-        return sink
-
-    _ws_slot = 1 if has_ws else 0  # extra scalar before the buffers
-
-    def load_state(state: GroupState):
-        if state.exists:
-            vals = state.get
-            emitted, is_open = vals[0], vals[1]
-            base = 2 + _ws_slot
-            buf = {}
-            for i, c in enumerate(buffered):
-                raw = np.asarray(list(vals[base + i]), dtype=_empty_np(_state_elem_type(buf_types[c])).dtype) if vals[base + i] else _empty_np(_state_elem_type(buf_types[c]))
-                buf[c] = raw
-            return emitted, is_open, buf
-        return 0, False, {c: _empty_np(_state_elem_type(buf_types[c])) for c in buffered}
-
-    def load_ws(state: GroupState) -> int:
-        if has_ws and state.exists:
-            v = state.get[2]
-            return int(v) if v is not None else -1
-        return -1
-
-    def load_an(state: GroupState) -> dict:
-        if pre_an and state.exists:
-            v = state.get[2 + _ws_slot + len(buffered)]
-            if v:
-                import json
-
-                return _an_decode(json.loads(v))
-        return {}
-
-    # --- sliding gap-throttle (OVER(WHEN ... last_hit_time() ...)) -------
-    # lastHit lives in ONE state slot per key; each fn invocation loads it
-    # first (load_lhit), _gap_gate advances it on full hits, save_state
-    # persists whatever the cell holds at save time.
-    _lhit = {"v": 0}
-    _lhit_slot = 2 + _ws_slot + len(buffered) + (1 if pre_an else 0)
-
-    def load_lhit(state: GroupState) -> None:
-        if gap_throttle is not None:
-            _lhit["v"] = (
-                int(state.get[_lhit_slot] or 0) if state.exists else 0
-            )
-
-    def _gap_gate(cand_ts, flags):
-        """Sequential hit gate over trigger CANDIDATES in event order:
-        keep candidate i iff its flag holds AND ts - lastHit clears K;
-        lastHit advances only on keeps (funcs_global_state.go — state
-        updates on emission, not per candidate)."""
-        k_, ge_ = gap_throttle
-        keep = np.zeros(len(cand_ts), dtype=bool)
-        lh = _lhit["v"]
-        for i in range(len(cand_ts)):
-            if flags is not None and not bool(flags[i]):
-                continue
-            g = int(cand_ts[i]) - lh
-            if (g >= k_) if ge_ else (g > k_):
-                keep[i] = True
-                lh = int(cand_ts[i])
-        _lhit["v"] = lh
-        return keep
-
-    def apply_pre_analytics(batch: pd.DataFrame, an_st: dict) -> pd.DataFrame:
-        """Advance the fused analytic state over the sorted arriving
-        batch, adding each spec's output as a virtual column (mutates
-        an_st in place); then apply the deferred WHERE (pre_filter_col)
-        so window formation sees only passing rows while the analytic
-        state advanced on ALL of them."""
-        if pre_an and len(batch):
-            from ekuiper_spark.streaming.analytics import _vector_spec
-
-            batch = batch.reset_index(drop=True)
-            for i, s in enumerate(pre_an):
-                batch[s.out] = _vector_spec(s, an_st.setdefault(str(i), {}), batch)
-        if pre_filter_col is not None and len(batch):
-            batch = batch[
-                (batch[pre_filter_col] == True).to_numpy()  # noqa: E712
-            ].reset_index(drop=True)
-        return batch
-
-    def save_state(state: GroupState, emitted: int, is_open: bool, buf: dict, ws_open: int = -1, an_st: Optional[dict] = None) -> None:
-        if buffered and state_max_rows:
-            n_buf = len(next(iter(buf.values())))
-            if n_buf > state_max_rows:
-                import sys
-
-                print(
-                    f"ekuiper_spark: open-window state exceeded "
-                    f"{state_max_rows} rows ({n_buf}); trimming oldest "
-                    f"(emit-partial)",
-                    file=sys.stderr,
-                )
-                buf = {c: buf[c][-state_max_rows:] for c in buffered}
-        an_extra: list = []
-        if pre_an:
-            import json
-
-            if an_st is None:
-                an_st = load_an(state)  # preserve (e.g. timeout paths)
-            # lag rings / latest carries hold numpy scalars, pandas
-            # Timestamps, or bytes from the arriving Arrow batch —
-            # TIMESTAMP encodes as tagged epoch-micros and BINARY as
-            # tagged base64 so value-carrying state round-trips the
-            # checkpoint for every input type (decoded by _an_decode)
-            an_extra = [json.dumps(an_st, default=_an_default)]
-        state.update(
-            tuple(
-                [int(emitted), bool(is_open)]
-                + ([int(ws_open)] if has_ws else [])
-                + [list(buf[c].tolist()) for c in buffered]
-                + an_extra
-                + ([int(_lhit["v"])] if gap_throttle is not None else [])
-            )
-        )
-
-    def batch_arrays(batch: pd.DataFrame, cols: Sequence[str]) -> dict:
-        return {c: _col_to_np(batch[c], schema[c]) for c in cols}
+    def reduce_window(
+        win: dict, sink: dict, wid: int = 0,
+        ws_us: Optional[int] = None, we_us: Optional[int] = None,
+        et_us: Optional[int] = None,
+    ) -> None:
+        """Reduce one window's rows and append its output rows to sink —
+        the one per-window reduction every kind shares.  Content mode
+        emits the window's (SELECT row) content rows with the window's
+        aggregates attached to each, so a downstream per-row filter can
+        compare row vs frame (the reference's window-collection ->
+        ProjectOp path); subgroup mode emits one row per GROUP BY value
+        (aggregate-after-window); scalar mode emits one row.  The window
+        id, session bounds and trigger time repeat on every row emitted
+        (their sink columns exist only when the op emits them)."""
+        length = len(win[ts_col])
+        if not length:
+            return
+        if sub_list:
+            n_rows = subgroup_rows(win, sink)
+        else:
+            n_rows = length if emit_content else 1
+            if emit_content:
+                for c in pass_list:
+                    sink[c].extend(win[c].tolist())
+                for c, ranks in content_ranks(win, length).items():
+                    sink[c].extend(ranks.tolist())
+            for c, val in window_aggs(win).items():
+                sink[c].extend([val] * n_rows)
+        for c, v in (("wid", wid), ("__ws", ws_us), ("__we", we_us), ("__et_us", et_us)):
+            if c in sink:
+                sink[c].extend([v] * n_rows)
 
     def emit_frame(out_cols: dict, length: int, key) -> pd.DataFrame:
         data = {}
@@ -1036,7 +999,7 @@ def window_agg_stream(
                 else:
                     frame[name] = pd.to_datetime(frame[name])
             elif (
-                isinstance(t, (T.LongType, T.IntegerType, T.ShortType, T.ByteType))
+                isinstance(t, _INT_TYPES)
                 and getattr(vals.dtype, "kind", "") == "f"
             ):
                 # float results (integer avg, all-null frames -> NaN)
@@ -1048,7 +1011,7 @@ def window_agg_stream(
                     [None if np.isnan(x) else int(x) for x in tr], dtype="Int64"
                 )
             elif (
-                isinstance(t, (T.LongType, T.IntegerType, T.ShortType, T.ByteType))
+                isinstance(t, _INT_TYPES)
                 and getattr(vals.dtype, "kind", "") == "i"
                 and (vals.to_numpy() == _LONG_NULL).any()
             ):
@@ -1059,100 +1022,40 @@ def window_agg_stream(
                 frame[name] = frame[name].mask(vals.to_numpy() == _LONG_NULL, pd.NA)
         return frame[[f.name for f in out_fields]]
 
+    def sink_frame(sink: dict, key) -> Optional[pd.DataFrame]:
+        n_out = len(next(iter(sink.values()))) if sink else 0
+        if not n_out:
+            return None
+        return emit_frame({c: pd.Series(v) for c, v in sink.items()}, n_out, key)
+
     # ------------------------------------------------------------------ #
     def fn_count(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        emitted, _, buf = load_state(state)
-        an_st = load_an(state)
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if len(batch):
-            batch = batch.sort_values(order_list, kind="mergesort")
-            batch = apply_pre_analytics(batch, an_st)
-            add = batch_arrays(batch, buffered)
-            buf = {c: np.concatenate([buf[c], add[c]]) for c in buffered}
-        total = len(next(iter(buf.values()))) if buffered else 0
-        n_win = total // n
-        if n_win and emit_content:
-            # content emission (SELECT row columns over the window, the
-            # reference's window-collection -> per-row ProjectOp path,
-            # incl. agg-in-WHERE: aggregates attach to every content row
-            # so a downstream per-row filter can compare row vs frame)
-            frames = []
-            for w in range(n_win):
-                sl = slice(w * n, (w + 1) * n)
-                if keep_col is not None:
-                    kmask = buf[keep_col][sl].astype(bool)
-                    if not kmask.any():
-                        continue  # all-pruned window drops whole
-                    win = {c: buf[c][sl][kmask] for c in buffered}
-                else:
-                    win = {c: buf[c][sl] for c in buffered}
-                length = len(next(iter(win.values())))
-                out_cols = {c: pd.Series(win[c]) for c in pass_list}
-                for name, arr in winfunc_cols(win, length).items():
-                    out_cols[name] = pd.Series(arr)
-                for a in agg_list:
-                    src = a.in_col or ts_col
-                    val = _reduce_slice(a.op, win[src], buf_types.get(src, T.DoubleType()))
-                    if a.op in ("min", "max", "first", "last", "last_nn") and _is_ts(buf_types[src]):
-                        val = pd.NaT if val is None or (isinstance(val, float) and np.isnan(val)) else pd.Timestamp(int(val), unit="us")
-                    elif a.op == "collect" and _is_ts(buf_types[src]):
-                        val = list(pd.to_datetime(pd.Series(list(val)), unit="us"))
-                    out_cols[a.out] = pd.Series([val] * length)
-                if emit_wid:
-                    out_cols["wid"] = pd.Series([emitted + w] * length)
-                frames.append(emit_frame(out_cols, length, key))
-            buf = {c: buf[c][n_win * n :] for c in buffered}
-            emitted += n_win
-            save_state(state, emitted, False, buf, an_st=an_st)
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-        elif n_win and keep_col:
-            # WHERE above the window: windows fill from ALL rows, the
-            # predicate prunes each window's CONTENT, an all-pruned
-            # window drops whole (still consuming its wid) — the
-            # streaming analog of the batch deferred-WHERE rule
-            out_rows = new_sink()
-            for w in range(n_win):
-                sl = slice(w * n, (w + 1) * n)
-                kmask = buf[keep_col][sl].astype(bool)
-                if not kmask.any():
-                    continue
-                win = {c: buf[c][sl][kmask] for c in buffered}
-                if sub_list:
-                    subgroup_window(win, emitted + w, out_rows)
-                    continue
-                for a in agg_list:
-                    src = a.in_col or ts_col
-                    val = _reduce_slice(a.op, win[src], buf_types.get(src, T.DoubleType()))
-                    if a.op in ("min", "max", "first", "last", "last_nn") and _is_ts(buf_types[src]):
-                        val = pd.NaT if val is None or (isinstance(val, float) and np.isnan(val)) else pd.Timestamp(int(val), unit="us")
-                    elif a.op == "collect" and _is_ts(buf_types[src]):
-                        val = list(pd.to_datetime(pd.Series(list(val)), unit="us"))
-                    out_rows[a.out].append(val)
-                if emit_wid:
-                    out_rows["wid"].append(emitted + w)
-            buf = {c: buf[c][n_win * n :] for c in buffered}
-            emitted += n_win
-            save_state(state, emitted, False, buf, an_st=an_st)
-            n_out = len(next(iter(out_rows.values()))) if out_rows else 0
-            if n_out:
-                yield emit_frame({k: pd.Series(v) for k, v in out_rows.items()}, n_out, key)
-        elif n_win and sub_list:
-            # sub-grouped: one output row per (window, subgroup value)
+        slots, buf = load_state(state)
+        buf = append_rows(buf, read_batch(pdfs, slots))
+        n_win = len(buf[ts_col]) // n
+        first = slots["emitted"]
+        out = None
+        if n_win and (emit_content or keep_col or sub_list):
             sink = new_sink()
             for w in range(n_win):
                 win = {c: buf[c][w * n : (w + 1) * n] for c in buffered}
-                subgroup_window(win, emitted + w, sink)
-            buf = {c: buf[c][n_win * n :] for c in buffered}
-            emitted += n_win
-            save_state(state, emitted, False, buf, an_st=an_st)
-            n_out = len(next(iter(sink.values())))
-            if n_out:
-                yield emit_frame({k: pd.Series(v) for k, v in sink.items()}, n_out, key)
+                if keep_col is not None:
+                    # WHERE above the window: windows fill from ALL rows,
+                    # the predicate prunes each window's CONTENT, an
+                    # all-pruned window drops whole (still consuming its
+                    # wid) — the streaming analog of the batch deferred-
+                    # WHERE rule
+                    kmask = win[keep_col].astype(bool)
+                    if not kmask.any():
+                        continue
+                    win = {c: win[c][kmask] for c in buffered}
+                reduce_window(win, sink, wid=first + w)
+            out = sink_frame(sink, key)
         elif n_win:
+            # fast path: every full window reduces at once over a reshape
             out_cols = {}
             if emit_wid:
-                out_cols["wid"] = np.arange(emitted, emitted + n_win, dtype="int64")
+                out_cols["wid"] = np.arange(first, first + n_win, dtype="int64")
             for a in agg_list:
                 src = a.in_col or ts_col
                 mat = buf[src][: n_win * n].reshape(n_win, n)
@@ -1161,103 +1064,50 @@ def window_agg_stream(
                     res = [list(pd.to_datetime(pd.Series(list(lst)), unit="us")) for lst in res]
                     out_cols[a.out] = res
                 else:
-                    out_cols[a.out] = _np_to_out(res, out_types[a.out]) if a.op in ("min", "max", "first", "last", "last_nn", "sum") else res
-            buf = {c: buf[c][n_win * n :] for c in buffered}
-            emitted += n_win
-            save_state(state, emitted, False, buf, an_st=an_st)
-            yield emit_frame(out_cols, n_win, key)
-        else:
-            save_state(state, emitted, False, buf, an_st=an_st)
+                    out_cols[a.out] = _np_to_out(res, out_types[a.out]) if a.op in _PICK_OPS + ("sum",) else res
+            out = emit_frame(out_cols, n_win, key)
+        slots["emitted"] = first + n_win
+        save_state(state, slots, {c: buf[c][n_win * n :] for c in buffered})
+        if out is not None:
+            yield out
 
     # ------------------------------------------------------------------ #
     def fn_state(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        emitted, is_open, buf = load_state(state)
-        an_st = load_an(state)
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if not len(batch):
-            save_state(state, emitted, is_open, buf, an_st=an_st)
-            return
-        batch = batch.sort_values(order_list, kind="mergesort")
-        batch = apply_pre_analytics(batch, an_st)
-        rows = batch_arrays(batch, buffered)
-        bflags = batch[begin_col].to_numpy(dtype="bool")
-        eflags = batch[emit_col].to_numpy(dtype="bool") if emit_col else ~bflags
-        single = emit_col is None  # island mode: run of begin-true rows
+        slots, buf = load_state(state)
+        batch = read_batch(pdfs, slots)
+        sink = new_sink()
         m = len(batch)
-        out_rows = new_sink()
-        content_frames: list[pd.DataFrame] = []
+        if m:
+            rows = batch_arrays(batch)
+            bflags = batch[begin_col].to_numpy(dtype="bool")
+            eflags = batch[emit_col].to_numpy(dtype="bool") if emit_col else ~bflags
+        single = emit_col is None  # island mode: run of begin-true rows
         pos = 0
         while pos < m:
-            if not is_open:
+            if not slots["is_open"]:
                 later = bflags[pos:]
                 if not later.any():
                     break
                 pos += int(np.argmax(later))
-                is_open = True
+                slots["is_open"] = True
                 buf = {c: _empty_np(_state_elem_type(buf_types[c])) for c in buffered}
-            # window open: find the closing row at/after pos
-            if single:
-                later_false = ~bflags[pos:]
-                if not later_false.any():
-                    buf = {c: np.concatenate([buf[c], rows[c][pos:]]) for c in buffered}
-                    pos = m
-                    break
-                close_rel = int(np.argmax(later_false))  # first false row
-                win = {c: np.concatenate([buf[c], rows[c][pos : pos + close_rel]]) for c in buffered}
-                next_pos = pos + close_rel
-            else:
-                later_emit = eflags[pos:]
-                if not later_emit.any():
-                    buf = {c: np.concatenate([buf[c], rows[c][pos:]]) for c in buffered}
-                    pos = m
-                    break
-                close_rel = int(np.argmax(later_emit))  # emit row is included
-                win = {c: np.concatenate([buf[c], rows[c][pos : pos + close_rel + 1]]) for c in buffered}
-                next_pos = pos + close_rel + 1
-            if emit_content:
-                # window CONTENT rows with per-window aggregates attached
-                # (reference window-collection -> ProjectOp; mirrors the
-                # count-kind content branch)
-                length = len(next(iter(win.values())))
-                if length:
-                    cols = {c: pd.Series(win[c]) for c in pass_list}
-                    for name, arr in winfunc_cols(win, length).items():
-                        cols[name] = pd.Series(arr)
-                    for a in agg_list:
-                        src = a.in_col or ts_col
-                        val = _reduce_slice(a.op, win[src], buf_types.get(src, T.DoubleType()))
-                        if a.op in ("min", "max", "first", "last", "last_nn") and _is_ts(buf_types[src]):
-                            val = pd.NaT if val is None or (isinstance(val, float) and np.isnan(val)) else pd.Timestamp(int(val), unit="us")
-                        elif a.op == "collect" and _is_ts(buf_types[src]):
-                            val = list(pd.to_datetime(pd.Series(list(val)), unit="us"))
-                        cols[a.out] = pd.Series([val] * length)
-                    if emit_wid:
-                        cols["wid"] = pd.Series([emitted] * length)
-                    content_frames.append(emit_frame(cols, length, key))
-            elif sub_list:
-                subgroup_window(win, emitted, out_rows)
-            else:
-                for a in agg_list:
-                    src = a.in_col or ts_col
-                    val = _reduce_slice(a.op, win[src], buf_types.get(src, T.DoubleType()))
-                    if a.op in ("min", "max", "first", "last", "last_nn") and _is_ts(buf_types[src]):
-                        val = pd.NaT if val is None or (isinstance(val, float) and np.isnan(val)) else pd.Timestamp(int(val), unit="us")
-                    elif a.op == "collect" and _is_ts(buf_types[src]):
-                        val = list(pd.to_datetime(pd.Series(list(val)), unit="us"))
-                    out_rows[a.out].append(val)
-                if emit_wid:
-                    out_rows["wid"].append(emitted)
-            emitted += 1
-            is_open = False
+            # window open: find the closing row at/after pos (island mode:
+            # the first false row, excluded; else the emit row, included)
+            closes = ~bflags[pos:] if single else eflags[pos:]
+            if not closes.any():
+                buf = {c: np.concatenate([buf[c], rows[c][pos:]]) for c in buffered}
+                break
+            next_pos = pos + int(np.argmax(closes)) + (0 if single else 1)
+            win = {c: np.concatenate([buf[c], rows[c][pos:next_pos]]) for c in buffered}
+            reduce_window(win, sink, wid=slots["emitted"])
+            slots["emitted"] += 1
+            slots["is_open"] = False
             buf = {c: _empty_np(_state_elem_type(buf_types[c])) for c in buffered}
             pos = next_pos
-        save_state(state, emitted, is_open, buf, an_st=an_st)
-        if content_frames:
-            yield pd.concat(content_frames, ignore_index=True)
-            return
-        n_out = len(next(iter(out_rows.values()))) if out_rows else 0
-        if n_out:
-            yield emit_frame({k: pd.Series(v) for k, v in out_rows.items()}, n_out, key)
+        save_state(state, slots, buf)
+        out = sink_frame(sink, key)
+        if out is not None:
+            yield out
 
     # ------------------------------------------------------------------ #
     def _session_bounds(ts_arr: np.ndarray, total: int):
@@ -1306,45 +1156,34 @@ def window_agg_stream(
             tail_ws = ws0
         return ws_list, tail_ws
 
-    def _emit_session(
-        buf: dict, s: int, e: int, emitted: int, out_rows: dict,
-        ws_us: Optional[int] = None, we_us: Optional[int] = None,
-    ) -> None:
-        win = {c: buf[c][s:e] for c in buffered}
-        if emit_content:
-            # session CONTENT rows (non-aggregated SELECT; same contract
-            # as the count/state content branches)
-            length = e - s
-            for c in pass_list:
-                out_rows[c].extend(win[c].tolist())
-            for name, arr in winfunc_cols(win, length).items():
-                out_rows[name].extend(arr.tolist())
-            for a in agg_list:
-                src = a.in_col or ts_col
-                val = _reduce_slice(a.op, win[src], buf_types.get(src, T.DoubleType()))
-                out_rows[a.out].extend([val] * length)
-            if emit_wid:
-                out_rows["wid"].extend([emitted] * length)
-            if emit_bounds:
-                out_rows["__ws"].extend([ws_us] * length)
-                out_rows["__we"].extend([we_us] * length)
-            return
-        if emit_bounds:
-            out_rows["__ws"].append(ws_us)
-            out_rows["__we"].append(we_us)
-        if sub_list:
-            subgroup_window(win, emitted, out_rows)
-            return
-        for a in agg_list:
-            src = a.in_col or ts_col
-            val = _reduce_slice(a.op, win[src], buf_types.get(src, T.DoubleType()))
-            if a.op in ("min", "max", "first", "last", "last_nn") and _is_ts(buf_types[src]):
-                val = pd.NaT if val is None or (isinstance(val, float) and np.isnan(val)) else pd.Timestamp(int(val), unit="us")
-            elif a.op == "collect" and _is_ts(buf_types[src]):
-                val = list(pd.to_datetime(pd.Series(list(val)), unit="us"))
-            out_rows[a.out].append(val)
-        if emit_wid:
-            out_rows["wid"].append(emitted)
+    def close_sessions(buf: dict, slots: dict, limit: Optional[int], sink: dict):
+        """Emit the buffered sessions that have closed, oldest first, and
+        return (first row still buffered, close times still pending).
+        ``limit=None`` is the eager discipline: every session a later
+        event proves closed emits and the open tail stays.  Otherwise a
+        session — the tail included — emits once its close time is at or
+        below ``limit`` (the watermark), stopping at the first that is
+        not.  Advances slots' window counter and open-session start."""
+        ts_arr = buf[ts_col]
+        total = len(ts_arr)
+        bounds, cur, open_close = _session_bounds(ts_arr, total)
+        ws_list, tail_ws = _ws_chain(ts_arr, bounds, cur, slots["ws_open"])
+        sessions = [b + (ws,) for b, ws in zip(bounds, ws_list)]
+        sessions.append((cur, total, open_close, tail_ws))
+        k = 0
+        while k < len(sessions) and (
+            k < len(sessions) - 1 if limit is None else sessions[k][2] <= limit
+        ):
+            s, e, c_us, ws = sessions[k]
+            win = {c: buf[c][s:e] for c in buffered}
+            reduce_window(win, sink, wid=slots["emitted"], ws_us=ws, we_us=c_us)
+            slots["emitted"] += 1
+            k += 1
+        if k == len(sessions):
+            slots["ws_open"] = tail_ws
+            return total, []
+        slots["ws_open"] = sessions[k][3]
+        return sessions[k][0], [c_us for _, _, c_us, _ in sessions[k:]]
 
     def fn_session(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         """Capped SESSIONWINDOW(unit, length=cap, interval=timeout) —
@@ -1367,146 +1206,99 @@ def window_agg_stream(
           advances past a pending close with no new data.
 
         ``flush_open_ms`` (processing-time flush of a quiet key's open
-        session) applies to the eager discipline only.
+        session) applies to the eager discipline only: its timeout closes
+        the whole open session like the reference's wall-clock timer.
         """
         wm_us: Optional[int] = None
         if watermark_gated:
             wm_us = int(state.getCurrentWatermarkMs()) * (1 if unit_ms else 1000)
-        if __import__("os").environ.get("EKSPARK_DEBUG_WM"):
-            print("WM_DEBUG", wm_us, flush=True)
-
-        if state.hasTimedOut:
-            ws_stored = load_ws(state)
-            emitted, _, buf = load_state(state)
-            out_rows = new_sink()
-            total = len(buf[ts_col])
-            if wm_us is None:
-                # processing-time flush (flush_open_ms): emit the whole
-                # open session like the reference's wall-clock timer
-                if total:
-                    _, _, open_close = _session_bounds(buf[ts_col], total)
-                    _, tail_ws = _ws_chain(buf[ts_col], [], 0, ws_stored)
-                    _emit_session(
-                        buf, 0, total, emitted, out_rows, tail_ws, open_close
-                    )
+        timed_out = state.hasTimedOut
+        slots, buf = load_state(state)
+        if not timed_out:
+            buf = append_rows(buf, read_batch(pdfs, slots, wm_us))
+        if not len(buf[ts_col]):
+            if timed_out:
                 state.remove()
-                n_out = len(next(iter(out_rows.values()))) if out_rows else 0
-                if n_out:
-                    yield emit_frame({k: pd.Series(v) for k, v in out_rows.items()}, n_out, key)
-                return
-            # event-time: the watermark advanced past a pending close
-            if not total:
-                state.remove()
-                return
-            ts_arr = buf[ts_col]
-            bounds, cur, open_close = _session_bounds(ts_arr, total)
-            ws_list, tail_ws = _ws_chain(ts_arr, bounds, cur, ws_stored)
-            keep_from, pending = None, []
-            keep_ws = tail_ws
-            for k, (s, e, c_us) in enumerate(bounds):
-                if keep_from is None and c_us <= wm_us:
-                    _emit_session(buf, s, e, emitted, out_rows, ws_list[k], c_us)
-                    emitted += 1
-                else:
-                    if keep_from is None:
-                        keep_from, keep_ws = s, ws_list[k]
-                    pending.append(c_us)
-            if keep_from is None:
-                if open_close <= wm_us:
-                    _emit_session(
-                        buf, cur, total, emitted, out_rows, tail_ws, open_close
-                    )
-                    emitted += 1
-                    keep_from = total
-                else:
-                    keep_from, keep_ws = cur, tail_ws
-                    pending.append(open_close)
             else:
-                pending.append(open_close)
-            buf = {c: buf[c][keep_from:] for c in buffered}
-            if len(buf[ts_col]):
-                save_state(state, emitted, True, buf, keep_ws)
-                state.setTimeoutTimestamp(
-                    min(pending) if unit_ms else min(pending) // 1000
-                )
-            else:
-                state.remove()
-            n_out = len(next(iter(out_rows.values()))) if out_rows else 0
-            if n_out:
-                yield emit_frame({k: pd.Series(v) for k, v in out_rows.items()}, n_out, key)
-            return
-
-        ws_stored = load_ws(state)
-        emitted, _, buf = load_state(state)
-        an_st = load_an(state)
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if len(batch) and wm_us is not None and wm_us > 0:
-            # the reference drops events below the watermark BEFORE the
-            # window op (Spark does not auto-filter stateful-op input)
-            keep = batch[ts_col].values.astype("datetime64[us]").astype("int64") >= wm_us
-            batch = batch[keep]
-        if len(batch):
-            batch = batch.sort_values(order_list, kind="mergesort")
-            batch = apply_pre_analytics(batch, an_st)
-            add = batch_arrays(batch, buffered)
-            buf = {c: np.concatenate([buf[c], add[c]]) for c in buffered}
-        ts_arr = buf[ts_col]
-        total = len(ts_arr)
-        if not total:
-            save_state(state, emitted, False, buf, ws_stored, an_st=an_st)
+                save_state(state, slots, buf)
             return
         # a late-but-in-tolerance arrival may sort before carried rows
-        perm = np.argsort(ts_arr, kind="stable")
+        perm = np.argsort(buf[ts_col], kind="stable")
         buf = {c: buf[c][perm] for c in buffered}
-        ts_arr = buf[ts_col]
-        # sequential greedy close: the cap tick derives from the running
-        # session start, so this is a per-key scan (keyed state = the
-        # scale path; per-key per-batch row counts stay small)
-        bounds, cur, open_close = _session_bounds(ts_arr, total)
-        ws_list, tail_ws = _ws_chain(ts_arr, bounds, cur, ws_stored)
-        out_rows = new_sink()
-        keep_ws = tail_ws
-        if wm_us is None:
-            for k, (s, e, c_us) in enumerate(bounds):
-                _emit_session(buf, s, e, emitted, out_rows, ws_list[k], c_us)
-                emitted += 1
-            keep_from = cur
-        else:
-            keep_from, pending = None, []
-            for k, (s, e, c_us) in enumerate(bounds):
-                if keep_from is None and c_us <= wm_us:
-                    _emit_session(buf, s, e, emitted, out_rows, ws_list[k], c_us)
-                    emitted += 1
-                else:
-                    if keep_from is None:
-                        keep_from, keep_ws = s, ws_list[k]
-                    pending.append(c_us)
-            if keep_from is None:
-                if open_close <= wm_us:
-                    _emit_session(
-                        buf, cur, total, emitted, out_rows, tail_ws, open_close
-                    )
-                    emitted += 1
-                    keep_from = total
-                else:
-                    keep_from = cur
-                    pending.append(open_close)
-            else:
-                pending.append(open_close)
+        limit = wm_us
+        if timed_out and wm_us is None:
+            limit = np.iinfo("int64").max  # processing-time flush
+        sink = new_sink()
+        keep_from, pending = close_sessions(buf, slots, limit, sink)
         buf = {c: buf[c][keep_from:] for c in buffered}
-        save_state(state, emitted, len(buf[ts_col]) > 0, buf, keep_ws, an_st=an_st)
-        if len(buf[ts_col]):
-            if watermark_gated:
+        slots["is_open"] = len(buf[ts_col]) > 0
+        if timed_out and not slots["is_open"]:
+            state.remove()
+        else:
+            save_state(state, slots, buf)
+            if slots["is_open"] and watermark_gated:
                 state.setTimeoutTimestamp(
                     min(pending) if unit_ms else min(pending) // 1000
                 )
-            elif flush_open_ms:
+            elif slots["is_open"] and flush_open_ms:
                 state.setTimeoutDuration(int(flush_open_ms))
-        n_out = len(next(iter(out_rows.values()))) if out_rows else 0
-        if n_out:
-            yield emit_frame({k: pd.Series(v) for k, v in out_rows.items()}, n_out, key)
+        out = sink_frame(sink, key)
+        if out is not None:
+            yield out
 
     # ------------------------------------------------------------------ #
+    # sliding windows
+    # ------------------------------------------------------------------ #
+    def _gap_gate(cand_ts, flags, slots: dict):
+        """Sequential hit gate over trigger CANDIDATES in event order
+        (OVER(WHEN [flag AND] ts - last_hit_time() > K)): keep candidate
+        i iff its flag holds AND ts - lastHit clears K; lastHit advances
+        only on keeps (funcs_global_state.go — state updates on emission,
+        not per candidate) and persists in the ``lhit`` slot."""
+        k_, ge_ = gap_throttle
+        keep = np.zeros(len(cand_ts), dtype=bool)
+        lh = slots["lhit"]
+        for i in range(len(cand_ts)):
+            if flags is not None and not bool(flags[i]):
+                continue
+            g = int(cand_ts[i]) - lh
+            if (g >= k_) if ge_ else (g > k_):
+                keep[i] = True
+                lh = int(cand_ts[i])
+        slots["lhit"] = lh
+        return keep
+
+    def trigger_frames(ts_arr, cand, flags, kmask, slots: dict, delay: int = 0):
+        """The triggers that fire among candidate positions ``cand`` (event
+        order) and their frames, as (positions, frame starts, frame
+        ends).  A candidate fires if its flag holds — through the gap
+        gate when the window is throttled, applied before frame pruning
+        because an all-pruned hit still advances lastHit — and its frame
+        keeps a row (an all-pruned frame drops whole).  The frame is
+        [t-length, t+delay): left-INCLUSIVE (handleInputs keeps ts >=
+        left, window_op.go:641-647), right-EXCLUSIVE when delay > 0
+        (window_op.go:571-573), and with delay 0 it ends at t including
+        every row with the same timestamp."""
+        if gap_throttle is not None:
+            fire = _gap_gate(ts_arr[cand], flags, slots)
+        else:
+            fire = np.ones(len(cand), dtype=bool) if flags is None else flags
+        idx = cand[fire]
+        t = ts_arr[idx]
+        left = np.searchsorted(ts_arr, t - length_us, side="left")
+        right = np.searchsorted(ts_arr, t + delay, side="right" if delay == 0 else "left")
+        if kmask is not None:
+            kcs = np.concatenate([[0], np.cumsum(kmask.astype("int64"))])
+            sel = kcs[right] > kcs[left]
+            idx, left, right = idx[sel], left[sel], right[sel]
+        return idx, left, right
+
+    def frame_rows(full: dict, lo: int, hi: int, kmask) -> dict:
+        sl = slice(int(lo), int(hi))
+        if kmask is None:
+            return {c: full[c][sl] for c in buffered}
+        return {c: full[c][sl][kmask[sl]] for c in buffered}
+
     def fn_sliding_delay(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         """SLIDINGWINDOW(unit, length, delay): a row's emission fires once
         event time passes t+delay; its frame is [t-length, t+delay)
@@ -1518,144 +1310,72 @@ def window_agg_stream(
         WATERMARK passes t+delay — the reference's event_window_trigger
         discipline (window_rule_test.go Interval11/12); without a
         watermark the next covering ARRIVAL fires the trigger.  The
-        state's first slot stores the emission threshold either way.
+        ``emitted`` slot stores the emission threshold either way.
         """
-        max_seen, _, buf = load_state(state)
-        load_lhit(state)
+        slots, buf = load_state(state)
         wm_val: Optional[int] = None
         if watermark_gated:
             wm_val = int(state.getCurrentWatermarkMs()) * (1 if unit_ms else 1000)
-        parts = list(pdfs)
-        batch = (
-            pd.concat(parts, ignore_index=True)
-            if parts
-            else pd.DataFrame({c: pd.Series(dtype="object") for c in buffered})
-        )
-        if len(batch) and wm_val is not None and wm_val > 0:
-            # late rows drop at ingest (the reference's watermark filter)
-            keep = (
-                batch[ts_col].values.astype("datetime64[us]").astype("int64")
-                >= wm_val
-            )
-            batch = batch[keep]
-        an_st = load_an(state)
-        if len(batch):
-            batch = apply_pre_analytics(
-                batch.sort_values(order_list, kind="mergesort"), an_st
-            )
-        n_new = len(batch)
-        add = batch_arrays(batch, buffered) if n_new else {c: _empty_np(_state_elem_type(buf_types[c])) for c in buffered}
         n_old = len(buf[ts_col])
-        full = {c: np.concatenate([buf[c], add[c]]) for c in buffered}
-        total = n_old + n_new
+        full = append_rows(buf, read_batch(pdfs, slots, wm_val))
+        total = len(full[ts_col])
         if not total:
-            save_state(state, max_seen, False, buf, an_st=an_st)
+            save_state(state, slots, buf)
             return
         perm = np.argsort(full[ts_col], kind="stable")
         full = {c: full[c][perm] for c in buffered}
-        from_old = (np.concatenate([np.ones(n_old, dtype=bool), np.zeros(n_new, dtype=bool)]))[perm]
+        from_old = (np.arange(total) < n_old)[perm]
         ts_arr = full[ts_col]
+        max_seen = int(slots["emitted"])
         if wm_val is not None:
             # threshold = the watermark: trigger t emits once
             # wm >= t + delay; the stored slot carries the last threshold
-            old_thr = int(max_seen)
-            new_thr = max(wm_val - delay_us, old_thr)
-            new_max = new_thr
+            old_thr = max_seen
+            new_thr = new_max = max(wm_val - delay_us, old_thr)
         else:
-            new_max = max(int(max_seen), int(ts_arr.max()))
-            old_thr, new_thr = int(max_seen) - delay_us, new_max - delay_us
+            new_max = max(max_seen, int(ts_arr.max()))
+            old_thr, new_thr = max_seen - delay_us, new_max - delay_us
         already = from_old & (ts_arr <= old_thr)
-        emit = (ts_arr <= new_thr) & ~already
-        idx = np.nonzero(emit)[0]
-        if gap_throttle is not None and len(idx):
-            # gap-gate ready triggers in event order (lastHit in state);
-            # applied before frame pruning — an all-pruned hit still
-            # advanced lastHit in the reference
-            fl_g = (
-                np.asarray(full["__trig"], dtype="bool")[idx]
-                if "__trig" in buffered
-                else None
-            )
-            idx = idx[_gap_gate(ts_arr[idx], fl_g)]
+        ready = np.nonzero((ts_arr <= new_thr) & ~already)[0]
+        # only throttled or sub-grouped triggers filter on the WHEN flag
+        # here; otherwise __trig rides out as a passthrough column
+        flags = (
+            np.asarray(full["__trig"], dtype="bool")[ready]
+            if "__trig" in buffered and (gap_throttle is not None or sub_list)
+            else None
+        )
         dkmask = full[keep_col].astype(bool) if keep_col else None
-        out_cols: dict = {}
-        if len(idx):
-            # frame [t-length, t+delay) — left-INCLUSIVE (handleInputs
-            # keeps ts >= left, window_op.go:641-647), right-EXCLUSIVE
-            # because Delay > 0 makes the window time-related
-            # (window_op.go:571-573; TestSlidingWindowInterval11)
-            left = np.searchsorted(ts_arr, ts_arr[idx] - length_us, side="left")
-            right = np.searchsorted(
-                ts_arr, ts_arr[idx] + delay_us,
-                side="right" if delay_us == 0 else "left",
-            )
+        idx, left, right = trigger_frames(ts_arr, ready, flags, dkmask, slots, delay_us)
+        out = None
+        if len(idx) and sub_list:
+            # GROUP BY dims over delayed/watermark-gated frames: each
+            # ready trigger's frame [t-L, t+D) sub-groups by the dims
+            # (same window-then-aggregate order as the no-delay path)
+            sink = new_sink()
+            for i, lo, hi in zip(idx, left, right):
+                reduce_window(frame_rows(full, lo, hi, dkmask), sink, et_us=int(ts_arr[i]))
+            out = sink_frame(sink, key)
+        elif len(idx) and not agg_list:
+            # non-aggregated delayed/gated sliding: emit the FRAME
+            # CONTENT per trigger (the reference's window-collection
+            # emission — TestSlidingDelay's 4-row frame, Interval12's
+            # growing frames); __-prefixed pass cols (__trig/__et)
+            # replicate the trigger row's value
+            rows_idx = np.concatenate([np.arange(lo, hi) for lo, hi in zip(left, right)])
+            trig_rep = np.repeat(idx, (right - left).astype("int64"))
             if dkmask is not None:
-                # all-pruned frames drop whole (WHERE above the window)
-                kcs = np.concatenate([[0], np.cumsum(dkmask.astype("int64"))])
-                kept_in_frame = kcs[right] - kcs[left]
-                sel = kept_in_frame > 0
-                idx, left, right = idx[sel], left[sel], right[sel]
-                if not len(idx):
-                    keep = ts_arr >= new_thr - length_us
-                    kept0 = {c: full[c][keep] for c in buffered}
-                    if not len(kept0[ts_col]) and wm_val is not None:
-                        state.remove()
-                    else:
-                        save_state(state, new_max, False, kept0, an_st=an_st)
-                        if wm_val is not None:
-                            pend = kept0[ts_col][kept0[ts_col] > new_thr]
-                            if len(pend):
-                                close = int(pend.min()) + delay_us
-                                state.setTimeoutTimestamp(
-                                    (close if unit_ms else close // 1000) - 1
-                                )
-                    return
-            if sub_list:
-                # GROUP BY dims over delayed/watermark-gated frames: each
-                # ready trigger's frame [t-L, t+D) sub-groups by the dims
-                # (same window-then-aggregate order as the no-delay path)
-                if "__trig" in buffered:
-                    tsel = np.asarray(full["__trig"], dtype="bool")[idx]
-                    idx, left, right = idx[tsel], left[tsel], right[tsel]
-                sink = new_sink()
-                for k3 in range(len(idx)):
-                    sl = slice(int(left[k3]), int(right[k3]))
-                    if dkmask is not None:
-                        km = dkmask[sl]
-                        win = {c: full[c][sl][km] for c in buffered}
-                    else:
-                        win = {c: full[c][sl] for c in buffered}
-                    subgroup_window(win, 0, sink)
-                    if emit_trigger_us:
-                        added = len(sink[sub_list[0]]) - len(sink["__et_us"])
-                        sink["__et_us"].extend([int(ts_arr[idx[k3]])] * added)
-                keep = ts_arr >= new_thr - length_us
-                kept = {c: full[c][keep] for c in buffered}
-                if not len(kept[ts_col]) and wm_val is not None:
-                    state.remove()
-                else:
-                    save_state(state, new_max, False, kept, an_st=an_st)
-                    if wm_val is not None:
-                        # pending triggers must fire on watermark advance
-                        # even with dims — mirror the non-dims epilogue
-                        # (state.update clears any armed timeout)
-                        pend = kept[ts_col][kept[ts_col] > new_thr]
-                        if len(pend):
-                            close = int(pend.min()) + delay_us
-                            state.setTimeoutTimestamp(
-                                (close if unit_ms else close // 1000) - 1
-                            )
-                n_out = len(next(iter(sink.values()))) if sink else 0
-                if n_out:
-                    yield emit_frame({k2: pd.Series(v) for k2, v in sink.items()}, n_out, key)
-                return
+                sel = dkmask[rows_idx]
+                rows_idx, trig_rep = rows_idx[sel], trig_rep[sel]
+            out_cols = {}
+            for c in pass_list:
+                v = full[c][trig_rep if c.startswith("__") else rows_idx]
+                out_cols[c] = pd.to_datetime(v.astype("int64"), unit="us") if _is_ts(buf_types[c]) else v
+            if len(rows_idx):
+                out = emit_frame(out_cols, len(rows_idx), key)
+        elif len(idx):
+            out_cols = {}
             for a in agg_list:
-                if a.op == "count" and a.in_col is None:
-                    if dkmask is None:
-                        res = (right - left).astype("int64")
-                    else:
-                        res = (kcs[right] - kcs[left]).astype("int64")
-                elif a.op in ("min", "max"):
+                if a.op in ("min", "max"):
                     vals = _f64_nulls(full[a.in_col], buf_types[a.in_col])
                     if dkmask is not None:
                         vals = np.where(dkmask, vals, np.nan)
@@ -1674,7 +1394,12 @@ def window_agg_stream(
                             dtype="Int64",
                         ).mask(nanmask, pd.NA)
                 else:
-                    vals = _f64_nulls(full[a.in_col], buf_types[a.in_col])
+                    # prefix sums; count(*) counts every (kept) frame row
+                    vals = (
+                        np.zeros(total)
+                        if a.in_col is None
+                        else _f64_nulls(full[a.in_col], buf_types[a.in_col])
+                    )
                     if dkmask is not None:
                         vals = np.where(dkmask, vals, np.nan)
                     ok = ~np.isnan(vals)
@@ -1694,190 +1419,110 @@ def window_agg_stream(
                 not c.startswith("__") for c in pass_list
             ):
                 # first KEPT row at/after the frame start (frames are
-                # non-empty after the all-pruned selection above)
+                # non-empty after the all-pruned selection)
                 kpos = np.nonzero(dkmask)[0]
                 first_pos = kpos[np.searchsorted(kpos, left, side="left")]
-            if not agg_list:
-                # non-aggregated delayed/gated sliding: emit the FRAME
-                # CONTENT per trigger (the reference's window-collection
-                # emission — TestSlidingDelay's 4-row frame,
-                # Interval12's growing frames); __-prefixed pass cols
-                # (__trig/__et) replicate the trigger row's value
-                rows_idx = np.concatenate(
-                    [np.arange(l, r) for l, r in zip(left, right)]
-                ) if len(idx) else np.array([], dtype="int64")
-                reps = (right - left).astype("int64")
-                trig_rep = np.repeat(idx, reps)
-                if dkmask is not None:
-                    sel = dkmask[rows_idx]
-                    rows_idx, trig_rep = rows_idx[sel], trig_rep[sel]
-                for c in pass_list:
-                    src_i = trig_rep if c.startswith("__") else rows_idx
-                    v = full[c][src_i]
-                    out_cols[c] = pd.to_datetime(v.astype("int64"), unit="us") if _is_ts(buf_types[c]) else v
-                keep = ts_arr >= new_thr - length_us
-                kept = {c: full[c][keep] for c in buffered}
-                if not len(kept[ts_col]) and wm_val is not None:
-                    state.remove()
-                else:
-                    save_state(state, new_max, False, kept, an_st=an_st)
-                    if wm_val is not None:
-                        pend = kept[ts_col][kept[ts_col] > new_thr]
-                        if len(pend):
-                            close = int(pend.min()) + delay_us
-                            state.setTimeoutTimestamp(
-                                (close if unit_ms else close // 1000) - 1
-                            )
-                if len(rows_idx):
-                    yield emit_frame(out_cols, len(rows_idx), key)
-                return
             for c in pass_list:
                 # aggregated delayed sliding: raw columns take the first
-                # frame row's value (frame (t-L, t+delay] starts at
-                # `left`); __-prefixed pass cols (__trig/__et) stay
-                # trigger-row-local
+                # frame row's value; __-prefixed pass cols (__trig/__et)
+                # stay trigger-row-local
                 v = full[c][idx] if c.startswith("__") else full[c][first_pos]
                 out_cols[c] = pd.to_datetime(v.astype("int64"), unit="us") if _is_ts(buf_types[c]) else v
-        keep = ts_arr >= new_thr - length_us
-        kept = {c: full[c][keep] for c in buffered}
+            out = emit_frame(out_cols, len(idx), key)
+        kept = {c: full[c][ts_arr >= new_thr - length_us] for c in buffered}
         if not len(kept[ts_col]) and wm_val is not None:
             state.remove()
         else:
-            save_state(state, new_max, False, kept, an_st=an_st)
-            if wm_val is not None:
+            slots["emitted"] = new_max
+            save_state(state, slots, kept)
+            pend = kept[ts_col][kept[ts_col] > new_thr]
+            if wm_val is not None and len(pend):
                 # pending triggers fire on watermark advance, not on the
                 # next arrival — arm an event-time timeout at the next
-                # trigger close (the session discipline)
-                pend = kept[ts_col][kept[ts_col] > new_thr]
-                if len(pend):
-                    close = int(pend.min()) + delay_us
-                    state.setTimeoutTimestamp(
-                        (close if unit_ms else close // 1000) - 1
-                    )
-        if len(idx):
-            yield emit_frame(out_cols, len(idx), key)
+                # trigger close (the session discipline; state.update
+                # clears any armed timeout)
+                close = int(pend.min()) + delay_us
+                state.setTimeoutTimestamp(
+                    (close if unit_ms else close // 1000) - 1
+                )
+        if out is not None:
+            yield out
 
     def fn_sliding(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        _, _, buf = load_state(state)
-        an_st = load_an(state)
-        load_lhit(state)
-        batch = pd.concat(list(pdfs), ignore_index=True)
+        slots, buf = load_state(state)
+        batch = read_batch(pdfs, slots)
         if not len(batch):
-            save_state(state, 0, False, buf, an_st=an_st)
+            save_state(state, slots, buf)
             return
-        batch = batch.sort_values(order_list, kind="mergesort").reset_index(drop=True)
-        batch = apply_pre_analytics(batch, an_st)
-        add = batch_arrays(batch, buffered)
         n_carry = len(buf[ts_col])
         n_new = len(batch)
-        full = {c: np.concatenate([buf[c], add[c]]) for c in buffered}
+        full = append_rows(buf, batch)
         # a late arrival may sort before the carried tail; stable argsort
         # keeps the combined index monotonic (rolling requires it) while the
         # is_new mask keeps emission aligned to this batch's rows
         perm = np.argsort(full[ts_col], kind="stable")
         full = {c: full[c][perm] for c in buffered}
-        is_new = np.concatenate(
-            [np.zeros(n_carry, dtype=bool), np.ones(n_new, dtype=bool)]
-        )[perm]
+        is_new = (np.arange(n_carry + n_new) >= n_carry)[perm]
+        ts_arr = full[ts_col]
         kmask = full[keep_col].astype(bool) if keep_col else None
-        if frame_content:
-            # reference non-aggregated sliding: each trigger emits its
-            # WHOLE frame's (pruned) content rows — same multiset as the
-            # batch membership join; tie-inclusive right bound
-            trig_mask2 = (
+        if frame_content or sub_list:
+            # frame_content (reference non-aggregated sliding): each
+            # trigger emits its WHOLE frame's (pruned) content rows — the
+            # batch membership join's multiset.  sub_list (reference
+            # window-then-aggregate, TestWindowRule4): each trigger's frame
+            # groups by the dims — one output row per dim value per
+            # trigger; state is global by construction (a trigger needs
+            # the full frame); raw columns arrive as per-subgroup `first`
+            # specs
+            new_pos = np.nonzero(is_new)[0]
+            flags = (
                 batch["__trig"].to_numpy(dtype="bool")
                 if "__trig" in batch.columns
-                else np.ones(n_new, dtype=bool)
+                else None
             )
-            new_pos2 = np.nonzero(is_new)[0]
-            if gap_throttle is not None:
-                trig_mask2 = _gap_gate(full[ts_col][new_pos2], trig_mask2)
-            new_ts2 = full[ts_col][new_pos2]
-            lefts2 = np.searchsorted(full[ts_col], new_ts2 - length_us, side="left")
-            rights2 = np.searchsorted(full[ts_col], new_ts2, side="right")
-            frames2 = []
-            for k, _pos in enumerate(new_pos2):
-                if not trig_mask2[k]:
+            idx, left, right = trigger_frames(ts_arr, new_pos, flags, kmask, slots)
+            sink = new_sink()
+            for i, lo, hi in zip(idx, left, right):
+                win = frame_rows(full, lo, hi, kmask)
+                if not frame_content:
+                    reduce_window(win, sink, et_us=int(ts_arr[i]))
                     continue
-                sl = slice(int(lefts2[k]), int(rights2[k]))
-                if kmask is not None:
-                    km = kmask[sl]
-                    if not km.any():
-                        continue  # all-pruned frame drops whole
-                    win = {c: full[c][sl][km] for c in buffered}
-                else:
-                    win = {c: full[c][sl] for c in buffered}
-                length = len(next(iter(win.values())))
-                cols = {}
+                # new rows keep their batch order, so the trigger's batch
+                # row is its rank among the new positions
+                k = int(np.searchsorted(new_pos, i))
+                length = len(win[ts_col])
                 for c in pass_list:
                     if c.startswith("__") and c not in buffered:
                         # trigger-row-local (__et window meta): the whole
                         # frame shares the trigger's value
-                        cols[c] = pd.Series([batch[c].iloc[k]] * length)
+                        sink[c].extend([batch[c].iloc[k]] * length)
                     else:
                         # frame rows carry their own values (raw cols and
                         # fused analytic outputs)
-                        cols[c] = pd.Series(win[c])
-                frames2.append(emit_frame(cols, length, key))
-            last_ts2 = int(full[ts_col][-1])
-            keep2 = full[ts_col] >= last_ts2 - length_us
-            save_state(state, 0, False, {c: full[c][keep2] for c in buffered}, an_st=an_st)
-            if frames2:
-                yield pd.concat(frames2, ignore_index=True)
-            return
-        if sub_list:
-            # content sub-grouping (reference window-then-aggregate,
-            # TestWindowRule4): each triggering event's whole frame groups
-            # by the dims — one output row per dim value per trigger.
-            # State is global by construction (a trigger needs the full
-            # frame); raw columns arrive as per-subgroup `first` specs.
-            trig_mask = (
-                batch["__trig"].to_numpy(dtype="bool")
-                if "__trig" in batch.columns
-                else np.ones(n_new, dtype=bool)
-            )
-            new_pos = np.nonzero(is_new)[0]
-            if gap_throttle is not None:
-                trig_mask = _gap_gate(full[ts_col][new_pos], trig_mask)
-            new_ts = full[ts_col][new_pos]
-            lefts = np.searchsorted(full[ts_col], new_ts - length_us, side="left")
-            # tie-INCLUSIVE right bound (all rows with u <= t): the batch
-            # range frame includes same-time peers regardless of position
-            rights = np.searchsorted(full[ts_col], new_ts, side="right")
-            sink = new_sink()
-            n_trig = 0
-            for k, pos in enumerate(new_pos):
-                if not trig_mask[k]:
-                    continue
-                sl = slice(lefts[k], int(rights[k]))
-                if kmask is not None:
-                    km = kmask[sl]
-                    if not km.any():
-                        continue  # all-pruned frame drops whole
-                    win = {c: full[c][sl][km] for c in buffered}
-                else:
-                    win = {c: full[c][sl] for c in buffered}
-                subgroup_window(win, 0, sink)
-                if emit_trigger_us:
-                    added = len(sink[sub_list[0]]) - len(sink["__et_us"])
-                    sink["__et_us"].extend([int(new_ts[k])] * added)
-                n_trig += 1
-            last_ts = int(full[ts_col][-1])
-            keep = full[ts_col] >= last_ts - length_us
-            save_state(state, 0, False, {c: full[c][keep] for c in buffered}, an_st=an_st)
-            n_out = len(next(iter(sink.values()))) if sink else 0
-            if n_out:
-                yield emit_frame({k2: pd.Series(v) for k2, v in sink.items()}, n_out, key)
-            return
-        idx = pd.to_datetime(full[ts_col], unit="us")
+                        sink[c].extend(win[c].tolist())
+            out = sink_frame(sink, key)
+        else:
+            out = rolling_frame(key, batch, full, is_new, kmask, slots)
+        # trim the carried buffer to the horizon of the newest row
+        # (left-INCLUSIVE frame: a tie with the newest row can still need
+        # the row exactly `length` old)
+        keep = ts_arr >= int(ts_arr[-1]) - length_us
+        save_state(state, slots, {c: full[c][keep] for c in buffered})
+        if out is not None:
+            yield out
+
+    def rolling_frame(key, batch, full, is_new, kmask, slots) -> Optional[pd.DataFrame]:
+        """Aggregated sliding without delay: one output row per new row,
+        its aggregates over [t-length, t] from pandas time-based
+        ``rolling`` (ties bound by row position)."""
+        ts_arr = full[ts_col]
+        n_new = int(is_new.sum())
+        idx = pd.to_datetime(ts_arr, unit="us")
 
         def _roll_vals(c: str) -> np.ndarray:
             v = (
                 _f64_nulls(full[c], buf_types[c])
-                if isinstance(
-                    buf_types[c],
-                    (T.LongType, T.IntegerType, T.ShortType, T.ByteType),
-                ) or _is_ts(buf_types[c])
+                if isinstance(buf_types[c], _INT_TYPES) or _is_ts(buf_types[c])
                 else np.asarray(full[c], dtype="float64")
                 if np.asarray(full[c]).dtype.kind in ("i", "u", "f", "b")
                 else full[c]
@@ -1926,23 +1571,22 @@ def window_agg_stream(
             out_cols[a.out] = res
         # stable argsort keeps the new rows in batch-sorted relative order,
         # so res[is_new] aligns 1:1 with the sorted batch's rows
-        _an_pass_pre = {s.out for s in pre_an}
+        an_pass = {s.out for s in pre_an}
         if agg_list and any(
-            not c.startswith("__") or c in _an_pass_pre for c in pass_list
+            not c.startswith("__") or c in an_pass for c in pass_list
         ):
             # first-of-frame raw columns: the frame [t-L, t] starts at the
             # first buffered index with us >= t - L.  With a content
             # filter, "first" means the first KEPT frame row
-            new_ts = full[ts_col][is_new]
+            new_ts = ts_arr[is_new]
             if kmask is None:
                 src_full = full
-                left_idx = np.searchsorted(full[ts_col], new_ts - length_us, side="left")
+                left_idx = np.searchsorted(ts_arr, new_ts - length_us, side="left")
             else:
                 src_full = {c: full[c][kmask] for c in buffered}
-                kept_ts = full[ts_col][kmask]
+                kept_ts = ts_arr[kmask]
                 left_idx = np.searchsorted(kept_ts, new_ts - length_us, side="left")
                 left_idx = np.minimum(left_idx, max(len(kept_ts) - 1, 0))
-        an_pass = {s.out for s in pre_an}
         for c in pass_list:
             if (c.startswith("__") and c not in an_pass) or not agg_list:
                 # __-prefixed pass cols are trigger-row locals (__trig,
@@ -1968,13 +1612,11 @@ def window_agg_stream(
                 if "__trig" in batch.columns
                 else None
             )
-            out_cols["__trig"] = _gap_gate(full[ts_col][is_new], flags_g)
-        emit_mask = None
+            out_cols["__trig"] = _gap_gate(ts_arr[is_new], flags_g, slots)
         if kmask is not None:
             # a trigger whose frame holds no kept rows drops whole
             # (filter_operator.go:84-87 all-pruned collection)
-            frame_kept = roll.count()["__keepn"].to_numpy()[is_new]
-            emit_mask = frame_kept > 0
+            emit_mask = roll.count()["__keepn"].to_numpy()[is_new] > 0
             out_cols = {
                 k: (
                     np.asarray(v)[emit_mask]
@@ -1983,16 +1625,8 @@ def window_agg_stream(
                 )
                 for k, v in out_cols.items()
             }
-        # trim the carried buffer to the horizon of the newest row
-        # (left-INCLUSIVE frame: a tie with the newest row can still need
-        # the row exactly `length` old)
-        last_ts = int(full[ts_col][-1])
-        keep = full[ts_col] >= last_ts - length_us
-        buf = {c: full[c][keep] for c in buffered}
-        save_state(state, 0, False, buf, an_st=an_st)
-        n_out = n_new if emit_mask is None else int(emit_mask.sum())
-        if n_out:
-            yield emit_frame(out_cols, n_out, key)
+            n_new = int(emit_mask.sum())
+        return emit_frame(out_cols, n_new, key) if n_new else None
 
     fn = {
         "count": fn_count,
@@ -2109,53 +1743,3 @@ def sliding_window_stream(
         passthrough=(id_col,),
     )
     return out.select(id_col, "n_w", F.col("sum_w").cast("double").alias("sum_w"))
-
-
-def lag_stream(
-    sdf: DataFrame,
-    partition_col: str,
-    value_col: str,
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Streaming lag(value) keyed by partition_col: per-row previous value,
-    with the last value carried across micro-batches in state
-    (funcs_analytic.go:124-207 keyed lag state).
-
-    Output: (part, event_id, value, prev_value)."""
-    out_schema = T.StructType(
-        [
-            T.StructField("part", T.LongType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("prev_value", T.DoubleType()),
-        ]
-    )
-    state_schema = T.StructType([T.StructField("last_val", T.DoubleType())])
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        last = state.get[0] if state.exists else None
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if not len(batch):
-            return
-        batch = batch.sort_values([ts_col, id_col], kind="mergesort")
-        # ignoreNull ring semantics (funcs_analytic.go:150-207, default
-        # true): null inputs neither enter nor advance the state, so the
-        # previous value is the last NON-NULL among [carried, v0..v_{i-1}]
-        seq = pd.Series([last] + batch[value_col].tolist(), dtype="float64").ffill()
-        prev = seq.iloc[:-1].reset_index(drop=True)
-        out = pd.DataFrame(
-            {
-                "part": batch[partition_col].astype("int64"),
-                "event_id": batch[id_col].astype("int64"),
-                "value": batch[value_col].astype(float),
-                "prev_value": prev,
-            }
-        )
-        new_last = seq.iloc[-1]
-        state.update((None if pd.isna(new_last) else float(new_last),))
-        yield out
-
-    return sdf.groupBy(partition_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )

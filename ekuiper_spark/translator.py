@@ -304,19 +304,8 @@ class Translator:
             return self._compile_send_error(df, stmt, ctx)
 
         if ctx.finalized:
-            # source loading fully translated the statement (streaming
-            # sliding join: the stateful op folds window+join+aggregation)
-            if stmt.order:
-                df = df.orderBy(
-                    *[
-                        F.col(self._sort_name(s.expr, stmt)).asc()
-                        if s.asc
-                        else F.col(self._sort_name(s.expr, stmt)).desc()
-                        for s in stmt.order
-                    ]
-                )
-            if stmt.limit is not None:
-                df = df.limit(stmt.limit)
+            # source loading fully translated the statement, ORDER BY and
+            # LIMIT included (_window_join_chain)
             return df
 
         if self.streaming and self.watermark and ec and not ctx.join_window_col:

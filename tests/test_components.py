@@ -169,3 +169,15 @@ def test_dup_clusters_vs_duckdb_recursive_oracle(spark, catalog):
         for r in dup_clusters(jaccard_pairs(d, threshold=0.8)).collect()
     }
     assert got == want
+
+
+def test_cc_releases_superseded_round_checkpoints(spark):
+    """Each round localCheckpoint()s its edges; only the final round's
+    checkpoint (which the lazy result reads) may outlive the call."""
+    jsc = spark.sparkContext._jsc.sc()
+    # a 40-node path needs several star rounds to converge
+    pdf = spark.createDataFrame([(i, i + 1) for i in range(39)], "id_a long, id_b long")
+    before = jsc.getPersistentRDDs().size()
+    got = _labels(connected_components(pdf))
+    assert got == {i: 0 for i in range(40)}
+    assert jsc.getPersistentRDDs().size() <= before + 1

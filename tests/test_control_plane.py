@@ -358,25 +358,16 @@ def test_meta_function(spark, catalog, expr, expected):
 
 
 def test_streaming_lag_matches_batch(spark, catalog):
-    import uuid as _uuid
+    from ekuiper_spark.streaming.runtime import run_rule_available_now
 
-    from ekuiper_spark.streaming.stateful import lag_stream
-
-    sdf = catalog.load(spark, "events", streaming=True)
-    out = lag_stream(sdf, "user_id", "value")
-    name = "t_lag_" + _uuid.uuid4().hex[:6]
-    q = (
-        out.writeStream.format("memory").queryName(name).outputMode("append")
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    stream = {(r["part"], r["event_id"]): r["prev_value"] for r in spark.table(name).collect()}
-    batch = compile_sql(
-        spark,
-        "SELECT user_id, event_id, lag(value) OVER (PARTITION BY user_id) AS p FROM events",
-        catalog,
-        order_cols=["ts", "event_id"],
-    ).collect()
+    sql = "SELECT user_id, event_id, lag(value) OVER (PARTITION BY user_id) AS p FROM events"
+    stream = {
+        (r["user_id"], r["event_id"]): r["p"]
+        for r in run_rule_available_now(
+            spark, catalog, sql, order_cols=["ts", "event_id"]
+        ).collect()
+    }
+    batch = compile_sql(spark, sql, catalog, order_cols=["ts", "event_id"]).collect()
     for r in batch:
         got = stream[(r["user_id"], r["event_id"])]
         if r["p"] is None:

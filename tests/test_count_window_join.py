@@ -519,3 +519,27 @@ def test_count_window_join_arbitrary_exprs(spark, tmp_path):
             ).collect()
         )
         assert b == s and len(b) > 0, sql
+
+
+def test_count_window_join_order_by_nulls_last(spark):
+    """A finalized windowed join sorts once, nulls last (sorter.go:68-73),
+    whether ORDER BY names a qualified column or a select alias."""
+    cat = Catalog()
+    cat.register_df("sa", spark.createDataFrame(
+        [(1, 1000, 1, 3.0), (2, 2000, 1, None), (3, 3000, 2, 1.0), (4, 4000, 2, None)],
+        "aid long, ts long, k long, v double",
+    ))
+    cat.register(StreamDef(name="sa", kind="stream"))
+    cat.register_df("sb", spark.createDataFrame(
+        [(11, 1500, 1), (12, 2500, 2), (13, 3500, 1), (14, 4500, 2)],
+        "bid long, bts long, bk long",
+    ))
+    cat.register(StreamDef(name="sb", kind="stream", timestamp_col="bts"))
+    for sql in [
+        "SELECT aid, v FROM sa INNER JOIN sb ON sa.k = sb.bk "
+        "GROUP BY COUNTWINDOW(8) ORDER BY sa.v",
+        "SELECT aid, v AS y FROM sa INNER JOIN sb ON sa.k = sb.bk "
+        "GROUP BY COUNTWINDOW(8) ORDER BY y ASC",
+    ]:
+        vals = [r[1] for r in compile_sql(spark, sql, cat).collect()]
+        assert vals == [1.0, 1.0, 3.0, 3.0, None, None, None, None], sql

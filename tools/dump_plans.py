@@ -3,15 +3,34 @@ any declared query) to plans/<tag>/<name>_<suffix>.txt.
 
 Usage:
     python tools/dump_plans.py <tag> <suffix> [query ...]
+    python tools/dump_plans.py stream <tag> <suffix> SOURCE [SOURCE ...]
     python tools/dump_plans.py compare <tag> <suffix_a> <suffix_b>
 
 e.g.  python tools/dump_plans.py r11 before            # all headline queries
       python tools/dump_plans.py r11 after q_sliding_window
       python tools/dump_plans.py compare r11 before after
+      python tools/dump_plans.py stream st before \
+          tests/test_parity_fuzz_windows.py:_STATEMENTS \
+          perfbench/workloads.py:DEPLOY_RULES
+
+``stream`` compiles each statement of each SOURCE in streaming mode (no
+query starts) and writes its ANALYZED plan to
+plans/<tag>/stream_<name>_<suffix>.txt, the statement on the first line.
+The plan's stateful-operator line (``FlatMapGroupsInPandasWithState``)
+shows the output attributes, the state schema's StructFields and the
+timeout mode, so comparing two checkouts' dumps shows whether existing
+checkpoints still restore.  A SOURCE is ``<file.py>:<NAME>``: a module
+attribute holding statements, (statement, ...) tuples, or a dict of
+name -> statement / (statement, ...).  Dicts name the plans by key,
+lists by ``<NAME>_<index>``.  Statements read the fixture tables at
+SPARK_GRAFT_SF_DIR as streams, ordered by (ts, event_id); ``ev`` (the
+rule_deploy benchmark's stream) reads the events fixture.
 
 ``compare`` diffs every plans/<tag>/<name>_<suffix_a>.txt against its
-<suffix_b> twin after normalizing expression ids (``#123``, ``#45L``) and
-exits 1 when any plan differs or has no twin.
+<suffix_b> twin after normalizing expression ids (``#123``, ``#45L``),
+JVM object identities (``SparkSession@3ddf9f69``) and the Python
+function a ``*InPandas*`` operator calls, and exits 1 when any plan
+differs or has no twin.
 
 Plans are captured at sf0.01 (plan SHAPE is scale-independent; AQE final
 plans may differ at runtime but the static formatted plan shows Exchange
@@ -24,6 +43,7 @@ are skipped unless named explicitly.
 from __future__ import annotations
 
 import difflib
+import importlib.util
 import os
 import re
 import sys
@@ -32,11 +52,17 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 _EXPR_ID = re.compile(r"#\d+L?")
+# JVM object identities in plan strings ("SparkSession@3ddf9f69")
+_JVM_ID = re.compile(r"(?<=[A-Za-z])@[0-9a-f]+\b")
+# the Python function a pandas operator calls:
+# "FlatMapGroupsInPandasWithState fn_count(...)" -> "... fn(...)"
+_PY_FN = re.compile(r"(\w+InPandas\w*) \w+\(")
 
 
 def _normalized(path: str) -> list[str]:
     with open(path) as f:
-        return _EXPR_ID.sub("#", f.read()).splitlines(keepends=True)
+        text = _JVM_ID.sub("@", _EXPR_ID.sub("#", f.read()))
+    return _PY_FN.sub(r"\1 fn(", text).splitlines(keepends=True)
 
 
 def compare(tag: str, suffix_a: str, suffix_b: str) -> int:
@@ -63,11 +89,54 @@ def compare(tag: str, suffix_a: str, suffix_b: str) -> int:
     return bad
 
 
+def _statements(source: str) -> list[tuple[str, str]]:
+    """(plan name, statement) pairs of a ``<file.py>:<NAME>`` source."""
+    path, attr = source.rsplit(":", 1)
+    path = os.path.abspath(path)
+    sys.path.insert(0, os.path.dirname(path))  # the file's sibling imports
+    spec = importlib.util.spec_from_file_location(
+        os.path.splitext(os.path.basename(path))[0], path
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    obj = getattr(mod, attr)
+    items = obj.items() if isinstance(obj, dict) else (
+        (f"{attr.strip('_').lower()}_{i:03d}", v) for i, v in enumerate(obj)
+    )
+    return [(name, v if isinstance(v, str) else v[0]) for name, v in items]
+
+
+def stream(tag: str, suffix: str, sources: list[str], sf_dir: str) -> None:
+    """Write the analyzed plan of every streaming statement in sources."""
+    from ekuiper_spark import Catalog, compile_sql, get_spark
+
+    out_dir = os.path.join(ROOT, "plans", tag)
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark("dump_plans")
+    cat = Catalog.from_dir(sf_dir)
+    cat.register_df("ev", cat.load(spark, "events", streaming=True))
+    for source in sources:
+        for name, sql in _statements(source):
+            try:
+                df = compile_sql(
+                    spark, sql, cat, streaming=True, order_cols=["ts", "event_id"]
+                )
+                plan = df._jdf.queryExecution().analyzed().toString()
+            except Exception as e:
+                plan = f"ERROR capturing plan: {type(e).__name__}: {e}"
+            path = os.path.join(out_dir, f"stream_{name}_{suffix}.txt")
+            with open(path, "w") as f:
+                f.write(f"-- {sql}\n{plan}")
+            print(f"# wrote {path} ({len(plan)} chars)")
+
+
 def main() -> None:
     if sys.argv[1:2] == ["compare"]:
         if len(sys.argv) != 5:
             sys.exit("usage: dump_plans.py compare <tag> <suffix_a> <suffix_b>")
         sys.exit(1 if compare(*sys.argv[2:5]) else 0)
+    if sys.argv[1:2] == ["stream"] and len(sys.argv) < 5:
+        sys.exit("usage: dump_plans.py stream <tag> <suffix> SOURCE [SOURCE ...]")
 
     import bench as benchmod
     import __spark_entry__ as entrymod
@@ -77,6 +146,9 @@ def main() -> None:
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    if tag == "stream":  # stream <tag> <suffix> SOURCE ...
+        stream(*sys.argv[2:4], sys.argv[4:], sf_dir)
+        return
     out_dir = os.path.join(ROOT, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
 

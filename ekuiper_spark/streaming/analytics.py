@@ -85,7 +85,9 @@ def _changed_step(st: dict, v: Any, valid: bool, ign: bool) -> bool:
 
 
 def _spec_step(spec: AnalyticSpec, st: dict, row: dict) -> Any:
-    """Advance one spec's state by one event; returns the output value."""
+    """Advance one spec's state by one event; returns the output value.
+    The per-event reference for :func:`_vector_spec`, which the operator
+    runs; tests compare the two."""
     valid = True
     if spec.when_col is not None:
         valid = bool(row[spec.when_col]) if row[spec.when_col] is not None else False
@@ -153,18 +155,6 @@ def _spec_step(spec: AnalyticSpec, st: dict, row: dict) -> Any:
             return (st.get("acc", 0.0) / c) if c else 0.0
         return st.get("acc", 0.0)
     raise ValueError(f"unknown analytic kind {k!r}")
-
-
-def _vectorizable(spec: AnalyticSpec) -> bool:
-    """All analytic kinds compute in pandas/numpy C ops, gated or not:
-    the WHEN mask filters which rows read-and-advance vs read-only, and
-    begin/reset accumulator segments vectorize per active run (the scan
-    touches only rows where the condition CHANGES).  Unknown kinds fall
-    back to the row loop."""
-    return (
-        spec.kind in ("lag", "latest", "changed_col", "had_changed")
-        or spec.kind.startswith("acc_")
-    )
 
 
 def _changed_vec(
@@ -430,29 +420,8 @@ def analytic_state_stream(
         if order:
             batch = batch.sort_values(order, kind="mergesort").reset_index(drop=True)
         res = batch[in_names].copy()
-        loop_specs = [(i, s) for i, s in enumerate(specs) if not _vectorizable(s)]
         for i, s in enumerate(specs):
-            if _vectorizable(s):
-                res[s.out] = _vector_spec(s, sts.setdefault(i, {}), batch)
-        if loop_specs:
-            need = sorted({
-                c for _, s in loop_specs
-                for c in s.in_cols + [s.when_col, s.begin_col, s.reset_col]
-                if c
-            })
-            rows = batch[need].to_dict("records")
-            outs: dict[str, list] = {s.out: [] for _, s in loop_specs}
-            for row in rows:
-                # pandas NaN -> None for state purity
-                row = {
-                    k: (None if isinstance(v, float) and pd.isna(v) else v)
-                    for k, v in row.items()
-                }
-                for i, s in loop_specs:
-                    st = sts.setdefault(i, {})
-                    outs[s.out].append(_spec_step(s, st, row))
-            for _, s in loop_specs:
-                res[s.out] = pd.Series(outs[s.out], dtype="object")
+            res[s.out] = _vector_spec(s, sts.setdefault(i, {}), batch)
         state.update((pickle.dumps(sts),))
         yield res
 

@@ -1217,10 +1217,7 @@ def window_agg_stream(
         if not timed_out:
             buf = append_rows(buf, read_batch(pdfs, slots, wm_us))
         if not len(buf[ts_col]):
-            if timed_out:
-                state.remove()
-            else:
-                save_state(state, slots, buf)
+            save_state(state, slots, buf)
             return
         # a late-but-in-tolerance arrival may sort before carried rows
         perm = np.argsort(buf[ts_col], kind="stable")
@@ -1232,16 +1229,16 @@ def window_agg_stream(
         keep_from, pending = close_sessions(buf, slots, limit, sink)
         buf = {c: buf[c][keep_from:] for c in buffered}
         slots["is_open"] = len(buf[ts_col]) > 0
-        if timed_out and not slots["is_open"]:
-            state.remove()
-        else:
-            save_state(state, slots, buf)
-            if slots["is_open"] and watermark_gated:
-                state.setTimeoutTimestamp(
-                    min(pending) if unit_ms else min(pending) // 1000
-                )
-            elif slots["is_open"] and flush_open_ms:
-                state.setTimeoutDuration(int(flush_open_ms))
+        # a timeout close keeps the key's state row like any other close:
+        # its emitted counter and fused analytic state carry to the key's
+        # next session
+        save_state(state, slots, buf)
+        if slots["is_open"] and watermark_gated:
+            state.setTimeoutTimestamp(
+                min(pending) if unit_ms else min(pending) // 1000
+            )
+        elif slots["is_open"] and flush_open_ms:
+            state.setTimeoutDuration(int(flush_open_ms))
         out = sink_frame(sink, key)
         if out is not None:
             yield out

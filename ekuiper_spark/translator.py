@@ -26,6 +26,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field as dc_field
 from typing import Any, Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -33,7 +34,7 @@ from pyspark.sql import Window as W
 
 from ekuiper_spark import functions as fregistry
 from ekuiper_spark.ast_nodes import (
-    Access, Between, Binary, CaseWhen, ColumnRef, Field, FuncCall, InExpr,
+    Access, Between, Binary, CaseWhen, ColumnRef, Field, FuncCall, GroupBy, InExpr,
     Index, JsonPath, Like, Literal, Node, SelectStatement, Slice, Unary,
     Wildcard, WindowSpec, conjoin, conjuncts, transform, walk,
 )
@@ -126,6 +127,29 @@ def _uses_window_meta(*nodes: Optional[Node]) -> bool:
         for m in walk(n)
     )
 
+
+def _pandas_state_window(w: Optional[WindowSpec]) -> bool:
+    """COUNT, STATE, SLIDING and capped (2-arg) SESSION windows: the kinds
+    a streaming rule runs through one pandas-state window operator."""
+    return w is not None and (
+        w.kind in ("count", "state", "sliding")
+        or (w.kind == "session" and len(w.args) >= 2)
+    )
+
+
+def _window_state_keys(group: GroupBy) -> tuple[list[Node], bool]:
+    """The state keys of a pandas-state window, and whether they are the
+    GROUP BY dims.  Capped sessions are keyed by the dims (session ==
+    group); a STATEWINDOW by its partition args, the dims sub-grouping
+    each window; COUNT and SLIDING windows run one global state
+    partition, the dims sub-grouping each window (sliding dims sub-group
+    a global frame)."""
+    w = group.window
+    if w.kind == "session":
+        return list(group.dims or []), True
+    if w.kind == "state":
+        return list(w.state_conds[2:]), False
+    return [], False
 
 
 def _shrink_window(df, shrink_us):
@@ -505,8 +529,8 @@ class Translator:
             )
         ) or bool(ctx.join_sliding_keys) or content_having
 
-        if window is not None and window.kind == "sliding" and self.streaming:
-            df = self._streaming_sliding(df, stmt, ctx)
+        if self.streaming and _pandas_state_window(window):
+            df = self._stateful_window(df, stmt, ctx)
         elif window is not None and window.kind == "sliding" and not sliding_content:
             # per-event emission: aggs become range-frame window functions;
             # GROUP BY dims become the frame partition (keyed sliding)
@@ -678,20 +702,6 @@ class Translator:
                 ).drop("__tu")
             if stmt.having is not None:
                 df = df.filter(F.col("__hav")).drop("__hav")
-        elif (
-            self.streaming
-            and group is not None
-            and group.window is not None
-            and (
-                group.window.kind in ("count", "state")
-                or (group.window.kind == "session" and len(group.window.args) >= 2)
-            )
-            and not has_agg
-        ):
-            # streaming COUNT/STATE/capped-SESSION window without
-            # aggregates: stateful content emission (the batch path below
-            # keys windows with window functions, which streaming rejects)
-            df = self._streaming_stateful_grouped(df, stmt, ctx)
         elif group is not None and group.window is not None and (
             not agg_ctx or content_having
         ):
@@ -741,26 +751,7 @@ class Translator:
                             hraw.setdefault(canon(ref), ref)
                     hraw_cols: list[str] = []
                     if hraw:
-                        okey = None
-                        ec0 = ctx.event_col
-                        if ctx.join_sliding_keys and "__rowu" in df.columns:
-                            okey = F.col("__rowu")
-                        elif ec0 and ec0 in df.columns:
-                            if df.columns.count(ec0) > 1:
-                                parts = []
-                                for a2 in ctx.source_order:
-                                    try:
-                                        df.select(F.col(f"{a2}.{ec0}"))
-                                        parts.append(
-                                            F.col(f"{a2}.{ec0}").alias(f"o{len(parts)}")
-                                        )
-                                    except Exception:
-                                        continue
-                                okey = F.struct(*parts) if parts else None
-                            else:
-                                okey = F.col(ec0)
-                        elif ctx.order_cols and ctx.order_cols[0] in df.columns:
-                            okey = F.col(ctx.order_cols[0])
+                        okey = self._scan_order_key(df, ctx)
                         for i3, (k3, ref) in enumerate(hraw.items()):
                             if k3 in ctx.dim_map or k3 in ctx.agg_map or (
                                 ref.source is None and ref.name.lower() in ctx.aliases
@@ -838,15 +829,7 @@ class Translator:
             df = self._frame_content_having(df, stmt, ctx)
             df = self._project(df, stmt, ctx)
         elif group is not None or has_agg:
-            if self.streaming and window is not None and (
-                window.kind in ("count", "state")
-                or (window.kind == "session" and len(window.args) >= 2)
-            ):
-                # capped sessions use window functions in batch; streaming
-                # needs the stateful per-key sessionizer
-                df = self._streaming_stateful_grouped(df, stmt, ctx)
-            else:
-                df = self._grouped(df, stmt, ctx)
+            df = self._grouped(df, stmt, ctx)
         else:
             df = self._project(df, stmt, ctx)
 
@@ -1043,12 +1026,7 @@ class Translator:
         # batch in stream order (reference AnalyticFuncsPlan below the
         # window).  Fusion currently covers the acc_* family (JSON-safe
         # numeric state) on globally-keyed COUNT/STATE/SESSION windows.
-        w = stmt.group.window if stmt.group else None
-        stateful_w = w is not None and (
-            w.kind in ("count", "state", "sliding")
-            or (w.kind == "session" and len(w.args) >= 2)
-        )
-        if stateful_w:
+        if _pandas_state_window(stmt.group.window if stmt.group else None):
             # r10: the whole analytic family fuses (lag/latest/
             # changed_col/had_changed/changed_cols/acc_*) — the window op
             # advances the same _vector_spec state per arriving batch.
@@ -1059,22 +1037,10 @@ class Translator:
             # r11 partition-aware fusion: the op's per-key GroupState
             # carries the analytic state, so fusion is sound exactly when
             # the analytics' OVER(PARTITION BY) keys EQUAL the window's
-            # STATE keys — capped sessions key by the GROUP BY dims,
-            # STATEWINDOW by its partition args; COUNT/SLIDING run one
-            # global state partition (sliding dims are SUBGROUPS of a
-            # global frame, not state keys).  Coarser/finer keys would
+            # STATE keys (_window_state_keys).  Coarser/finer keys would
             # split or merge analytic partitions across op keys.
-            if w.kind == "session":
-                skeys = {canon(d) for d in (stmt.group.dims or [])}
-            elif w.kind == "state":
-                skeys = {
-                    canon(p)
-                    for p in (w.state_conds[2:] if w.state_conds else [])
-                }
-            else:  # count / sliding: one global state partition
-                skeys = set()
-            pset = {canon(p) for p in parts}
-            if pset != skeys:
+            skeys = {canon(k) for k in _window_state_keys(stmt.group)[0]}
+            if {canon(p) for p in parts} != skeys:
                 raise NotImplementedError(
                     "analytic functions fuse into a stateful window only "
                     "when their OVER(PARTITION BY) keys EQUAL the "
@@ -2837,31 +2803,7 @@ class Translator:
             for s in stmt.order:
                 for ref in self._find_raw_cols(s.expr):
                     raw_refs.setdefault(canon(ref), ref)
-            okey_col = None
-            if ctx.join_sliding_keys and "__rowu" in df.columns:
-                # windowed join: the bare event col exists on BOTH sides;
-                # __rowu carries the reference's join scan order
-                okey_col = F.col("__rowu")
-            elif ctx.event_col and ctx.event_col in df.columns:
-                ec0 = ctx.event_col
-                if df.columns.count(ec0) > 1:
-                    # joined frame carries the bare event col from BOTH
-                    # sides: the reference's join scan iterates left rows
-                    # in order then right rows in order, so "first" ties
-                    # on the left time break by the RIGHT time — order by
-                    # the struct of every side's event col (FROM order)
-                    parts = []
-                    for a in ctx.source_order:
-                        try:
-                            df.select(F.col(f"{a}.{ec0}"))
-                            parts.append(F.col(f"{a}.{ec0}").alias(f"o{len(parts)}"))
-                        except Exception:
-                            continue
-                    okey_col = F.struct(*parts) if parts else None
-                else:
-                    okey_col = F.col(ec0)
-            elif ctx.order_cols and ctx.order_cols[0] in df.columns:
-                okey_col = F.col(ctx.order_cols[0])
+            okey_col = self._scan_order_key(df, ctx)
             nfr = 0
             for key, ref in raw_refs.items():
                 if key in ctx.dim_map or key in ctx.agg_map:
@@ -3299,6 +3241,35 @@ class Translator:
         "median": "median", "last_value": "last",
     }
 
+    @staticmethod
+    def _scan_order_key(df: DataFrame, ctx: TranslateCtx) -> Optional[Column]:
+        """The order that picks a window collection's FIRST row (bare
+        columns beside aggregates read Content[0], row.go:743-748): a
+        windowed join's ``__rowu`` (the reference's join scan order), else
+        the event column, else the first order column."""
+        ec = ctx.event_col
+        if ctx.join_sliding_keys and "__rowu" in df.columns:
+            return F.col("__rowu")
+        if ec and ec in df.columns:
+            if df.columns.count(ec) == 1:
+                return F.col(ec)
+            # a joined frame carries the bare event col from BOTH sides:
+            # the join scan iterates left rows in order then right rows in
+            # order, so "first" ties on the left time break by the RIGHT
+            # time — order by the struct of every side's event col (FROM
+            # order)
+            parts = []
+            for a in ctx.source_order:
+                try:
+                    df.select(F.col(f"{a}.{ec}"))
+                except AnalysisException:
+                    continue
+                parts.append(F.col(f"{a}.{ec}").alias(f"o{len(parts)}"))
+            return F.struct(*parts) if parts else None
+        if ctx.order_cols and ctx.order_cols[0] in df.columns:
+            return F.col(ctx.order_cols[0])
+        return None
+
     def _stream_agg_specs(self, df: DataFrame, stmt: SelectStatement, ctx: TranslateCtx):
         """Materialize aggregate input expressions as hidden columns and
         build AggSpecs; registers ctx.agg_map for post-agg projection."""
@@ -3398,268 +3369,154 @@ class Translator:
             ctx.dim_map[key] = name
         return df, specs
 
-    def _streaming_stateful_grouped(
+    def _stateful_window(
         self, df: DataFrame, stmt: SelectStatement, ctx: TranslateCtx
     ) -> DataFrame:
-        from ekuiper_spark.streaming.stateful import window_agg_stream
+        """Streaming COUNT, STATE, capped SESSION and SLIDING windows: one
+        pandas-state operator (``stateful.window_agg_stream``) buffers
+        rows, cuts windows and reduces them — the streaming twin of the
+        batch window lowerings, which rely on window functions Spark
+        rejects on streaming frames."""
+        from ekuiper_spark.streaming.stateful import AggSpec, window_agg_stream
 
         group = stmt.group
         window = group.window
+        sliding = window.kind == "sliding"
         if window.filter is not None:
             df = df.filter(self._expr(window.filter, ctx))
-
         # GROUP BY dims sub-group WITHIN each window (the reference's
         # window-then-aggregate order: the window op batches rows, then
-        # AggregateOp groups the batch contents)
-        subgroups: list[str] = []
+        # AggregateOp groups the batch contents) unless they key the state
+        grp: list[str] = []
         for i, d in enumerate(group.dims or []):
             df, name = self._dim_col(df, d, i, ctx)
-            subgroups.append(name)
-
-        kw: dict = {}
-        dims: list[str] = []
-        if window.kind == "count":
-            kw["n"] = window.args[0]
-            # non-aggregated SELECT over a count window emits the window
-            # CONTENT per row (reference window-collection -> ProjectOp;
-            # agg-in-WHERE conjuncts — merged into HAVING upstream —
-            # filter rows against frame aggregates, filter_operator.go:
-            # 84-87); aggregated SELECTs keep the one-row-per-window path
-            fields_agg = any(self._find_aggs(f.expr) for f in stmt.fields)
-            # GROUP BY dims => aggregate context even without aggregate
-            # functions (WithAggFields): one row per (window, dim group),
-            # bare columns = first of group via the first-spec resolution
-            # below — never content emission
-            if not fields_agg and not subgroups:
-                kw["emit_content"] = True
-                kw["passthrough"] = [
-                    c for c in df.columns
-                    if not c.startswith("__") and c not in ("window", "_metadata")
-                ]
-        elif window.kind == "session":
-            # SESSIONWINDOW(unit, length, interval): length=cap,
-            # interval=timeout (window_op.go:304); sessions are keyed by
-            # the GROUP BY dims (per-key state = the scale path)
-            kw["cap_us"] = int(window.args[0] * UNIT_SECONDS[window.unit] * 1_000_000)
-            kw["timeout_us"] = int(window.args[1] * UNIT_SECONDS[window.unit] * 1_000_000)
-            if ctx.event_is_long:
-                # ms-native long event columns: frame math runs in the
-                # column's own unit (see _streaming_sliding), and the
-                # watermark gate compares in MS too
-                kw["cap_us"] //= 1000
-                kw["timeout_us"] //= 1000
-                kw["unit_ms"] = True
-            # rule option session_flush_ms: close the trailing open session
-            # by processing-time state timeout (the reference's wall-clock
-            # ticker close, window_op.go:304-347); off by default so
-            # bounded replays stay deterministic
-            flush = (self.rule_ctx.get("props") or {}).get("session_flush_ms")
-            if flush:
-                kw["flush_open_ms"] = int(flush)
-            if self.watermark:
-                # a late-tolerance makes the rule event-time: sessions
-                # close when the watermark passes their close time (the
-                # reference's event_window_trigger discipline), so
-                # in-tolerance out-of-order events still join
-                kw["watermark_gated"] = True
-            # window_start()/window_end()/event_time() in the SELECT pull
-            # per-session bounds from the sessionizer (ws-at-tick rule)
-            if _uses_window_meta(*stmt.fields, stmt.having):
-                kw["emit_bounds"] = True
-            dims = subgroups
-            subgroups = []
-            # non-aggregated SELECT over a capped session: window CONTENT
-            # emits per row (count/state content contract).  With GROUP BY
-            # dims the projection is in aggregate context (WithAggFields)
-            # and emits ONE row per session instead (sessions are keyed by
-            # the dims, so session == group), bare columns = first of
-            # session via the first-spec resolution below.
-            if not any(self._find_aggs(f.expr) for f in stmt.fields) and not dims:
-                kw["emit_content"] = True
-                kw["passthrough"] = [
-                    c for c in df.columns
-                    if not c.startswith("__")
-                    and c not in ("window", "_metadata")
-                    and c not in dims
-                ]
-        else:  # state
-            conds = window.state_conds
-            for i, p in enumerate(conds[2:]):
+            grp.append(name)
+        keys, keyed_by_dims = _window_state_keys(group)
+        dims, subgroups = (grp, []) if keyed_by_dims else ([], grp)
+        if not keyed_by_dims:
+            for i, p in enumerate(keys):
                 df, name = self._dim_col(df, p, i, ctx, prefix="__spart")
                 dims.append(name)
-            df = df.withColumn("__swb", self._expr(conds[0], ctx))
-            kw["begin_col"] = "__swb"
-            if len(conds) > 1:
-                df = df.withColumn("__swe", self._expr(conds[1], ctx))
-                kw["emit_col"] = "__swe"
-            # non-aggregated SELECT over a state window: window CONTENT
-            # emits per row (same contract as the count-window branch);
-            # GROUP BY dims => one row per (window, dim group) instead
-            if not any(self._find_aggs(f.expr) for f in stmt.fields) and not subgroups:
-                kw["emit_content"] = True
-                # dims already emit as the state key; passthrough carries
-                # the remaining visible row columns
-                kw["passthrough"] = [
-                    c for c in df.columns
-                    if not c.startswith("__")
-                    and c not in ("window", "_metadata")
-                    and c not in dims
-                ]
+        df, kw = self._window_trigger_kw(df, window, ctx)
+        # window_start()/window_end()/event_time(): a session emits its
+        # bounds, a sliding window its trigger time (both below)
+        want_meta = _uses_window_meta(*stmt.fields, stmt.having)
+        kw["emit_bounds"] = want_meta and window.kind == "session"
 
+        # a non-aggregated SELECT without dims emits the window CONTENT per
+        # row (reference window collection -> ProjectOp); GROUP BY dims put
+        # it in aggregate context (WithAggFields): one row per (window,
+        # dim group), bare columns = first of group.  Sliding windows emit
+        # per trigger instead: plain columns ride with the trigger row.
+        emit_content = not sliding and not grp and not any(
+            self._find_aggs(f.expr) for f in stmt.fields
+        )
+        passthrough: list[str] = []
+        if emit_content:
+            passthrough = [
+                c for c in df.columns
+                if not c.startswith("__")
+                and c not in ("window", "_metadata")
+                and c not in dims
+            ]
+        elif sliding:
+            for f in stmt.fields:
+                for n in self._find_raw_cols(f.expr):
+                    if (
+                        n.source is None
+                        and n.name in df.columns
+                        and n.name not in subgroups
+                        and n.name not in passthrough
+                    ):
+                        passthrough.append(n.name)
         if ctx.pending_analytics:
-            # fused analytics: the stateful op advances acc_* state per
-            # arriving batch and materializes the outputs as virtual
-            # columns (Spark allows one applyInPandasWithState per query)
+            # fused analytics (AnalyticFuncsPlan BELOW the window; Spark
+            # allows one applyInPandasWithState per query): the op advances
+            # their state per arriving batch and adds the outputs as
+            # virtual columns
             kw["pre_analytics"] = ctx.pending_analytics
-        pending_outs = {s.out for s in ctx.pending_analytics}
-        if kw.get("emit_content"):
-            # pre-window analytic/accumulator outputs (hoisted __an*/
-            # begin-reset acc columns, AnalyticFuncsPlan BELOW the window
-            # in the reference stack) ride through content emission so
-            # the projection above the stateful op can still read them
-            an_cols = list(ctx.analytic_map.values()) + [
-                oc for outs in ctx.cc_stream.values() for oc, _vis in outs
-            ]
-            kw["passthrough"] = list(kw.get("passthrough", ())) + [
-                c for c in an_cols if c in df.columns or c in pending_outs
-            ]
+        if emit_content or sliding:
+            # pre-window analytic outputs ride the buffer like raw columns
+            # so the projection above the op can still read them
+            pending = {s.out for s in ctx.pending_analytics}
+            for oc in list(ctx.analytic_map.values()) + [
+                o for outs in ctx.cc_stream.values() for o, _v in outs
+            ]:
+                if (oc in pending or oc in df.columns) and oc not in passthrough:
+                    passthrough.append(oc)
 
-        # row_number() over the window CONTENT (reference WindowFuncPlan
-        # sits above the window, windowfunc_operator.go:27-160): Spark
-        # rejects rank window functions on streaming frames, so the rank
-        # is computed INSIDE the stateful operator per emitted window
-        rn_calls: dict[str, FuncCall] = {}
-        for f in stmt.fields:
-            for c in self._find_fn_calls(f.expr, "row_number"):
-                rn_calls.setdefault(canon(c), c)
-        winfunc_specs: list = []
-        grp_rank_pending: list[tuple] = []  # (ckey, call) resolved after specs
-        if rn_calls:
-            from ekuiper_spark.streaming.stateful import WinFuncSpec
-
-            if kw.get("emit_content"):
-                for i, (ckey, call) in enumerate(rn_calls.items()):
-                    parts, orders, ascs = [], [], []
-                    for j, p in enumerate(call.partition_by):
-                        nm = f"__wf{i}p{j}"
-                        df = df.withColumn(nm, self._expr(p, ctx))
-                        parts.append(nm)
-                    for j, s in enumerate(call.order_by):
-                        nm = f"__wf{i}o{j}"
-                        df = df.withColumn(nm, self._expr(s.expr, ctx))
-                        orders.append(nm)
-                        ascs.append(bool(s.asc))
-                    out_nm = f"__wf{i}"
-                    winfunc_specs.append(
-                        WinFuncSpec(out_nm, tuple(parts), tuple(orders), tuple(ascs))
-                    )
-                    ctx.winfunc_map[ckey] = out_nm
-                kw["winfuncs"] = winfunc_specs
-            elif subgroups:
-                # GROUP BY dims: rank the GROUPS within each window
-                # (WindowFuncPlan above AggregatePlan, planner.go:807-833;
-                # same semantics as the batch __grpord path) — OVER keys
-                # resolve to grouped-row OUTPUT columns after the agg
-                # specs are built below
-                grp_rank_pending = list(rn_calls.items())
-            elif window.kind == "session":
-                # the dims KEY the sessionizer (engine-wide convention,
-                # batch included — `_grouped` materializes dims before the
-                # session gaps-and-islands partition), so every emitted
-                # window holds exactly ONE group and the group rank is
-                # constant 1 in both modes (batch-verified; the reference's
-                # global-session + cross-dim rank shape doesn't arise
-                # under per-dim sessions)
-                for ckey in rn_calls:
-                    ctx.rank_const1.add(ckey)
-            # else: aggregated SELECT without dims — the rank of the
-            # collection's first row is 1 (rowNumberFuncHandle assigns
-            # 1..n per content row; the aggregate projection reads
-            # Content[0]), which _expr's no-window branch already yields
-
-        df, specs = self._stream_agg_specs(df, stmt, ctx)
-        if grp_rank_pending:
-            from ekuiper_spark.streaming.stateful import AggSpec, WinFuncSpec
-
-            def _grp_out_col(node: Node, tag: str) -> str:
-                """Resolve an OVER key to a grouped-row OUTPUT column:
-                a dim -> its subgroup col; an aggregate -> its spec out
-                (registering a hidden spec if absent); a raw column ->
-                a hidden first-of-group spec."""
-                nonlocal df
-                k = canon(node)
-                if k in ctx.dim_map:
-                    return ctx.dim_map[k]
-                if k in ctx.agg_map:
-                    return ctx.agg_map[k]
-                aggs_in = self._find_aggs(node)
-                if aggs_in:
-                    if len(aggs_in) != 1 or canon(aggs_in[0]) != k:
-                        raise NotImplementedError(
-                            "row_number OVER keys over grouped windows "
-                            "support a dim, a bare aggregate call, or a "
-                            "raw column (batch supports expressions)"
-                        )
-                    call2 = aggs_in[0]
-                    op2 = self._STREAM_AGG_OPS.get(call2.name.lower())
-                    if op2 is None:
-                        raise NotImplementedError(
-                            f"{call2.name} is not supported in streaming "
-                            "stateful windows"
-                        )
-                    out2 = f"__wfagg{tag}"
-                    args2 = [a for a in call2.args if not isinstance(a, Wildcard)]
-                    in2 = None
-                    if args2:
-                        in2 = f"__wfin{tag}"
-                        df = df.withColumn(in2, self._expr(args2[0], ctx))
-                    specs.append(AggSpec(op2, in2, out2))
-                    ctx.agg_map[k] = out2
-                    return out2
-                # raw column / expression: first-of-group
-                out2 = f"__wffr{tag}"
-                df = df.withColumn(out2, self._expr(node, ctx))
-                specs.append(AggSpec("first", out2, out2))
-                ctx.dim_map[k] = out2
-                return out2
-
-            for i, (ckey, call) in enumerate(grp_rank_pending):
-                parts = [
-                    _grp_out_col(p, f"{i}p{j}") for j, p in enumerate(call.partition_by)
-                ]
-                orders, ascs = [], []
-                for j, s in enumerate(call.order_by):
-                    orders.append(_grp_out_col(s.expr, f"{i}o{j}"))
-                    ascs.append(bool(s.asc))
-                out_nm = f"__wf{i}"
-                winfunc_specs.append(
-                    WinFuncSpec(
-                        out_nm, tuple(parts), tuple(orders), tuple(ascs),
-                        group_rank=True,
-                    )
-                )
-                ctx.winfunc_map[ckey] = out_nm
-            kw["winfuncs"] = winfunc_specs
-        if not kw.get("emit_content"):
-            # aggregate context (dims and/or aggregate functions): bare
-            # non-dim columns become first-of-group specs
-            df, specs = self._stream_raw_first_specs(df, stmt, ctx, specs)
-        if ctx.deferred_where is not None and window.kind == "count":
-            # WHERE above the count window (windowPlan.go:92-95): the
-            # stateful operator forms windows from ALL rows and prunes
-            # content by this keep column; all-pruned windows drop
-            df = df.withColumn(
-                "__keep",
-                F.coalesce(
-                    self._expr(ctx.deferred_where, ctx).cast("boolean"),
-                    F.lit(False),
-                ),
+        rank_calls: list = []
+        if not sliding:
+            df, rank_calls = self._stream_window_ranks(
+                df, stmt, ctx, emit_content, subgroups, keyed_by_dims, kw
             )
-            kw["keep_col"] = "__keep"
+        df, specs = self._stream_agg_specs(df, stmt, ctx)
+        if rank_calls:
+            df, specs = self._stream_group_ranks(df, ctx, specs, rank_calls, kw)
+        if not emit_content and not sliding:
+            df, specs = self._stream_raw_first_specs(df, stmt, ctx, specs)
+        frame_content = False
+        if sliding:
+            if window.trigger is not None:
+                # flag conjuncts evaluate natively per row; a gap conjunct
+                # routes into the op's stateful lastHit gate
+                flag_node, gap = self._split_plain_trigger(window.trigger, ctx)
+                df = df.withColumn(
+                    "__trig",
+                    self._expr(flag_node, ctx) if flag_node is not None else F.lit(True),
+                )
+                passthrough.append("__trig")
+                if gap is not None:
+                    # _throttle_spec returns K in µs; the op's frame math
+                    # runs in the ts column's OWN unit
+                    kw["gap_throttle"] = (
+                        gap[0] // 1000 if ctx.event_is_long else gap[0], gap[1]
+                    )
+            if want_meta and not subgroups:
+                # window_start()/window_end()/event_time() read the TRIGGER
+                # time: a hidden trigger-row passthrough (__-prefixed pass
+                # cols stay trigger-local, not first-of-frame)
+                ec = ctx.event_col
+                df = df.withColumn(
+                    "__et",
+                    F.timestamp_millis(F.col(ec)) if ctx.event_is_long else F.col(ec),
+                )
+                passthrough.append("__et")
+            # plain non-agg unkeyed sliding emits the WHOLE frame's rows
+            # per trigger (reference RangeSet over the window collection);
+            # the delayed/watermark-gated forms have their own content
+            # disciplines
+            frame_content = not (
+                specs or subgroups or kw["delay_us"] or self.watermark
+            )
+        if ctx.deferred_where is not None:
+            keep = self._expr(ctx.deferred_where, ctx)
+            if sliding and not (specs or subgroups or frame_content):
+                # delayed/gated non-agg sliding: the filter applies to the
+                # trigger rows (their pending-trigger content paths carry
+                # their own WHERE discipline)
+                df = df.filter(keep)
+            else:
+                # WHERE above the COUNT/SLIDING window (windowPlan.go:92-95):
+                # windows form from ALL rows and the op prunes their
+                # CONTENT by this keep column; all-pruned windows drop
+                df = df.withColumn(
+                    "__keep", F.coalesce(keep.cast("boolean"), F.lit(False))
+                )
+                kw["keep_col"] = "__keep"
             ctx.deferred_where = None
         if ctx.deferred_prefilter is not None:
             kw["pre_filter_col"] = ctx.deferred_prefilter
             ctx.deferred_prefilter = None
+        if sliding and subgroups:
+            # sliding dims sub-group the frame CONTENT per trigger
+            # (TestWindowRule4): the whole frame is visible to every
+            # trigger and the raw passthrough columns become per-subgroup
+            # `first` aggregates (project-over-grouped first-row rule)
+            specs = specs + [AggSpec("first", c, c) for c in passthrough if c != "__trig"]
+            passthrough = [c for c in passthrough if c == "__trig"]
+            kw["emit_trigger_us"] = want_meta
+        kw["frame_content"] = frame_content
         out = window_agg_stream(
             df,
             window.kind,
@@ -3667,229 +3524,199 @@ class Translator:
             subgroups=subgroups,
             order_cols=ctx.order_cols,
             aggs=specs,
+            passthrough=passthrough,
+            emit_content=emit_content,
             **kw,
         )
-        ctx.post_agg = True
-        ctx.window_col = None
-        if kw.get("emit_bounds"):
-            out = out.withColumn(
-                "window",
-                F.struct(
-                    F.timestamp_micros(F.col("__ws")).alias("start"),
-                    F.timestamp_micros(F.col("__we")).alias("end"),
-                ),
-            ).drop("__ws", "__we")
-            ctx.window_col = "window"
-            ctx.window_bounds_ms = ctx.event_is_long
-            ctx.event_col = "window.end"
-        if stmt.having is not None:
-            out = out.filter(self._expr(stmt.having, ctx))
-        return self._project(out, stmt, ctx)
-
-    def _streaming_sliding(
-        self, df: DataFrame, stmt: SelectStatement, ctx: TranslateCtx
-    ) -> DataFrame:
-        from ekuiper_spark.streaming.stateful import window_agg_stream
-
-        group = stmt.group
-        window = group.window
-        if window.filter is not None:
-            df = df.filter(self._expr(window.filter, ctx))
-        length_us = int(window.args[0] * UNIT_SECONDS[window.unit] * 1_000_000)
-        delay_us = (
-            int(window.args[1] * UNIT_SECONDS[window.unit] * 1_000_000)
-            if len(window.args) > 1
-            else 0
-        )
-        if ctx.event_is_long:
-            # long event columns carry epoch MILLIS (the reference's
-            # native unit) and the stateful reducers do all frame math in
-            # the column's own unit — scale the window parameters to ms
-            # (they'd otherwise be 1000x too wide)
-            length_us //= 1000
-            delay_us //= 1000
-
-        # GROUP BY dims key the per-event frame (keyed sliding = scale path)
-        dims: list[str] = []
-        for i, d in enumerate(group.dims or []):
-            df, name = self._dim_col(df, d, i, ctx)
-            dims.append(name)
-
-        df, specs = self._stream_agg_specs(df, stmt, ctx)
-
-        # plain columns referenced outside aggregates ride along with the
-        # emitting row (per-event emission keeps the row visible)
-        passthrough: list[str] = []
-        for f in stmt.fields:
-            for n in self._find_raw_cols(f.expr):
-                if (
-                    n.source is None
-                    and n.name in df.columns
-                    and n.name not in dims
-                    and n.name not in passthrough
-                ):
-                    passthrough.append(n.name)
-        keep_kw: dict = {}
-        if ctx.pending_analytics:
-            # fused analytics (AnalyticFuncsPlan BELOW the window): the
-            # sliding op advances the state per arriving batch; the
-            # outputs ride the buffer like raw columns (first-of-frame /
-            # per-subgroup-first in aggregate context, row value in
-            # content emission)
-            keep_kw["pre_analytics"] = ctx.pending_analytics
-            pend_outs = {s.out for s in ctx.pending_analytics}
-            for oc in list(ctx.analytic_map.values()) + [
-                o for outs in ctx.cc_stream.values() for o, _v in outs
-            ]:
-                if (oc in pend_outs or oc in df.columns) and oc not in passthrough:
-                    passthrough.append(oc)
-        if window.trigger is not None:
-            # flag conjuncts evaluate natively per row; a gap conjunct
-            # routes into the op's stateful lastHit gate — the decision
-            # rides __trig so the downstream filter stays uniform
-            flag_node, gap_spec_sl = self._split_plain_trigger(
-                window.trigger, ctx
-            )
-            df = df.withColumn(
-                "__trig",
-                self._expr(flag_node, ctx)
-                if flag_node is not None
-                else F.lit(True),
-            )
-            passthrough.append("__trig")
-            if gap_spec_sl is not None:
-                # _throttle_spec returns K in µs; the op's frame math
-                # runs in the ts column's OWN unit (ms for long cols)
-                keep_kw["gap_throttle"] = (
-                    gap_spec_sl[0] // 1000 if ctx.event_is_long else gap_spec_sl[0],
-                    gap_spec_sl[1],
-                )
-
-        # window_start()/window_end()/event_time() need the TRIGGER time on
-        # the emission — carried as a hidden trigger-row passthrough
-        # (__-prefixed pass cols stay trigger-local, not first-of-frame)
-        want_meta = _uses_window_meta(*stmt.fields)
-        if want_meta and not dims:
-            ec = ctx.event_col
-            df = df.withColumn(
-                "__et",
-                F.timestamp_millis(F.col(ec)) if ctx.event_is_long else F.col(ec),
-            )
-            passthrough.append("__et")
-
-        # plain non-agg unkeyed sliding emits the WHOLE frame's rows per
-        # trigger (reference RangeSet over the window collection; equals
-        # the batch membership join).  The delayed/watermark-gated forms
-        # have their own content disciplines.
-        frame_content = (
-            not specs and not dims and not delay_us and not self.watermark
-        )
-        if ctx.deferred_where is not None:
-            if not specs and not dims and not frame_content:
-                # delayed/gated non-agg forms: the filter applies to the
-                # trigger rows (their pending-trigger content paths carry
-                # their own WHERE discipline)
-                df = df.filter(self._expr(ctx.deferred_where, ctx))
-            else:
-                # WHERE above the window: all rows trigger and fill
-                # frames; the keep column prunes frame CONTENT inside
-                # the stateful operator (windowPlan.go:92-95)
-                df = df.withColumn(
-                    "__keep",
-                    F.coalesce(
-                        self._expr(ctx.deferred_where, ctx).cast("boolean"),
-                        F.lit(False),
-                    ),
-                )
-                keep_kw["keep_col"] = "__keep"
-            ctx.deferred_where = None
-
-        if dims:
-            # reference window-then-aggregate order: GROUP BY dims
-            # sub-group the frame CONTENT per trigger (TestWindowRule4),
-            # so the whole frame must be visible to every trigger — the
-            # state key is global (reference single-process semantics)
-            # and raw passthrough columns become per-subgroup `first`
-            # aggregates (project-over-grouped first-row rule)
-            from ekuiper_spark.streaming.stateful import AggSpec
-
-            extra_specs = [
-                AggSpec("first", c, c)
-                for c in passthrough
-                if c != "__trig"
-            ]
-            # SLIDINGWINDOW(unit, L, D) with dims: frames reach D forward;
-            # a trigger emits once a covering row (or the watermark)
-            # passes t + D — the delayed-trigger threshold discipline of
-            # the unkeyed path, sub-grouped per frame (fn_sliding_delay)
-            if self.watermark:
-                keep_kw["watermark_gated"] = True
-                keep_kw["unit_ms"] = bool(ctx.event_is_long)
-            if want_meta:
-                # window_start/end/event_time: the op emits the trigger
-                # time (col unit) per output row; converted to the same
-                # hidden __et TIMESTAMP the unkeyed path uses below
-                keep_kw["emit_trigger_us"] = True
-            out = window_agg_stream(
-                df,
-                "sliding",
-                length_us=length_us,
-                delay_us=delay_us,
-                dims=(),
-                subgroups=dims,
-                order_cols=ctx.order_cols,
-                aggs=list(specs) + extra_specs,
-                passthrough=["__trig"] if window.trigger is not None else (),
-                **keep_kw,
-            )
-        else:
-            if self.watermark:
-                # isEventTime rules gate sliding triggers on the watermark
-                # (window_rule_test.go Interval11/12); frame math runs in
-                # the event column's own unit
-                keep_kw["watermark_gated"] = True
-                keep_kw["unit_ms"] = bool(ctx.event_is_long)
-            if frame_content:
-                keep_kw["frame_content"] = True
-            out = window_agg_stream(
-                df,
-                "sliding",
-                length_us=length_us,
-                delay_us=delay_us,
-                dims=dims,
-                order_cols=ctx.order_cols,
-                aggs=specs,
-                passthrough=passthrough,
-                **keep_kw,
-            )
-        if window.trigger is not None and not dims:
+        if sliding and window.trigger is not None and not subgroups:
             out = out.filter(F.col("__trig")).drop("__trig")
         ctx.post_agg = True
         ctx.window_col = None
-        if want_meta and dims:
-            # dims mode: the op emitted the raw trigger time; rebuild the
-            # same hidden __et TIMESTAMP the unkeyed path carries
-            out = out.withColumn(
-                "__et",
-                F.timestamp_millis(F.col("__et_us"))
-                if ctx.event_is_long
-                else F.timestamp_micros(F.col("__et_us")),
-            ).drop("__et_us")
-        if want_meta:
+        if kw["emit_bounds"]:
+            out = self._meta_window(out, F.col("__ws"), F.col("__we"), ctx)
+            out = out.drop("__ws", "__we")
+            ctx.event_col = "window.end"
+        elif sliding and want_meta:
+            if subgroups:
+                # the op emitted the raw trigger time (column unit)
+                out = out.withColumn(
+                    "__et",
+                    F.timestamp_millis(F.col("__et_us"))
+                    if ctx.event_is_long
+                    else F.timestamp_micros(F.col("__et_us")),
+                ).drop("__et_us")
             et_us = epoch_us(F.col("__et"))
-            out = out.withColumn(
-                "window",
-                F.struct(
-                    F.timestamp_micros(et_us - length_us).alias("start"),
-                    F.timestamp_micros(et_us + delay_us).alias("end"),
-                ),
+            out = self._meta_window(
+                out, et_us - kw["length_us"], et_us + kw["delay_us"], ctx
             )
-            ctx.window_col = "window"
-            ctx.window_bounds_ms = ctx.event_is_long
             ctx.event_col = "__et"
-            out = self._project(out, stmt, ctx)
-            return out.drop("__et") if "__et" in out.columns else out
-        return self._project(out, stmt, ctx)
+        if stmt.having is not None:
+            out = out.filter(self._expr(stmt.having, ctx))
+        out = self._project(out, stmt, ctx)
+        return out.drop("__et") if "__et" in out.columns else out
+
+    def _window_trigger_kw(self, df: DataFrame, w: WindowSpec, ctx: TranslateCtx):
+        """The window kind's trigger arguments to ``window_agg_stream``
+        (the reference's per-kind trigger switch, window_op.go:267-292)."""
+        if w.kind == "count":
+            return df, {"n": w.args[0]}
+        if w.kind == "state":
+            df = df.withColumn("__swb", self._expr(w.state_conds[0], ctx))
+            kw = {"begin_col": "__swb"}
+            if len(w.state_conds) > 1:
+                df = df.withColumn("__swe", self._expr(w.state_conds[1], ctx))
+                kw["emit_col"] = "__swe"
+            return df, kw
+        # SESSIONWINDOW(unit, length=cap, interval=timeout) (window_op.go:
+        # 304) and SLIDINGWINDOW(unit, length[, delay]).  Long event
+        # columns carry epoch MILLIS (the reference's native unit) and the
+        # op does all frame math in the column's own unit, so the spans
+        # scale to ms there; a late-tolerance makes the rule event-time:
+        # windows close once the watermark passes them (the reference's
+        # event_window_trigger discipline)
+        spans = [
+            int(a * UNIT_SECONDS[w.unit] * 1_000_000) // (1000 if ctx.event_is_long else 1)
+            for a in w.args[:2]
+        ]
+        kw = {"watermark_gated": bool(self.watermark), "unit_ms": ctx.event_is_long}
+        if w.kind == "sliding":
+            kw["length_us"] = spans[0]
+            kw["delay_us"] = spans[1] if len(spans) > 1 else 0
+            return df, kw
+        kw["cap_us"], kw["timeout_us"] = spans
+        # rule option session_flush_ms: close the trailing open session by
+        # processing-time state timeout (the reference's wall-clock ticker
+        # close, window_op.go:304-347); off by default so bounded replays
+        # stay deterministic
+        flush = (self.rule_ctx.get("props") or {}).get("session_flush_ms")
+        if flush:
+            kw["flush_open_ms"] = int(flush)
+        return df, kw
+
+    @staticmethod
+    def _meta_window(out: DataFrame, start_us: Column, end_us: Column, ctx) -> DataFrame:
+        """The ``window`` struct window_start()/window_end() read above a
+        stateful window op."""
+        ctx.window_col = "window"
+        ctx.window_bounds_ms = ctx.event_is_long
+        return out.withColumn(
+            "window",
+            F.struct(
+                F.timestamp_micros(start_us).alias("start"),
+                F.timestamp_micros(end_us).alias("end"),
+            ),
+        )
+
+    def _stream_window_ranks(
+        self, df, stmt, ctx, emit_content, subgroups, keyed_by_dims, kw
+    ):
+        """row_number() over a stateful window (reference WindowFuncPlan
+        sits above the window, windowfunc_operator.go:27-160): Spark
+        rejects rank window functions on streaming frames, so the op ranks
+        each emitted window.  Returns the frame and the calls that rank
+        the GROUPS of a window once the agg specs exist."""
+        from ekuiper_spark.streaming.stateful import WinFuncSpec
+
+        rn_calls: dict[str, FuncCall] = {}
+        for f in stmt.fields:
+            for c in self._find_fn_calls(f.expr, "row_number"):
+                rn_calls.setdefault(canon(c), c)
+        if not rn_calls:
+            return df, []
+        if emit_content:
+            specs = []
+            for i, (ckey, call) in enumerate(rn_calls.items()):
+                parts, orders, ascs = [], [], []
+                for j, p in enumerate(call.partition_by):
+                    nm = f"__wf{i}p{j}"
+                    df = df.withColumn(nm, self._expr(p, ctx))
+                    parts.append(nm)
+                for j, s in enumerate(call.order_by):
+                    nm = f"__wf{i}o{j}"
+                    df = df.withColumn(nm, self._expr(s.expr, ctx))
+                    orders.append(nm)
+                    ascs.append(bool(s.asc))
+                out_nm = f"__wf{i}"
+                specs.append(WinFuncSpec(out_nm, tuple(parts), tuple(orders), tuple(ascs)))
+                ctx.winfunc_map[ckey] = out_nm
+            kw["winfuncs"] = specs
+            return df, []
+        if subgroups:
+            # GROUP BY dims: rank the GROUPS within each window
+            # (WindowFuncPlan above AggregatePlan, planner.go:807-833; same
+            # semantics as the batch __grpord path)
+            return df, list(rn_calls.items())
+        if keyed_by_dims:
+            # the dims KEY the window (capped sessions, batch included), so
+            # every emitted window holds exactly ONE group and the group
+            # rank is constant 1
+            ctx.rank_const1.update(rn_calls)
+        # else: aggregated SELECT without dims — the rank of the
+        # collection's first row is 1 (rowNumberFuncHandle assigns 1..n per
+        # content row; the aggregate projection reads Content[0]), which
+        # _expr's no-window branch already yields
+        return df, []
+
+    def _stream_group_ranks(self, df, ctx, specs, rank_calls, kw):
+        """Group-rank WinFuncSpecs whose OVER keys resolve to grouped-row
+        OUTPUT columns: a dim -> its subgroup col; an aggregate -> its spec
+        out (registering a hidden spec if absent); a raw column -> a hidden
+        first-of-group spec."""
+        from ekuiper_spark.streaming.stateful import AggSpec, WinFuncSpec
+
+        specs = list(specs)
+
+        def out_col(node: Node, tag: str) -> str:
+            nonlocal df
+            k = canon(node)
+            if k in ctx.dim_map:
+                return ctx.dim_map[k]
+            if k in ctx.agg_map:
+                return ctx.agg_map[k]
+            aggs_in = self._find_aggs(node)
+            if aggs_in:
+                if len(aggs_in) != 1 or canon(aggs_in[0]) != k:
+                    raise NotImplementedError(
+                        "row_number OVER keys over grouped windows "
+                        "support a dim, a bare aggregate call, or a "
+                        "raw column (batch supports expressions)"
+                    )
+                call2 = aggs_in[0]
+                op2 = self._STREAM_AGG_OPS.get(call2.name.lower())
+                if op2 is None:
+                    raise NotImplementedError(
+                        f"{call2.name} is not supported in streaming "
+                        "stateful windows"
+                    )
+                out2 = f"__wfagg{tag}"
+                args2 = [a for a in call2.args if not isinstance(a, Wildcard)]
+                in2 = None
+                if args2:
+                    in2 = f"__wfin{tag}"
+                    df = df.withColumn(in2, self._expr(args2[0], ctx))
+                specs.append(AggSpec(op2, in2, out2))
+                ctx.agg_map[k] = out2
+                return out2
+            out2 = f"__wffr{tag}"
+            df = df.withColumn(out2, self._expr(node, ctx))
+            specs.append(AggSpec("first", out2, out2))
+            ctx.dim_map[k] = out2
+            return out2
+
+        wf_specs = []
+        for i, (ckey, call) in enumerate(rank_calls):
+            parts = [out_col(p, f"{i}p{j}") for j, p in enumerate(call.partition_by)]
+            orders, ascs = [], []
+            for j, s in enumerate(call.order_by):
+                orders.append(out_col(s.expr, f"{i}o{j}"))
+                ascs.append(bool(s.asc))
+            out_nm = f"__wf{i}"
+            wf_specs.append(
+                WinFuncSpec(out_nm, tuple(parts), tuple(orders), tuple(ascs), group_rank=True)
+            )
+            ctx.winfunc_map[ckey] = out_nm
+        kw["winfuncs"] = wf_specs
+        return df, specs
 
     def _sliding_membership_key(self, df: DataFrame, w: WindowSpec, ctx: TranslateCtx):
         """Batch sliding windows as REAL window collections: every
@@ -4244,12 +4071,6 @@ class Translator:
             ctx.window_col = "window"
             return df, ["window"]
         if w.kind == "count":
-            if self.streaming:
-                # reachable only from the non-aggregated window-func branch;
-                # the aggregated path routes via _streaming_stateful_grouped
-                raise NotImplementedError(
-                    "streaming COUNTWINDOW without aggregates is unsupported"
-                )
             n = w.args[0]
             # global event sequence WITHOUT a single sort partition: range-
             # repartition on the order cols (partition ids follow the sort
@@ -4739,12 +4560,6 @@ class Translator:
         from the first begin-row onward are in the window; segments without
         an emit row are dropped.
         """
-        if self.streaming:
-            # reachable only from the non-aggregated window-func branch;
-            # the aggregated path routes via _streaming_stateful_grouped
-            raise NotImplementedError(
-                "streaming STATEWINDOW without aggregates is unsupported"
-            )
         conds = w.state_conds
         order = [F.col(c) for c in ctx.order_cols] or [F.monotonically_increasing_id()]
         part_names = []
@@ -6221,7 +6036,7 @@ class Translator:
                 return F.lit(1)
             if canon(call) in ctx.winfunc_map:
                 # streaming stateful window: rank already computed inside
-                # the stateful operator (see _streaming_stateful_grouped)
+                # the stateful operator (see _stream_window_ranks)
                 return F.col(ctx.winfunc_map[canon(call)])
             if ctx.post_agg and ctx.grprank_col:
                 # streaming chained-agg group rank (formation order),

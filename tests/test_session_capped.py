@@ -435,3 +435,63 @@ def test_streaming_session_ms_long_event_col(spark, cat, tmp_path):
     got = sorted((r["user_id"], r["n"], r["s"]) for r in spark.table(name).collect())
     # {0,30} closed by the 70s gap; {100,130} stays open (no flush)
     assert got == [("a", 2, 1_000_000)]
+
+
+def test_timeout_close_keeps_fused_analytic_state(spark, cat, tmp_path):
+    """A session closed by its watermark timeout keeps the key's state
+    row: the key's next session continues the fused lag() state (batch
+    parity) instead of starting it from empty."""
+    import glob
+    import os
+    import shutil
+    import time
+    import uuid as _uuid
+
+    # one file per micro-batch: b's later events move the watermark past
+    # a's first session, which then closes by timeout before a's next
+    # event arrives
+    rows = [
+        ("a", 0, 10), ("a", 10, 20), ("b", 200, 1), ("b", 210, 2),
+        ("a", 300, 30), ("b", 1000, 3), ("b", 1010, 4),
+    ]
+    sql = (
+        "SELECT user_id, max(lag(value) OVER (PARTITION BY user_id)) AS ml, "
+        "count(*) AS n FROM events GROUP BY user_id, SESSIONWINDOW(ss, 120, 60)"
+    )
+    df = _mk(spark, rows)
+    sdir = tmp_path / "src"
+    sdir.mkdir()
+    now = time.time()
+    for i in range(len(rows)):
+        part = tmp_path / f"r{i}"
+        df.filter(F.col("event_id") == i).coalesce(1).write.parquet(str(part))
+        dst = str(sdir / f"{i:02d}.parquet")
+        shutil.copy(glob.glob(str(part / "*.parquet"))[0], dst)
+        os.utime(dst, (now - 600 + i * 10,) * 2)
+    cat.register_df("events", df)
+    batch = sorted(
+        (tuple(r) for r in compile_sql(
+            spark, sql, cat, order_cols=["ts", "event_id"]
+        ).collect()),
+        key=repr,
+    )
+    sdf = (
+        spark.readStream.schema(df.schema).option("maxFilesPerTrigger", 1)
+        .parquet(str(sdir))
+    )
+    cat.register_df("events", sdf)
+    out = compile_sql(
+        spark, sql, cat, streaming=True, watermark="1 seconds",
+        order_cols=["ts", "event_id"],
+    )
+    name = "t_tmo_" + _uuid.uuid4().hex[:6]
+    q = (
+        out.writeStream.format("memory").queryName(name).outputMode("append")
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
+    got = sorted((tuple(r) for r in spark.table(name).collect()), key=repr)
+    # a's second session holds one event (300 s): its lag reads a's last
+    # value, 20.0; streaming omits only b's trailing open session
+    assert ("a", 20.0, 1) in batch
+    assert got == [r for r in batch if r != ("b", 3.0, 2)], (got, batch)

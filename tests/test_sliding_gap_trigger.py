@@ -155,3 +155,35 @@ def test_sliding_gap_trigger_timestamp_col_raises(spark, catalog):
             catalog,
             order_cols=["ts", "event_id"],
         )
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT count(*) AS c, max(temp) AS m FROM demo "
+        "GROUP BY SLIDINGWINDOW(ss, 1) HAVING count(*) > 1",
+        "SELECT temp, count(*) AS c FROM demo "
+        "GROUP BY SLIDINGWINDOW(ss, 4), temp HAVING count(*) > 1",
+        "SELECT count(*) AS c FROM demo "
+        "GROUP BY SLIDINGWINDOW(ss, 1) OVER (WHEN hum > 60) HAVING count(*) > 1",
+    ],
+)
+def test_sliding_having_stream_batch_parity(spark, gap_src, sql):
+    """HAVING over a streaming sliding window gates each trigger's
+    emission on its frame aggregates, as the batch range-frame and
+    sub-grouped paths do."""
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        b = sorted(
+            tuple(r)
+            for r in compile_sql(
+                spark, sql, _cats(spark, gap_src, False), order_cols=["ts"]
+            ).collect()
+        )
+        s = sorted(
+            tuple(r)
+            for r in run_rule_available_now(
+                spark, _cats(spark, gap_src, True), sql, order_cols=["ts"]
+            ).collect()
+        )
+    assert b == s and len(b) > 0, (sql, b, s)

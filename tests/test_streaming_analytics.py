@@ -209,13 +209,11 @@ def _vec_vs_loop(kind, batches, in_col="x", **kw):
         AnalyticSpec,
         _spec_step,
         _vector_spec,
-        _vectorizable,
     )
 
     spec = AnalyticSpec(
         kind=kind, out="o", out_type=T.StringType(), in_cols=[in_col], **kw
     )
-    assert _vectorizable(spec)
     st_vec: dict = {}
     st_loop: dict = {}
     got_vec, got_loop = [], []
@@ -256,13 +254,11 @@ def _vec_vs_loop_gated(kind, batches, seed_cols, **kw):
         AnalyticSpec,
         _spec_step,
         _vector_spec,
-        _vectorizable,
     )
 
     spec = AnalyticSpec(
         kind=kind, out="o", out_type=T.StringType(), in_cols=["x"], **kw
     )
-    assert _vectorizable(spec)
     st_vec: dict = {}
     st_loop: dict = {}
     got_vec, got_loop = [], []

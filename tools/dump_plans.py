@@ -11,7 +11,7 @@ e.g.  python tools/dump_plans.py r11 before            # all headline queries
       python tools/dump_plans.py compare r11 before after
       python tools/dump_plans.py stream st before \
           tests/test_parity_fuzz_windows.py:_STATEMENTS \
-          perfbench/workloads.py:DEPLOY_RULES
+          perfbench/workloads.py:DEPLOY_RULES tools/dump_plans.py:OPTION_SHAPES
 
 ``stream`` compiles each statement of each SOURCE in streaming mode (no
 query starts) and writes its ANALYZED plan to
@@ -22,13 +22,18 @@ timeout mode, so comparing two checkouts' dumps shows whether existing
 checkpoints still restore.  A SOURCE is ``<file.py>:<NAME>``: a module
 attribute holding statements, (statement, ...) tuples, or a dict of
 name -> statement / (statement, ...).  Dicts name the plans by key,
-lists by ``<NAME>_<index>``.  Statements read the fixture tables at
-SPARK_GRAFT_SF_DIR as streams, ordered by (ts, event_id); ``ev`` (the
-rule_deploy benchmark's stream) reads the events fixture.
+lists by ``<NAME>_<index>``.  A (statement, options) entry whose
+options is a dict compiles with its ``watermark``, ``event_col`` and
+``props`` (passed as ``rule_ctx={"props": ...}``); other keys are
+ignored.  Statements read the fixture tables at SPARK_GRAFT_SF_DIR as
+streams, ordered by (ts, event_id); ``ev`` (the rule_deploy benchmark's
+stream) reads the events fixture.  ``tools/dump_plans.py:OPTION_SHAPES``
+holds the stateful-window shapes that need a watermark or rule options.
 
 ``compare`` diffs every plans/<tag>/<name>_<suffix_a>.txt against its
 <suffix_b> twin after normalizing expression ids (``#123``, ``#45L``),
-JVM object identities (``SparkSession@3ddf9f69``) and the Python
+JVM object identities (``SparkSession@3ddf9f69``), random UUIDs (the
+``EventTimeWatermark`` node's) and the Python
 function a ``*InPandas*`` operator calls, and exits 1 when any plan
 differs or has no twin.
 
@@ -54,6 +59,8 @@ sys.path.insert(0, ROOT)
 _EXPR_ID = re.compile(r"#\d+L?")
 # JVM object identities in plan strings ("SparkSession@3ddf9f69")
 _JVM_ID = re.compile(r"(?<=[A-Za-z])@[0-9a-f]+\b")
+# per-query random ids ("EventTimeWatermark 9fc97769-437c-...")
+_UUID = re.compile(r"\b[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}\b")
 # the Python function a pandas operator calls:
 # "FlatMapGroupsInPandasWithState fn_count(...)" -> "... fn(...)"
 _PY_FN = re.compile(r"(\w+InPandas\w*) \w+\(")
@@ -61,7 +68,7 @@ _PY_FN = re.compile(r"(\w+InPandas\w*) \w+\(")
 
 def _normalized(path: str) -> list[str]:
     with open(path) as f:
-        text = _JVM_ID.sub("@", _EXPR_ID.sub("#", f.read()))
+        text = _UUID.sub("<uuid>", _JVM_ID.sub("@", _EXPR_ID.sub("#", f.read())))
     return _PY_FN.sub(r"\1 fn(", text).splitlines(keepends=True)
 
 
@@ -89,8 +96,93 @@ def compare(tag: str, suffix_a: str, suffix_b: str) -> int:
     return bad
 
 
-def _statements(source: str) -> list[tuple[str, str]]:
-    """(plan name, statement) pairs of a ``<file.py>:<NAME>`` source."""
+# streaming stateful-window shapes that compile differently under a
+# watermark, a long (epoch-ms) event column or rule options; the window
+# parity fuzz compiles none of them
+_WM = {"watermark": "1 minutes"}
+OPTION_SHAPES: dict[str, tuple[str, dict]] = {
+    "wm_sliding": (
+        "SELECT count(*) AS n, sum(value) AS s FROM events "
+        "GROUP BY SLIDINGWINDOW(mi, 30)", _WM),
+    "wm_sliding_delay": (
+        "SELECT event_id, count(*) AS n FROM events "
+        "GROUP BY SLIDINGWINDOW(mi, 30, 10)", _WM),
+    "wm_sliding_dims": (
+        "SELECT event_type, count(*) AS n, max(value) AS m FROM events "
+        "GROUP BY event_type, SLIDINGWINDOW(mi, 30)", _WM),
+    "wm_sliding_dims_meta": (
+        "SELECT event_type, window_start() AS ws, window_end() AS we, "
+        "count(*) AS n FROM events GROUP BY event_type, SLIDINGWINDOW(mi, 30)",
+        _WM),
+    "wm_sliding_content": (
+        "SELECT event_id, value FROM events GROUP BY SLIDINGWINDOW(mi, 30)",
+        _WM),
+    "wm_session": (
+        "SELECT user_id, count(*) AS n, sum(value) AS s FROM events "
+        "GROUP BY user_id, SESSIONWINDOW(mi, 120, 30)", _WM),
+    "wm_session_content": (
+        "SELECT event_id, value FROM events GROUP BY SESSIONWINDOW(mi, 120, 30)",
+        _WM),
+    "wm_session_lag": (
+        "SELECT user_id, max(lag(value) OVER (PARTITION BY user_id)) AS ml, "
+        "count(*) AS n FROM events GROUP BY user_id, SESSIONWINDOW(mi, 120, 30)",
+        _WM),
+    "session_flush": (
+        "SELECT user_id, count(*) AS n, min(ts) AS s FROM events "
+        "GROUP BY user_id, SESSIONWINDOW(mi, 120, 30)",
+        {"props": {"session_flush_ms": 300}}),
+    "ms_sliding_gap_throttle": (
+        "SELECT count(*) AS n FROM events GROUP BY SLIDINGWINDOW(ss, 90) "
+        "OVER (WHEN event_id - last_hit_time() > 1000)",
+        {"event_col": "event_id"}),
+    "ms_wm_sliding_flag_gap_throttle": (
+        "SELECT event_id, count(*) AS n FROM events GROUP BY "
+        "SLIDINGWINDOW(ss, 90) OVER (WHEN event_type = 'error' "
+        "AND event_id - last_hit_time() >= 5000)",
+        {"event_col": "event_id", "watermark": "1 minutes"}),
+    "ms_sliding_dims_gap_throttle": (
+        "SELECT user_id, count(*) AS n FROM events GROUP BY user_id, "
+        "SLIDINGWINDOW(ss, 90) OVER (WHEN event_id - last_hit_time() > 1000)",
+        {"event_col": "event_id"}),
+    "sliding_meta": (
+        "SELECT window_start() AS ws, window_end() AS we, event_time() AS et, "
+        "count(*) AS n FROM events GROUP BY SLIDINGWINDOW(mi, 30)", {}),
+    "session_meta": (
+        "SELECT user_id, window_start() AS ws, window_end() AS we, "
+        "count(*) AS n FROM events GROUP BY user_id, SESSIONWINDOW(mi, 120, 30)",
+        {}),
+    "wm_session_meta": (
+        "SELECT window_start() AS ws, count(*) AS n FROM events "
+        "GROUP BY SESSIONWINDOW(mi, 120, 30)", _WM),
+    "sliding_frame_content": (
+        "SELECT event_id, value FROM events GROUP BY SLIDINGWINDOW(mi, 30)", {}),
+    "sliding_frame_content_where": (
+        "SELECT event_id, value FROM events WHERE value > 50 "
+        "GROUP BY SLIDINGWINDOW(mi, 30)", {}),
+    "ms_sliding_meta": (
+        "SELECT window_start() AS ws, count(*) AS n FROM events "
+        "GROUP BY SLIDINGWINDOW(ss, 90)", {"event_col": "event_id"}),
+    "ms_wm_sliding_dims": (
+        "SELECT event_type, count(*) AS n FROM events "
+        "GROUP BY event_type, SLIDINGWINDOW(ss, 90, 10)",
+        {"event_col": "event_id", "watermark": "1 minutes"}),
+    "ms_session": (
+        "SELECT user_id, window_end() AS we, count(*) AS n FROM events "
+        "GROUP BY user_id, SESSIONWINDOW(ss, 120, 30)",
+        {"event_col": "event_id", "watermark": "1 minutes"}),
+    "count_where": (
+        "SELECT count(*) AS n FROM events WHERE value > 50 "
+        "GROUP BY COUNTWINDOW(20)", _WM),
+    "state_content": (
+        "SELECT event_id, row_number() AS rn FROM events "
+        "GROUP BY STATEWINDOW(event_type = 'signup', event_type = 'purchase', "
+        "user_id)", _WM),
+}
+
+
+def _statements(source: str) -> list[tuple[str, str, dict]]:
+    """(plan name, statement, compile options) of a ``<file.py>:<NAME>``
+    source."""
     path, attr = source.rsplit(":", 1)
     path = os.path.abspath(path)
     sys.path.insert(0, os.path.dirname(path))  # the file's sibling imports
@@ -103,7 +195,13 @@ def _statements(source: str) -> list[tuple[str, str]]:
     items = obj.items() if isinstance(obj, dict) else (
         (f"{attr.strip('_').lower()}_{i:03d}", v) for i, v in enumerate(obj)
     )
-    return [(name, v if isinstance(v, str) else v[0]) for name, v in items]
+    out = []
+    for name, v in items:
+        if isinstance(v, str):
+            v = (v,)
+        opts = v[1] if len(v) > 1 and isinstance(v[1], dict) else {}
+        out.append((name, v[0], opts))
+    return out
 
 
 def stream(tag: str, suffix: str, sources: list[str], sf_dir: str) -> None:
@@ -116,10 +214,14 @@ def stream(tag: str, suffix: str, sources: list[str], sf_dir: str) -> None:
     cat = Catalog.from_dir(sf_dir)
     cat.register_df("ev", cat.load(spark, "events", streaming=True))
     for source in sources:
-        for name, sql in _statements(source):
+        for name, sql, opts in _statements(source):
+            props = opts.get("props")
             try:
                 df = compile_sql(
-                    spark, sql, cat, streaming=True, order_cols=["ts", "event_id"]
+                    spark, sql, cat, streaming=True, order_cols=["ts", "event_id"],
+                    event_col=opts.get("event_col"),
+                    watermark=opts.get("watermark"),
+                    rule_ctx={"props": props} if props is not None else None,
                 )
                 plan = df._jdf.queryExecution().analyzed().toString()
             except Exception as e:
